@@ -28,24 +28,32 @@ object KinesisRegistry {
   * inconsistently — the exact case this ordering exists to handle.
   */
 object SequenceOrder {
-  private def canon(s: String): String = {
-    val i = s.indexWhere(_ != '0')
-    if (i < 0) "0" else if (i == 0) s else s.substring(i)
+  private def firstNonZero(s: String): Int = {
+    var i = 0
+    while (i < s.length && s.charAt(i) == '0') i += 1
+    i
   }
   /** `""` (the TRIM_HORIZON "nothing consumed yet" sentinel) is kept
     * STRICTLY minimal: `"" leq x` for every x, and `x leq ""` only for
     * x == "" — it must never compare equal to a real sequence number
-    * "0" (canon would otherwise map both to "0"). Current call sites
-    * filter the sentinel before comparing; this ordering makes a future
-    * caller that forgets safe too.
+    * "0" (stripping zeros would otherwise map both to ""). Current call
+    * sites filter the sentinel before comparing; this ordering makes a
+    * future caller that forgets safe too. Runs per record, so it
+    * compares in place instead of allocating stripped copies.
     */
   def leq(a: String, b: String): Boolean = {
     if (a.isEmpty) true
     else if (b.isEmpty) false
     else {
-      val ca = canon(a)
-      val cb = canon(b)
-      ca.length < cb.length || (ca.length == cb.length && ca <= cb)
+      val ia = firstNonZero(a)
+      val ib = firstNonZero(b)
+      val n = a.length - ia
+      if (n != b.length - ib) n < b.length - ib
+      else {
+        var k = 0
+        while (k < n && a.charAt(ia + k) == b.charAt(ib + k)) k += 1
+        k == n || a.charAt(ia + k) < b.charAt(ib + k)
+      }
     }
   }
 }

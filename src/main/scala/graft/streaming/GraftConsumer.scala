@@ -39,8 +39,10 @@ object ErrorPolicy {
   * loop (kinesis.go:131-139) is the per-partition task; per-shard
   * in-order delivery (kinesis.go:173-212) is reproduced by
   * repartition-by-shard + sort-within-partition; batch-granularity
-  * checkpointing (kinesis.go:198-201) is the per-batch saver write of
-  * each shard's max sequence.
+  * checkpointing (kinesis.go:198-201) writes each shard's last delivered
+  * sequence to the saver. Each micro-batch is one Spark action: the
+  * handler pass also returns the last sequence per shard, and the
+  * saver is written once that action has finished.
   *
   * Run it on any streaming DataFrame with the [[KinesisRecord.schema]]
   * envelope — the DSv2 source (graft.sources), a file-replay stream,
@@ -135,10 +137,13 @@ class GraftConsumer(val option: GraftOption) {
         .as[KinesisRecord]
       // Per-shard order: hash all of a shard's records into one
       // partition, sort by sequence inside it (kinesis.go:173-212
-      // guarantees the same via one goroutine per shard).
-      ds.repartition(col("shardId"))
+      // guarantees the same via one goroutine per shard). The
+      // (length, value) sort is numeric order for digit strings, so
+      // the last record a partition sees of a shard is its max.
+      val last = ds.repartition(col("shardId"))
         .sortWithinPartitions(col("shardId"), length(col("sequenceNumber")), col("sequenceNumber"))
-        .foreachPartition { (it: Iterator[KinesisRecord]) =>
+        .mapPartitions { (it: Iterator[KinesisRecord]) =>
+          val lastSeq = scala.collection.mutable.HashMap.empty[(String, String), String]
           it.foreach { rec =>
             try h(rec)
             catch {
@@ -149,32 +154,19 @@ class GraftConsumer(val option: GraftOption) {
                 case ErrorPolicy.Fail => throw e
               }
             }
+            lastSeq((rec.streamName, rec.shardId)) = rec.sequenceNumber
           }
+          lastSeq.iterator.map { case ((s, sh), seq) => (s, sh, seq) }
         }
-      // Batch-granularity checkpoint (kinesis.go:198-201): one write
-      // per shard with the batch's last sequence. (length, value)
-      // ordering = numeric order for digit-string sequences.
-      saver.foreach { sv =>
-        batch.groupBy("streamName", "shardId")
-          .agg(max(struct(length(col("sequenceNumber")).as("l"),
-            col("sequenceNumber").as("s"))).as("m"))
-          .select(col("streamName"), col("shardId"), col("m.s").as("seq"))
-          .collect()
-          .foreach(r => sv.set(r.getString(0), r.getString(1), r.getString(2)))
-      }
+        .collect()
+      // Batch-granularity checkpoint (kinesis.go:198-201), written only
+      // once every partition's handler calls have finished.
+      saver.foreach(sv => last.foreach { case (s, sh, seq) => sv.set(s, sh, seq) })
     }
     val writer = stream.writeStream
       .queryName(s"graft-consumer-$streamName")
       .trigger(if (availNow) Trigger.AvailableNow() else Trigger.ProcessingTime(sleep.toMillis))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Two actions follow (handler pass + checkpoint aggregation):
-        // persist so the micro-batch is fetched from the source once,
-        // not re-planned per action (a real service would otherwise
-        // see double the GetRecords traffic).
-        batch.persist()
-        try runBatch(batch)
-        finally batch.unpersist()
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => runBatch(batch) }
     checkpointLoc.foreach(writer.option("checkpointLocation", _))
     val q = writer.start()
     queryOpt = Some(q)

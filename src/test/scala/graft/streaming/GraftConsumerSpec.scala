@@ -2,12 +2,17 @@ package graft.streaming
 
 import java.sql.Timestamp
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSuite
+import graft.sources.kinesis.{GetRecordsResult, KinesisInputPartition, KinesisLikeClient, ShardInfo}
 
 object HandlerSink {
   // Handler closures run in executor threads (local mode: same JVM),
@@ -16,7 +21,44 @@ object HandlerSink {
   // in the original.
   val seen = new ConcurrentLinkedQueue[(String, String)]() // (shardId, seq)
   val dlq = new ConcurrentLinkedQueue[(String, String)]() // (payload, error)
-  def clear(): Unit = { seen.clear(); dlq.clear() }
+  val fetched = new AtomicLong() // records returned by getRecords
+  val persistedDuringHandler = new AtomicLong() // most persisted RDDs of the stream a handler call saw
+  def clear(): Unit = { seen.clear(); dlq.clear(); fetched.set(0); persistedDuringHandler.set(0) }
+
+  /** Persisted RDDs whose lineage reads `stream` through the kinesis-graft
+    * source. Suites share one SparkContext, so RDDs other suites cached
+    * do not count.
+    */
+  def persistedReading(stream: String): Int = {
+    def reads(r: RDD[_]): Boolean = r.partitions.exists {
+      case p: DataSourceRDDPartition => p.inputPartitions.exists {
+        case k: KinesisInputPartition => k.streamName == stream
+        case _ => false
+      }
+      case _ => false
+    } || r.dependencies.exists(d => reads(d.rdd))
+    SparkContext.getOrCreate().getPersistentRDDs.values.count(reads)
+  }
+}
+
+/** Counts the records each GetRecords call returns. The client is
+  * serialized into the reader factory, so the count lives in a static.
+  */
+class CountingKinesisClient(inner: KinesisLikeClient) extends KinesisLikeClient {
+  def listShards(streamName: String): Seq[ShardInfo] = inner.listShards(streamName)
+  def streamStatus(streamName: String): String = inner.streamStatus(streamName)
+  def getShardIterator(streamName: String, shardId: String, afterSequence: Option[String]): String =
+    inner.getShardIterator(streamName, shardId, afterSequence)
+  def getRecords(iterator: String, limit: Int): GetRecordsResult = {
+    val res = inner.getRecords(iterator, limit)
+    HandlerSink.fetched.addAndGet(res.records.size)
+    res
+  }
+  def putRecord(streamName: String, partitionKey: String, data: Array[Byte]): String =
+    inner.putRecord(streamName, partitionKey, data)
+  def sequenceAfter(streamName: String, shardId: String, afterSequence: Option[String],
+      maxRecords: Int): (Option[String], Boolean) =
+    inner.sequenceAfter(streamName, shardId, afterSequence, maxRecords)
 }
 
 class GraftConsumerSpec extends SparkSuite {
@@ -86,6 +128,56 @@ class GraftConsumerSpec extends SparkSuite {
     } finally assert(consumer.shutdown(30.seconds))
   }
 
+  test("skip-and-log: a failing LAST record still advances the checkpoint to its sequence") {
+    import spark.implicits._
+    HandlerSink.clear()
+    val mem = MemoryStream[KinesisRecord](spark)
+    val saver = new InMemorySequenceSaver
+    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
+      .sleepLimit(100.millis)
+      .setSaver(saver)
+      .errorPolicy(ErrorPolicy.SkipAndLog)
+      .handle { r =>
+        if (new String(r.data, "UTF-8") == "payload-3") sys.error("boom")
+        HandlerSink.seen.add((r.shardId, r.sequenceNumber))
+      }
+    val q = consumer.run(mem.toDF())
+    try {
+      mem.addData(rec("shard-0", 2), rec("shard-0", 3), rec("shard-0", 1))
+      q.processAllAvailable()
+      assert(consumer.errorCount == 1)
+      assert(HandlerSink.seen.asScala.toList.map(_._2) == List(f"${1}%09d", f"${2}%09d"))
+      assert(saver.get("test-stream", "shard-0").contains(f"${3}%09d"))
+    } finally assert(consumer.shutdown(30.seconds))
+  }
+
+  test("several shards sharing a shuffle partition: each keeps its own order and max") {
+    import spark.implicits._
+    HandlerSink.clear()
+    val mem = MemoryStream[KinesisRecord](spark)
+    val saver = new InMemorySequenceSaver
+    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
+      .sleepLimit(100.millis)
+      .setSaver(saver)
+      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
+    // 6 shards on the suite's 4 shuffle partitions: at least two share one.
+    val shards = (0 until 6).map(i => s"shard-$i")
+    val recs = new scala.util.Random(6).shuffle(
+      for (i <- shards.indices; n <- 1 to 3 + i) yield rec(shards(i), n * 10 + i))
+    val q = consumer.run(mem.toDF())
+    try {
+      mem.addData(recs: _*)
+      q.processAllAvailable()
+      val byShard = HandlerSink.seen.asScala.toList.groupBy(_._1)
+      assert(HandlerSink.seen.size == recs.size)
+      for (s <- shards) {
+        val want = recs.filter(_.shardId == s).map(_.sequenceNumber).sorted
+        assert(byShard(s).map(_._2) == want, s"order on $s")
+        assert(saver.get("test-stream", s).contains(want.last), s"checkpoint on $s")
+      }
+    } finally assert(consumer.shutdown(30.seconds))
+  }
+
   test("onError dead-letter hook sees skipped records; its own failures don't block") {
     import spark.implicits._
     HandlerSink.clear()
@@ -114,8 +206,10 @@ class GraftConsumerSpec extends SparkSuite {
   test("fail error policy stops the query (Spark-native default)") {
     import spark.implicits._
     val mem = MemoryStream[KinesisRecord](spark)
+    val saver = new InMemorySequenceSaver
     val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
       .sleepLimit(100.millis)
+      .setSaver(saver)
       .errorPolicy(ErrorPolicy.Fail)
       .handle(_ => sys.error("always boom"))
     val q = consumer.run(mem.toDF())
@@ -124,6 +218,7 @@ class GraftConsumerSpec extends SparkSuite {
       q.processAllAvailable()
     }
     assert(e.getMessage.contains("boom") || e.cause != null)
+    assert(saver.get("test-stream", "shard-0").isEmpty) // failed batch is not checkpointed
     consumer.shutdown(30.seconds)
   }
 
@@ -141,6 +236,35 @@ class GraftConsumerSpec extends SparkSuite {
     try {
       q.processAllAvailable()
       assert(HandlerSink.seen.asScala.size == 3)
+    } finally assert(consumer.shutdown(10.seconds))
+  }
+
+  test("the source is read once per batch and nothing is persisted") {
+    import graft.sources.kinesis._
+    HandlerSink.clear()
+    FakeKinesisService.createStream("gc-once", 1)
+    KinesisRegistry.clients.put("gc-once-counting", new CountingKinesisClient(new FakeKinesisClient()))
+    (1 to 20).foreach(i =>
+      FakeKinesisService.push("gc-once", "shardId-000000000000", s"pk$i", s"p$i".getBytes))
+    val saver = new InMemorySequenceSaver
+    val consumer = GraftConsumer(GraftOption().withStreamName("gc-once"))
+      .availableNow()
+      .setSaver(saver)
+      .handle { r =>
+        HandlerSink.persistedDuringHandler.accumulateAndGet(HandlerSink.persistedReading("gc-once"), math.max)
+        HandlerSink.seen.add((r.shardId, r.sequenceNumber))
+      }
+    // A fetch size of 7 splits the 20 records over three batches, and
+    // each batch's fetch returns exactly the records it delivers.
+    val q = consumer.start(spark, Map("clientName" -> "gc-once-counting", "maxRecordsPerFetch" -> "7"))
+    try {
+      assert(q.awaitTermination(60000))
+      assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+      assert(HandlerSink.seen.size == 20)
+      assert(HandlerSink.fetched.get == HandlerSink.seen.size, "records fetched != records delivered")
+      assert(HandlerSink.persistedDuringHandler.get == 0)
+      assert(HandlerSink.persistedReading("gc-once") == 0)
+      assert(saver.get("gc-once", "shardId-000000000000").contains(HandlerSink.seen.asScala.last._2))
     } finally assert(consumer.shutdown(10.seconds))
   }
 
