@@ -35,18 +35,23 @@ object ErrorPolicy {
   * 242-250, 221-236; usage in README.md:33-59).
   *
   * Built on Structured Streaming: the poll ticker (kinesis.go:172-179)
-  * is `Trigger.ProcessingTime(sleepLimit)`; the goroutine-per-shard
-  * loop (kinesis.go:131-139) is the per-partition task; per-shard
-  * in-order delivery (kinesis.go:173-212) is reproduced by
-  * repartition-by-shard + sort-within-partition; batch-granularity
+  * is `Trigger.ProcessingTime(sleepLimit)`; batch-granularity
   * checkpointing (kinesis.go:198-201) writes each shard's last delivered
   * sequence to the saver. Each micro-batch is one Spark action: the
   * handler pass also returns the last sequence per shard, and the
   * saver is written once that action has finished.
   *
-  * Run it on any streaming DataFrame with the [[KinesisRecord.schema]]
-  * envelope — the DSv2 source (graft.sources), a file-replay stream,
-  * or a MemoryStream in tests.
+  * The goroutine-per-shard loop (kinesis.go:131-139, in-order delivery
+  * 173-212) depends on how the consumer was started:
+  *  - [[start]] reads its own kinesis-graft source, and the source's
+  *    per-shard task IS that loop: the handler runs inside the scan's
+  *    tasks, with no shuffle and no sort (see [[start]] for what this
+  *    relies on);
+  *  - [[run]] takes any streaming DataFrame with the
+  *    [[KinesisRecord.schema]] envelope (a file-replay stream, a
+  *    MemoryStream in tests, a source the caller built), which carries
+  *    no per-shard grouping, so it regroups each batch:
+  *    repartition-by-shard + sort-within-partition by sequence.
   */
 class GraftConsumer(val option: GraftOption) {
 
@@ -110,16 +115,35 @@ class GraftConsumer(val option: GraftOption) {
     * `NewIteratorWithOpt(opt).Handle(h).Run()` usage (README.md:33-59).
     * `extra` passes source options (clientName/clientClass, saverName,
     * maxRecordsPerFetch).
+    *
+    * The handler runs directly over the batch's source partitions, with
+    * no regroup, because each one is already one shard's slice in
+    * order:
+    *  - `KinesisMicroBatchStream.planInputPartitions` emits exactly one
+    *    partition per shard;
+    *  - `KinesisPartitionReader` emits (after, end] in GetRecords order
+    *    and stops at `endSequence`;
+    *  - a micro-batch DSv2 scan runs one task per input partition.
+    * The source's parent-before-child gating still orders a split's
+    * records across batches. (Catalyst cannot drop the exchange itself:
+    * a streaming DSv2 scan carries no reported partitioning.)
     */
   def start(spark: org.apache.spark.sql.SparkSession,
       extra: Map[String, String] = Map.empty): StreamingQuery =
-    run(source(spark, extra))
+    consume(source(spark, extra), shardPartitioned = true)
 
   /** ≈ Run (kinesis.go:147-154): validates the handler (the reference
     * errors with HandlerIsNil, kinesis.go:148-150) and starts the
-    * streaming query.
+    * streaming query. Each batch is regrouped by shard and sorted by
+    * sequence before the handler sees it.
     */
-  def run(stream: DataFrame): StreamingQuery = {
+  def run(stream: DataFrame): StreamingQuery = consume(stream, shardPartitioned = false)
+
+  /** `shardPartitioned`: every partition of each batch already holds one
+    * shard's records in sequence order (true only for [[start]]'s own
+    * source), so the regroup is skipped.
+    */
+  private def consume(stream: DataFrame, shardPartitioned: Boolean): StreamingQuery = {
     val h = handlerOpt.getOrElse(
       throw new IllegalStateException("handler is nil")) // kinesis.go:148-150
     val spark = stream.sparkSession
@@ -135,13 +159,19 @@ class GraftConsumer(val option: GraftOption) {
       val ds: Dataset[KinesisRecord] = batch
         .select(KinesisRecord.schema.fieldNames.map(col).toSeq: _*)
         .as[KinesisRecord]
-      // Per-shard order: hash all of a shard's records into one
-      // partition, sort by sequence inside it (kinesis.go:173-212
-      // guarantees the same via one goroutine per shard). The
-      // (length, value) sort is numeric order for digit strings, so
-      // the last record a partition sees of a shard is its max.
-      val last = ds.repartition(col("shardId"))
-        .sortWithinPartitions(col("shardId"), length(col("sequenceNumber")), col("sequenceNumber"))
+      // Per-shard order (kinesis.go:173-212): unless the source already
+      // gives each shard its own ordered partition, hash all of a shard's
+      // records into one partition and sort by sequence inside it.
+      // Sorting the zero-stripped sequence by (length, value) is numeric
+      // order for digit strings padded any way (SequenceOrder), so the
+      // last record a partition sees of a shard is its max.
+      val ordered =
+        if (shardPartitioned) ds
+        else {
+          val seq = ltrim(col("sequenceNumber"), "0")
+          ds.repartition(col("shardId")).sortWithinPartitions(col("shardId"), length(seq), seq)
+        }
+      val last = ordered
         .mapPartitions { (it: Iterator[KinesisRecord]) =>
           val lastSeq = scala.collection.mutable.HashMap.empty[(String, String), String]
           it.foreach { rec =>

@@ -7,10 +7,15 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.SparkContext
+import org.apache.spark.{ListenerBusFlush, SparkContext}
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSuite
 import graft.sources.kinesis.{GetRecordsResult, KinesisInputPartition, KinesisLikeClient, ShardInfo}
 
@@ -29,16 +34,17 @@ object HandlerSink {
     * source. Suites share one SparkContext, so RDDs other suites cached
     * do not count.
     */
-  def persistedReading(stream: String): Int = {
-    def reads(r: RDD[_]): Boolean = r.partitions.exists {
-      case p: DataSourceRDDPartition => p.inputPartitions.exists {
-        case k: KinesisInputPartition => k.streamName == stream
-        case _ => false
-      }
+  def persistedReading(stream: String): Int =
+    SparkContext.getOrCreate().getPersistentRDDs.values.count(reads(_, stream))
+
+  /** True when `r`'s lineage reads `stream` through the kinesis-graft source. */
+  def reads(r: RDD[_], stream: String): Boolean = r.partitions.exists {
+    case p: DataSourceRDDPartition => p.inputPartitions.exists {
+      case k: KinesisInputPartition => k.streamName == stream
       case _ => false
-    } || r.dependencies.exists(d => reads(d.rdd))
-    SparkContext.getOrCreate().getPersistentRDDs.values.count(reads)
-  }
+    }
+    case _ => false
+  } || r.dependencies.exists(d => reads(d.rdd, stream))
 }
 
 /** Counts the records each GetRecords call returns. The client is
@@ -59,6 +65,31 @@ class CountingKinesisClient(inner: KinesisLikeClient) extends KinesisLikeClient 
   def sequenceAfter(streamName: String, shardId: String, afterSequence: Option[String],
       maxRecords: Int): (Option[String], Boolean) =
     inner.sequenceAfter(streamName, shardId, afterSequence, maxRecords)
+}
+
+/** Physical plans of the actions over a foreachBatch batch of `stream`
+  * (an RDD scan whose lineage reads the kinesis-graft source), looked
+  * into through adaptive plans.
+  */
+class ScanPlanListener(stream: String) extends QueryExecutionListener with AdaptiveSparkPlanHelper {
+  val plans = new ConcurrentLinkedQueue[SparkPlan]()
+  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+    val plan = qe.executedPlan
+    if (collect(plan) { case s: RDDScanExec => s.rdd }.exists(HandlerSink.reads(_, stream)))
+      plans.add(plan)
+  }
+  override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+  def regroups(plan: SparkPlan): Boolean =
+    find(plan)(n => n.isInstanceOf[ShuffleExchangeExec] || n.isInstanceOf[SortExec]).isDefined
+}
+
+/** Spark jobs per streaming micro-batch, keyed by "queryId/batchId". */
+class BatchJobCounter extends SparkListener {
+  val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    for (p <- Option(e.properties); q <- Option(p.getProperty("sql.streaming.queryId"));
+         b <- Option(p.getProperty("streaming.sql.batchId")))
+      jobs.merge(s"$q/$b", 1, (a: Int, b: Int) => a + b)
 }
 
 class GraftConsumerSpec extends SparkSuite {
@@ -266,6 +297,110 @@ class GraftConsumerSpec extends SparkSuite {
       assert(HandlerSink.persistedReading("gc-once") == 0)
       assert(saver.get("gc-once", "shardId-000000000000").contains(HandlerSink.seen.asScala.last._2))
     } finally assert(consumer.shutdown(10.seconds))
+  }
+
+  test("run(df) sorts inconsistently zero-padded sequences numerically") {
+    import spark.implicits._
+    HandlerSink.clear()
+    val mem = MemoryStream[KinesisRecord](spark)
+    val saver = new InMemorySequenceSaver
+    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
+      .sleepLimit(100.millis)
+      .setSaver(saver)
+      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
+    val q = consumer.run(mem.toDF())
+    try {
+      mem.addData(Seq("0101", "100", "0099").map(s => rec("shard-0", 0).copy(sequenceNumber = s)): _*)
+      q.processAllAvailable()
+      assert(HandlerSink.seen.asScala.toList.map(_._2) == List("0099", "100", "0101"))
+      assert(saver.get("test-stream", "shard-0").contains("0101"))
+    } finally assert(consumer.shutdown(30.seconds))
+  }
+
+  test("run(df) regroups shards split out of order across input partitions") {
+    import spark.implicits._
+    HandlerSink.clear()
+    // Three input partitions, filled round-robin: each shard's records
+    // are spread over all of them, none in sequence order.
+    val mem = MemoryStream[KinesisRecord](spark, 3)
+    val saver = new InMemorySequenceSaver
+    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
+      .sleepLimit(100.millis)
+      .setSaver(saver)
+      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
+    val recs = new scala.util.Random(3).shuffle(
+      for (s <- Seq("shard-0", "shard-1"); n <- 1 to 12) yield rec(s, n))
+    val q = consumer.run(mem.toDF())
+    try {
+      mem.addData(recs: _*)
+      q.processAllAvailable()
+      assert(HandlerSink.seen.size == recs.size)
+      val byShard = HandlerSink.seen.asScala.toList.groupBy(_._1)
+      for (s <- Seq("shard-0", "shard-1")) {
+        val want = (1 to 12).map(n => f"$n%09d").toList
+        assert(byShard(s).map(_._2) == want, s"order on $s")
+        assert(saver.get("test-stream", s).contains(want.last), s"checkpoint on $s")
+      }
+    } finally assert(consumer.shutdown(30.seconds))
+  }
+
+  test("start() runs the handler in the source's per-shard tasks: no shuffle, no sort, one job per batch") {
+    import graft.sources.kinesis._
+    HandlerSink.clear()
+    val name = "gc-split"
+    FakeKinesisService.createStream(name, 4)
+    KinesisRegistry.clients.put("gc-split-fake", new FakeKinesisClient())
+    val saver = new InMemorySequenceSaver
+    KinesisRegistry.savers.put("gc-split-saver", saver)
+    val pushed = scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
+    def push(shard: String, n: Int): Unit = (1 to n).foreach { i =>
+      val seq = FakeKinesisService.push(name, shard, s"pk$i", s"$shard-$i".getBytes)
+      pushed(shard) = pushed.getOrElse(shard, Vector.empty) :+ seq
+    }
+    val shards = (0 until 4).map(i => f"shardId-$i%012d")
+    shards.foreach(push(_, 8))
+    val parent = shards(1)
+    val (c1, c2) = FakeKinesisService.splitShard(name, parent)
+    (shards.filter(_ != parent) ++ Seq(c1, c2)).foreach(push(_, 6))
+
+    // Registered before start: the query's session clones the listeners.
+    val plans = new ScanPlanListener(name)
+    spark.listenerManager.register(plans)
+    val jobs = new BatchJobCounter
+    spark.sparkContext.addSparkListener(jobs)
+    val consumer = GraftConsumer(GraftOption().withStreamName(name))
+      .availableNow()
+      .setSaver(saver)
+      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
+    // A cap of 20 admits 5 records per shard: the parent drains over two
+    // batches and its children follow in later ones.
+    val q = consumer.start(spark, Map("clientName" -> "gc-split-fake",
+      "saverName" -> "gc-split-saver", "maxRecordsPerFetch" -> "20"))
+    try {
+      assert(q.awaitTermination(60000))
+      ListenerBusFlush(spark.sparkContext)
+      val seen = HandlerSink.seen.asScala.toList
+      assert(seen.size == pushed.values.map(_.size).sum)
+      assert(seen.distinct.size == seen.size, "a record was delivered twice")
+      val byShard = seen.groupBy(_._1)
+      for ((s, seqs) <- pushed) assert(byShard(s).map(_._2) == seqs.toList, s"order on $s")
+      val parentLast = seen.indexOf((parent, pushed(parent).last))
+      for (c <- Seq(c1, c2))
+        assert(seen.indexWhere(_._1 == c) > parentLast, s"$c delivered before its parent drained")
+      for ((s, seqs) <- pushed if s != parent)
+        assert(saver.get(name, s).contains(seqs.last), s"checkpoint on $s")
+      assert(saver.get(name, parent).isEmpty, "drained parent keeps a checkpoint")
+
+      val dataBatches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
+      assert(dataBatches.length > 2)
+      assert(plans.plans.size == dataBatches.length)
+      plans.plans.asScala.foreach(p => assert(!plans.regroups(p), s"handler plan regroups:\n$p"))
+      for (b <- dataBatches) assert(jobs.jobs.get(s"${q.id}/$b") == 1, s"jobs in batch $b")
+    } finally {
+      spark.listenerManager.unregister(plans)
+      spark.sparkContext.removeSparkListener(jobs)
+      assert(consumer.shutdown(10.seconds))
+    }
   }
 
   test("run without handler fails like HandlerIsNil (kinesis.go:148-150)") {
