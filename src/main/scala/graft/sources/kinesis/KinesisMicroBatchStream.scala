@@ -190,6 +190,7 @@ class KinesisMicroBatchStream(
         math.max(1, (r.maxRows() / math.max(1, producing)).toInt)
       case _ => maxRecordsPerFetch
     }
+    admittedPerShard = Some(perShard)
     metricsSnapshot = Map(
       "streamStatus" -> status,
       "holdingOffsets" -> "false",
@@ -287,13 +288,19 @@ class KinesisMicroBatchStream(
     }
   }
 
+  // Per-shard admission of the last planning round: no slice it cut
+  // holds more records, so no reader needs to fetch more. None until
+  // [[latestOffset]] has run, e.g. for a batch replayed from the WAL.
+  @volatile private var admittedPerShard: Option[Int] = None
+
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[KinesisOffset].positions
     val e = end.asInstanceOf[KinesisOffset].positions
+    val fetchSize = admittedPerShard.fold(maxRecordsPerFetch)(math.min(maxRecordsPerFetch, _))
     e.toSeq.sorted.flatMap { case (shardId, endSeq) =>
       val startSeq = s.get(shardId).filter(_.nonEmpty)
       if (endSeq.nonEmpty && !startSeq.contains(endSeq))
-        Some(KinesisInputPartition(streamName, shardId, startSeq, endSeq, maxRecordsPerFetch))
+        Some(KinesisInputPartition(streamName, shardId, startSeq, endSeq, fetchSize))
       else None // nothing new in this shard this batch
     }.toArray
   }

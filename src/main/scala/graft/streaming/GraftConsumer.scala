@@ -52,6 +52,17 @@ object ErrorPolicy {
   *    MemoryStream in tests, a source the caller built), which carries
   *    no per-shard grouping, so it regroups each batch:
   *    repartition-by-shard + sort-within-partition by sequence.
+  *
+  * Checkpoint files: when the session leaves
+  * `spark.sql.streaming.checkpointFileManagerClass` unset, starting a
+  * consumer sets it to [[LocalCheckpointFileManager]], which writes the
+  * offset and commit WAL on local disk without forking a process per
+  * file operation (other schemes keep Spark's default manager). The
+  * setting stays on the session, so later queries on it use the same
+  * manager. To opt out, set that conf yourself before starting the
+  * consumer, e.g. to Spark's default,
+  * `org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager`;
+  * a value already set is never changed.
   */
 class GraftConsumer(val option: GraftOption) {
 
@@ -198,6 +209,10 @@ class GraftConsumer(val option: GraftOption) {
       .trigger(if (availNow) Trigger.AvailableNow() else Trigger.ProcessingTime(sleep.toMillis))
       .foreachBatch { (batch: DataFrame, _: Long) => runBatch(batch) }
     checkpointLoc.foreach(writer.option("checkpointLocation", _))
+    // Session-wide, not scoped to start(): Spark builds the query's
+    // offset and commit logs lazily, after start() returns.
+    if (spark.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
+      spark.conf.set(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
     val q = writer.start()
     queryOpt = Some(q)
     q

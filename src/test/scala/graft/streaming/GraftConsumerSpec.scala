@@ -7,6 +7,8 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.{ListenerBusFlush, SparkContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -14,6 +16,7 @@ import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SortExec, Sp
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSuite
@@ -92,7 +95,76 @@ class BatchJobCounter extends SparkListener {
       jobs.merge(s"$q/$b", 1, (a: Int, b: Int) => a + b)
 }
 
+/** Spark's default checkpoint file manager, counting atomic creates. */
+class CountingCheckpointFileManager(path: Path, conf: Configuration)
+  extends FileContextBasedCheckpointFileManager(path, conf) {
+  override def createAtomic(p: Path, overwriteIfPossible: Boolean) = {
+    CountingCheckpointFileManager.creates.incrementAndGet()
+    super.createAtomic(p, overwriteIfPossible)
+  }
+}
+object CountingCheckpointFileManager {
+  val creates = new AtomicLong()
+}
+
 class GraftConsumerSpec extends SparkSuite {
+
+  private val SparkDefaultManager = classOf[FileContextBasedCheckpointFileManager].getName
+
+  /** Runs `f` with the session's checkpoint file manager conf set to
+    * `cls` (None: unset), then restores what was there.
+    */
+  private def withCheckpointManager[T](cls: Option[String])(f: => T): T = {
+    val key = LocalCheckpointFileManager.ConfKey
+    val before = spark.conf.getOption(key)
+    cls.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try f finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Drains stream `name` with AvailableNow from checkpoint `ckpt`;
+    * returns the checkpoint file manager conf the query ran under.
+    */
+  private def drainFrom(name: String, ckpt: String): Option[String] = {
+    val consumer = GraftConsumer(GraftOption().withStreamName(name))
+      .availableNow()
+      .checkpointLocation(ckpt)
+      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
+    val q = consumer.start(spark, Map("clientName" -> s"$name-fake", "maxRecordsPerFetch" -> "4"))
+    try assert(q.awaitTermination(60000))
+    finally assert(consumer.shutdown(10.seconds))
+    q.exception.foreach(e => throw e)
+    spark.conf.getOption(LocalCheckpointFileManager.ConfKey)
+  }
+
+  /** A checkpoint written under manager `first` resumes under `second`:
+    * records pushed while the query is down are delivered, and none of
+    * the committed ones again.
+    */
+  private def resumeAcross(name: String, first: Option[String], second: Option[String]): Unit = {
+    import graft.sources.kinesis._
+    HandlerSink.clear()
+    FakeKinesisService.createStream(name, 2)
+    KinesisRegistry.clients.put(s"$name-fake", new FakeKinesisClient())
+    val shards = Seq("shardId-000000000000", "shardId-000000000001")
+    def push(from: Int, to: Int): Seq[(String, String)] = for (i <- from to to; sh <- shards)
+      yield sh -> FakeKinesisService.push(name, sh, s"pk$i", s"$sh-$i".getBytes)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-mgr").toFile
+    val graftManager = classOf[LocalCheckpointFileManager].getName
+    val phase1 = push(1, 6)
+    val used1 = withCheckpointManager(first)(drainFrom(name, ckpt.toString))
+    assert(used1 == first.orElse(Some(graftManager)))
+    assert(HandlerSink.seen.asScala.toSet == phase1.toSet)
+    val phase2 = push(7, 9)
+    val used2 = withCheckpointManager(second)(drainFrom(name, ckpt.toString))
+    assert(used2 == second.orElse(Some(graftManager)))
+    val seen = HandlerSink.seen.asScala.toList
+    assert(seen.size == phase1.size + phase2.size, s"a committed batch was delivered again: $seen")
+    assert(seen.toSet == (phase1 ++ phase2).toSet)
+    // every WAL file carries its CRC sidecar, whichever manager wrote it
+    for (log <- Seq("offsets", "commits"); f <- new java.io.File(ckpt, log).list() if !f.startsWith("."))
+      assert(new java.io.File(ckpt, s"$log/.$f.crc").isFile, s"$log/$f has no .crc")
+    assert(new java.io.File(ckpt, ".metadata.crc").isFile)
+  }
 
   private def rec(shard: String, n: Int): KinesisRecord =
     KinesisRecord(
@@ -297,6 +369,47 @@ class GraftConsumerSpec extends SparkSuite {
       assert(HandlerSink.persistedReading("gc-once") == 0)
       assert(saver.get("gc-once", "shardId-000000000000").contains(HandlerSink.seen.asScala.last._2))
     } finally assert(consumer.shutdown(10.seconds))
+  }
+
+  test("each fetch asks only for the records its batch admits per shard") {
+    import graft.sources.kinesis._
+    HandlerSink.clear()
+    FakeKinesisService.createStream("gc-fetch", 3)
+    KinesisRegistry.clients.put("gc-fetch-counting", new CountingKinesisClient(new FakeKinesisClient()))
+    for (sh <- 0 until 3; i <- 1 to 5 + sh)
+      FakeKinesisService.push("gc-fetch", f"shardId-$sh%012d", s"pk$i", s"p$sh-$i".getBytes)
+    val consumer = GraftConsumer(GraftOption().withStreamName("gc-fetch"))
+      .availableNow()
+      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
+    // A cap of 7 over 3 producing shards admits 2 records per shard.
+    val q = consumer.start(spark, Map("clientName" -> "gc-fetch-counting", "maxRecordsPerFetch" -> "7"))
+    try {
+      assert(q.awaitTermination(60000))
+      assert(HandlerSink.seen.size == 18)
+      assert(q.recentProgress.filter(_.numInputRows > 0).forall(_.numInputRows <= 7))
+      assert(HandlerSink.fetched.get == HandlerSink.seen.size, "records fetched != records delivered")
+    } finally assert(consumer.shutdown(10.seconds))
+  }
+
+  test("a checkpoint written by Spark's default manager resumes under graft's, and back") {
+    resumeAcross("gc-mgr-to-graft", first = Some(SparkDefaultManager), second = None)
+    resumeAcross("gc-mgr-to-spark", first = None, second = Some(SparkDefaultManager))
+  }
+
+  test("a checkpoint file manager the user set is left unchanged") {
+    import graft.sources.kinesis._
+    HandlerSink.clear()
+    FakeKinesisService.createStream("gc-user-mgr", 1)
+    KinesisRegistry.clients.put("gc-user-mgr-fake", new FakeKinesisClient())
+    (1 to 3).foreach(i =>
+      FakeKinesisService.push("gc-user-mgr", "shardId-000000000000", s"pk$i", s"p$i".getBytes))
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-user").toString
+    val user = classOf[CountingCheckpointFileManager].getName
+    val before = CountingCheckpointFileManager.creates.get
+    val used = withCheckpointManager(Some(user))(drainFrom("gc-user-mgr", ckpt))
+    assert(used.contains(user))
+    assert(HandlerSink.seen.size == 3)
+    assert(CountingCheckpointFileManager.creates.get > before, "the user's manager wrote no checkpoint file")
   }
 
   test("run(df) sorts inconsistently zero-padded sequences numerically") {
