@@ -147,7 +147,9 @@ object FakeKinesisService {
   }
 
   /** Returns the assigned sequence number (monotonic per stream,
-    * zero-padded so lexicographic order == numeric order).
+    * zero-padded so lexicographic order == numeric order). Records are
+    * only ever appended, so each shard's records stay in increasing
+    * sequence order; [[FakeKinesisClient]]'s lookups binary-search on it.
     */
   def push(name: String, shardId: String, partitionKey: String,
       data: Array[Byte], arrivalMs: Long = 1700000000000L): String = this.synchronized {
@@ -222,13 +224,7 @@ class FakeKinesisClient(expireEvery: Int = 0) extends KinesisLikeClient {
   override def getShardIterator(streamName: String, shardId: String,
       afterSequence: Option[String]): String = FakeKinesisService.synchronized {
     val sh = stream(streamName).shards(shardId)
-    val idx = afterSequence match {
-      case None => 0
-      case Some(seq) => sh.records.indexWhere(r => !SequenceOrder.leq(r.sequenceNumber, seq)) match {
-        case -1 => sh.records.length
-        case i => i
-      }
-    }
+    val idx = afterSequence.fold(0)(FakeKinesisClient.firstAfter(sh.records, _))
     s"$streamName|$shardId|$idx|${FakeKinesisClient.epoch.get()}"
   }
 
@@ -264,13 +260,7 @@ class FakeKinesisClient(expireEvery: Int = 0) extends KinesisLikeClient {
       afterSequence: Option[String], maxRecords: Int): (Option[String], Boolean) =
     FakeKinesisService.synchronized {
       val sh = stream(streamName).shards(shardId)
-      val from = afterSequence match {
-        case None => 0
-        case Some(seq) => sh.records.indexWhere(r => !SequenceOrder.leq(r.sequenceNumber, seq)) match {
-          case -1 => sh.records.length
-          case i => i
-        }
-      }
+      val from = afterSequence.fold(0)(FakeKinesisClient.firstAfter(sh.records, _))
       val until = math.min(from + maxRecords, sh.records.length)
       val last = if (until > from) Some(sh.records(until - 1).sequenceNumber)
                  else afterSequence
@@ -281,4 +271,20 @@ class FakeKinesisClient(expireEvery: Int = 0) extends KinesisLikeClient {
 object FakeKinesisClient {
   private[kinesis] val calls = new java.util.concurrent.atomic.AtomicLong(0)
   private[kinesis] val epoch = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Index of the first of a shard's `records` whose sequence is after
+    * `seq` (`records.length` if none). A binary search, valid because a
+    * shard's records are in increasing sequence order:
+    * [[FakeKinesisService.push]] only appends, with sequences from one
+    * counter per stream.
+    */
+  private def firstAfter(records: mutable.ArrayBuffer[ClientRecord], seq: String): Int = {
+    var lo = 0
+    var hi = records.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (SequenceOrder.leq(records(mid).sequenceNumber, seq)) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
 }

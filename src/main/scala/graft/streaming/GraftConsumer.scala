@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, HomeSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.util.LongAccumulator
@@ -63,6 +63,20 @@ object ErrorPolicy {
   * consumer, e.g. to Spark's default,
   * `org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager`;
   * a value already set is never changed.
+  *
+  * Session: the handler's Dataset is planned and run in the session the
+  * consumer was started from (the stream DataFrame's), not in the clone
+  * Spark makes for each streaming query. Executors key their class
+  * loader, and with it `CodeGenerator`'s cache of compiled classes, on
+  * the session that runs a job. In the clone, which is new for every
+  * query (one per `availableNow()` drain), each drain would compile the
+  * same generated code again and run it cold in the JIT. Only the
+  * handler's plan moves: the batch's scan, offsets and WAL stay the
+  * query's. That plan follows the consumer's session's SQL conf, not the
+  * clone's snapshot of it; e.g. under [[run]] adaptive execution may
+  * coalesce the shard repartition (each shard still stays in one
+  * partition, in order), and `QueryExecutionListener`s registered on the
+  * consumer's session see the handler's action.
   */
 class GraftConsumer(val option: GraftOption) {
 
@@ -167,7 +181,7 @@ class GraftConsumer(val option: GraftOption) {
 
     import spark.implicits._
     val runBatch: DataFrame => Unit = { batch =>
-      val ds: Dataset[KinesisRecord] = batch
+      val ds: Dataset[KinesisRecord] = HomeSession.ofRows(spark, batch)
         .select(KinesisRecord.schema.fieldNames.map(col).toSeq: _*)
         .as[KinesisRecord]
       // Per-shard order (kinesis.go:173-212): unless the source already

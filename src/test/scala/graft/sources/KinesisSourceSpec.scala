@@ -474,6 +474,43 @@ class KinesisSourceSpec extends SparkSuite {
     assert(SequenceOrder.leq("", ""))
   }
 
+  test("the fake client's sequence lookups match a linear scan of the shard") {
+    val name = "fake-lookup"
+    FakeKinesisService.createStream(name, 3)
+    val shards = (0 until 3).map(i => f"shardId-$i%012d")
+    // One counter per stream: every third push goes to shard 1, so each
+    // shard's sequences have gaps; shard 2 stays empty.
+    val pushed = (1 to 12).map { i =>
+      val sh = if (i % 3 == 0) shards(1) else shards(0)
+      sh -> FakeKinesisService.push(name, sh, s"pk$i", Array.emptyByteArray)
+    }.groupMap(_._1)(_._2).withDefaultValue(IndexedSeq.empty)
+    FakeKinesisService.splitShard(name, shards(0))
+    val client = new FakeKinesisClient()
+    // Before the first record ("0"), every exact sequence, the absent
+    // ones between a shard's records, one past the last (13), and each
+    // as an unpadded and an over-padded form.
+    val probes = "0" +: (1 to 13).flatMap(n => Seq(f"$n%021d", n.toString, f"$n%030d"))
+    for (sh <- shards) {
+      val seqs = pushed(sh)
+      def linear(after: String): Int = seqs.indexWhere(s => !SequenceOrder.leq(s, after)) match {
+        case -1 => seqs.length
+        case i => i
+      }
+      def index(after: Option[String]): Int = client.getShardIterator(name, sh, after).split('|')(2).toInt
+      assert(index(None) == 0)
+      assert(client.sequenceAfter(name, sh, None, 2) == (seqs.take(2).lastOption, sh == shards(0)))
+      for (p <- probes) {
+        val from = linear(p)
+        assert(index(Some(p)) == from, s"getShardIterator($sh, $p)")
+        for (max <- Seq(1, 2, 100)) {
+          val until = math.min(from + max, seqs.length)
+          val want = (if (until > from) Some(seqs(until - 1)) else Some(p), sh == shards(0))
+          assert(client.sequenceAfter(name, sh, Some(p), max) == want, s"sequenceAfter($sh, $p, $max)")
+        }
+      }
+    }
+  }
+
   test("region/sts options reach the client factory (option.go:36-43 → kinesis.go:45-52)") {
     class ConfigurableFake extends FakeKinesisClient with ConfigurableKinesisClient {
       @volatile var received: Map[String, String] = Map.empty

@@ -10,6 +10,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.{ListenerBusFlush, SparkContext}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SortExec, SparkPlan}
@@ -514,6 +515,28 @@ class GraftConsumerSpec extends SparkSuite {
       spark.sparkContext.removeSparkListener(jobs)
       assert(consumer.shutdown(10.seconds))
     }
+  }
+
+  test("a second drain from the same session compiles no generated class") {
+    import graft.sources.kinesis._
+    HandlerSink.clear()
+    val name = "gc-codegen"
+    FakeKinesisService.createStream(name, 2)
+    KinesisRegistry.clients.put(s"$name-fake", new FakeKinesisClient())
+    for (sh <- Seq("shardId-000000000000", "shardId-000000000001"); i <- 1 to 5)
+      FakeKinesisService.push(name, sh, s"pk$i", s"$sh-$i".getBytes)
+    // Each drain is a new streaming query, which Spark runs in a new
+    // clone of the session; a fresh checkpoint makes each read it all.
+    def drain(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      drainFrom(name, java.nio.file.Files.createTempDirectory("graft-ckpt-codegen").toString)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    drain()
+    assert(HandlerSink.seen.size == 10)
+    val second = drain()
+    assert(HandlerSink.seen.size == 20)
+    assert(second == 0, s"second drain compiled $second classes")
   }
 
   test("run without handler fails like HandlerIsNil (kinesis.go:148-150)") {
