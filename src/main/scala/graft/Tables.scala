@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet table loader for the driver-generated testdata
@@ -47,4 +48,23 @@ object Tables {
   }
   def documents(s: SparkSession, dir: String): DataFrame = t(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = t(s, dir, "embeddings")
+
+  /** Fingerprint of the dataset under `dir`: the path relative to
+    * `dir`, length and modification time of every file, in name order.
+    * Rewriting any table changes it. The walk is a recursive
+    * `listStatus` reading only those three fields: `listFiles` returns
+    * located statuses whose permissions the local file system loads by
+    * forking `ls` once per file.
+    */
+  def fingerprint(s: SparkSession, dir: String): Long = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def walk(p: Path, rel: String, h0: Long): Long =
+      fs.listStatus(p).sortBy(_.getPath.getName).foldLeft(h0) { (h, st) =>
+        val name = rel + st.getPath.getName
+        if (st.isDirectory) walk(st.getPath, name + "/", h)
+        else ((h * 31 + name.hashCode) * 31 + st.getLen) * 31 + st.getModificationTime
+      }
+    walk(root, "", 1125899906842597L)
+  }
 }

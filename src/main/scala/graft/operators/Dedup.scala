@@ -40,8 +40,7 @@ object Dedup {
     * alternatives. The 64-bit hash is the join/blocking key; collision
     * odds are ~2^-64 so results match the string-shingle DuckDB oracle.
     */
-  // Materialized shingle tables, one per (session, dataset). The
-  // (doc_id, shingle-hash) relation is the shared ingest-time artifact
+  // The (doc_id, shingle-hash) relation is the shared ingest artifact
   // of the whole dedup family — d03 consumes it from five operator
   // subtrees (df table, both blocking-join sides, per-doc counts,
   // common arrays), d04 builds signatures from it, d06 runs both —
@@ -50,54 +49,31 @@ object Dedup {
   // consumer: 10 parquet scans, 0 reused exchanges, measured). At
   // 100 TB this is a written table produced at ingest, like s04's IVF
   // cell assignment.
-  // computeIfAbsent (not TrieMap.getOrElseUpdate) across every
-  // artifact cache in the library: the latter can run the builder in
-  // two racing threads and leak the loser's persisted tables (r10
-  // ADVICE on Relational.graphCache; applied uniformly).
-  private val shingleCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
   private[operators] def shingleHashes(s: SparkSession, dir: String,
       family: String = "xxhash64"): DataFrame =
-    shingleCache.computeIfAbsent((s, dir, family), _ => {
-      val ex = ngramHashesOf(documents(s, dir), 3, Nil, family).persist()
-      try { ex.count(); ex } // materialize: ingest-time work
-      catch { case e: Throwable => ex.unpersist(); throw e }
-    })
+    ArtifactStore.get(s, dir, s"shingles/$family")(
+      _.keep(ngramHashesOf(documents(s, dir), 3, Nil, family)))
 
-  // MinHash signature tables, one per (session, dataset) — the second
-  // ingest-time artifact of the dedup family (SCALE.md: at 100 TB
-  // signatures are materialized once at ingest). Building them is a
-  // single exploded min-aggregate (64 codegen'd min(xxhash64(h, i))
-  // aggs — no per-doc array allocation) whose generated class is large
-  // enough that janino recompilation dominated d04's per-query cost
-  // when rebuilt per run.
-  private val sigCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
+  // MinHash signature tables — the second ingest artifact of the dedup
+  // family (SCALE.md: at 100 TB signatures are materialized once at
+  // ingest). Building them is a single exploded min-aggregate (64
+  // codegen'd min(xxhash64(h, i)) aggs — no per-doc array allocation)
+  // whose generated class is large enough that janino recompilation
+  // dominated d04's per-query cost when rebuilt per run.
   private def minhashSignatures(s: SparkSession, dir: String,
       family: String = "xxhash64"): DataFrame =
-    sigCache.computeIfAbsent((s, dir, family), _ => {
-      val sig = minhashSignaturesOf(shingleHashes(s, dir, family), family).persist()
-      try { sig.count(); sig } // materialize: ingest-time work
-      catch { case e: Throwable => sig.unpersist(); throw e }
-    })
+    ArtifactStore.get(s, dir, s"minhash/$family")(
+      _.keep(minhashSignaturesOf(shingleHashes(s, dir, family), family)))
 
   // SimHash signature tables (r10) — same ingest-artifact story as the
   // MinHash signatures above, same janino-fixed-cost reasoning; doubly
   // worthwhile because the band SELF-join references the signature
   // subplan twice, so the unpersisted derivation ran twice per query
   // (measured: d05 1.6 -> 0.6 s at sf0.1).
-  private val simhashCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
   private def simhashSignatures(s: SparkSession, dir: String,
       family: String = "xxhash64"): DataFrame =
-    simhashCache.computeIfAbsent((s, dir, family), _ => {
-      val sig = simhashSigs(documents(s, dir), family).persist()
-      try { sig.count(); sig } // materialize: ingest-time work
-      catch { case e: Throwable => sig.unpersist(); throw e }
-    })
+    ArtifactStore.get(s, dir, s"simhash/$family")(
+      _.keep(simhashSigs(documents(s, dir), family)))
 
   /** 64-permutation MinHash signatures over a (doc_id, h) shingle-hash
     * relation: one exploded min-aggregate, output (doc_id, sig[64]).
@@ -135,23 +111,6 @@ object Dedup {
     jaccardPairs(s, dir)                     // d06/d08/d10 pair relation
     jaccardCcLabels(s, dir)                  // d06/d08/d10 component labels
     ()
-  }
-
-  /** Release the dedup family's cached ingest artifacts for a dataset:
-    * unpersists the shingle and signature tables and drops them from
-    * the registry, freeing executor storage. Also the invalidation
-    * hook — call after re-ingesting (rewriting) `dir`, or the caches
-    * would keep serving the old dataset's shingles/signatures. The next
-    * query rebuilds them from the current files.
-    */
-  def releaseArtifacts(s: SparkSession, dir: String): Unit = {
-    Seq("xxhash64", "md5").foreach { fam =>
-      Option(sigCache.remove((s, dir, fam))).foreach(_.unpersist())
-      Option(simhashCache.remove((s, dir, fam))).foreach(_.unpersist())
-      Option(shingleCache.remove((s, dir, fam))).foreach(_.unpersist())
-    }
-    Option(pairCache.remove((s, dir))).foreach(_.unpersist())
-    releaseCcLabels(s, dir, "jaccard")
   }
 
   private[operators] def shingleHashesOf(docs: DataFrame): DataFrame =
@@ -272,17 +231,11 @@ object Dedup {
   // artifact: d03 defines the relation, and d06 (clusters), d08
   // (min-id survivors), and d10 (best-score survivors) all CONSUME it
   // — a pipeline computes pairs once and derives every downstream
-  // policy from the same list. Tiny (only true near-dups), persisted
-  // per (session, dataset); Bench builds it in untimed warm-up.
-  private val pairCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
+  // policy from the same list. Tiny (only true near-dups); Bench
+  // builds it in untimed warm-up.
   private def jaccardPairs(s: SparkSession, dir: String): DataFrame =
-    pairCache.computeIfAbsent((s, dir), _ => {
-      val p = jaccardPairsOf(shingleHashes(s, dir), ShingleDfCap).persist()
-      try { p.count(); p } // materialize: ingest-time work
-      catch { case e: Throwable => p.unpersist(); throw e }
-    })
+    ArtifactStore.get(s, dir, "pairs/jaccard")(
+      _.keep(jaccardPairsOf(shingleHashes(s, dir), ShingleDfCap)))
 
   /** Public accessor for the verified near-dup pair artifact
     * (`doc_a`, `doc_b`, `jaccard`) — cross-family consumers (the p13
@@ -293,25 +246,21 @@ object Dedup {
     jaccardPairs(s, dir)
 
   // The COMPONENT LABELS over a cached pair artifact — the dedup
-  // family's fourth ingest artifact (r17, VERDICT r16 item 6). The
-  // pair list was already built once at ingest, but every consumer
-  // (d06 clusters, d08/d10 survivor selection, s07/s07b/s07c's
-  // certification wrappers) re-ran [[connectedComponents]] PER CALL:
-  // an eager child-session loop whose checkpoint + count + collect
-  // jobs repeat identically on the identical cached input. Labels are
-  // pure functions of the pair list, so they are derived once per
-  // (session, dataset, pair family) with the same build/release
-  // discipline as the pair table itself; the keyed family string
-  // lets the embedding-side pair artifacts (Similarity's sem / det /
-  // sizedDet lists) share the cache without colliding with the text
-  // family. At 100 TB this is the cluster-assignment table a dedup
-  // pipeline writes at ingest right next to its pair list.
-  private val ccLabelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
+  // family's fourth ingest artifact (r17, VERDICT r16 item 6). Every
+  // consumer (d06 clusters, d08/d10 survivor selection,
+  // s07/s07b/s07c's certification wrappers) re-ran
+  // [[connectedComponents]] PER CALL: an eager child-session loop
+  // whose checkpoint + count + collect jobs repeat identically on the
+  // identical cached input. Labels are pure functions of the pair
+  // list, so they are derived once per (session, dataset, pair
+  // family); the family string lets the embedding-side pair artifacts
+  // (Similarity's sem / det / sizedDet lists) share this builder
+  // without colliding with the text family. At 100 TB this is the
+  // cluster-assignment table a dedup pipeline writes at ingest right
+  // next to its pair list.
   private[operators] def ccLabelsFor(s: SparkSession, dir: String,
       family: String, pairs: => DataFrame): DataFrame =
-    ccLabelCache.computeIfAbsent((s, dir, family), _ => {
+    ArtifactStore.get(s, dir, s"labels/$family") { b =>
       val l = connectedComponents(pairs)
       l.queryExecution.logical match {
         // the small-graph branch solved on the driver and returned a
@@ -319,16 +268,9 @@ object Dedup {
         // would DEMOTE every consumer's free LocalTableScan (no
         // cluster job) to an InMemoryTableScan (one job per read)
         case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
-        case _ =>
-          val p = l.persist()
-          try { p.count(); p } // materialize: ingest-time work
-          catch { case e: Throwable => p.unpersist(); throw e }
+        case _ => b.keep(l)
       }
-    })
-
-  private[operators] def releaseCcLabels(s: SparkSession, dir: String,
-      family: String): Unit =
-    Option(ccLabelCache.remove((s, dir, family))).foreach(_.unpersist())
+    }
 
   /** Cached component labels of the text near-dup pair artifact —
     * what d06 registers and d08/d10's survivor selection derives
@@ -809,8 +751,8 @@ object Dedup {
   /** Upper bound for hint-broadcasting the |docs|-row SIGNATURE table
     * into the candidate→signature fetch joins (~560 bytes/row at 64
     * perms): 256 MB → ~480k docs. Same measured rationale as the
-    * similarity family's vecHint (SizedBitsProbe2, r15): the persisted
-    * signature artifact is stats-blind, so both fetch joins plan
+    * similarity family's vecHint (SizedBitsProbe2 at 5974cb1, r15): the
+    * persisted signature artifact is stats-blind, so both fetch joins plan
     * sort-merge and the second one sorts the candidate stream with
     * sig_a (64 longs) already attached — millions of wide rows through
     * an external sort at sf5. Under the bound both joins broadcast-

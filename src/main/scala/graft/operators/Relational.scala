@@ -27,20 +27,12 @@ object Relational {
   // pipeline materializes once (like the dedup family's shingle table or
   // s04's IVF index) and every skew-aware join reuses — the
   // saltedInnerJoin scaladoc documents the precomputed-stats overload as
-  // the production form. Cached per (session, dataset); Bench builds it
-  // in untimed warm-up alongside the other ingest artifacts.
-  // j.u.c.ConcurrentHashMap.computeIfAbsent, not TrieMap
-  // .getOrElseUpdate: the latter can evaluate the builder thunk in two
-  // racing threads (one insert wins, the loser leaks its persisted
-  // DataFrames + eager counts); computeIfAbsent holds the bin lock, so
-  // each artifact is built and persisted AT MOST ONCE per key.
-  // value = (stats table, nonEmpty): the build's materializing count()
-  // already knows whether any key cleared the threshold, so the salted
-  // joins' per-call emptiness probe (a head(1) Spark job per query —
-  // r16 VERDICT item 7) rides the cached bit instead (r17).
-  private val hotKeyCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, Boolean)]()
-
+  // the production form. Bench builds it in untimed warm-up alongside
+  // the other ingest artifacts. Value = (stats table, nonEmpty): the
+  // build's materializing count() already knows whether any key
+  // cleared the threshold, so the salted joins' per-call emptiness
+  // probe (a head(1) Spark job per query — r16 VERDICT item 7) rides
+  // the cached bit instead (r17).
   private val HotKeyThreshold = 7L
 
   // q53's PREBUILT Bloom filter — the "built once at ingest, reused by
@@ -48,57 +40,23 @@ object Relational {
   // inside the query lambda ran the build aggregate + driver collect
   // as a per-invocation Spark job, which undercut exactly the point
   // of the prebuilt overload; the filter is a few KB of immutable
-  // longs, so the cache holds the value itself (nothing persisted,
-  // nothing to release — releaseStats drops the entry for re-ingest).
-  //
-  // UNLIKE hotKeyCache/graphCache (where staleness after a re-ingest
-  // only mis-sizes a plan), a stale Bloom filter FALSE-NEGATIVES new
-  // custkeys and silently drops rows before the exact semi-join —
-  // wrong results, not just slower. So this cache is validated against
-  // an ingest FINGERPRINT of the source files (names + lengths +
-  // mtimes, the snapshot-id stand-in a real table format provides):
-  // a re-ingested dir rebuilds the filter automatically, with or
-  // without a releaseStats call. The fingerprint is one driver-side
-  // directory listing per invocation — metadata-only, negligible
-  // against the query it guards.
-  private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Long, Joins.BloomFilter)]()
-
-  private def customerIngestFingerprint(s: SparkSession, dir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/customer.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    var h = 1125899906842597L
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val f = it.next()
-      h = h * 31 + f.getPath.getName.hashCode
-      h = h * 31 + f.getLen
-      h = h * 31 + f.getModificationTime
-    }
-    h
-  }
-
+  // longs, so the store holds the value itself (nothing persisted).
+  // A stale filter would FALSE-NEGATIVE new custkeys and silently drop
+  // rows before the exact semi-join; the store's fingerprint check
+  // rebuilds it when the dataset is rewritten.
   private[operators] def buildingSegmentBloom(
-      s: SparkSession, dir: String): Joins.BloomFilter = {
-    val fp = customerIngestFingerprint(s, dir)
-    bloomCache.compute((s, dir), (_, cur) =>
-      if (cur != null && cur._1 == fp) cur
-      else (fp, Joins.buildBloom(
-        customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-          .select(col("c_custkey")),
-        col("c_custkey"), bits = 1 << 12, hashes = 5)))._2
-  }
+      s: SparkSession, dir: String): Joins.BloomFilter =
+    ArtifactStore.get(s, dir, "bloom/building")(_ => Joins.buildBloom(
+      customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
+        .select(col("c_custkey")),
+      col("c_custkey"), bits = 1 << 12, hashes = 5))
 
   private def orderkeyHotStats(s: SparkSession, dir: String): (DataFrame, Boolean) =
-    hotKeyCache.computeIfAbsent((s, dir), _ => {
-      val hot = Joins.hotKeys(
-        lineitem(s, dir).select("l_orderkey"), Seq("l_orderkey"), HotKeyThreshold)
-        .persist()
-      // materialize: ingest-time work; the count doubles as the
-      // emptiness fact the salted joins would otherwise re-probe
-      try { (hot, hot.count() > 0L) }
-      catch { case e: Throwable => hot.unpersist(); throw e }
-    })
+    ArtifactStore.get(s, dir, s"hotkeys/l_orderkey/$HotKeyThreshold") { b =>
+      val (hot, n) = b.keepCounted(Joins.hotKeys(
+        lineitem(s, dir).select("l_orderkey"), Seq("l_orderkey"), HotKeyThreshold))
+      (hot, n > 0L)
+    }
 
   // Oriented co-occurrence graph — the relational family's second
   // ingest artifact (like the dedup family's shingle table): the
@@ -164,7 +122,7 @@ object Relational {
     */
   /** `session` is DEDICATED to the loop plans: its shuffle
     * parallelism is permanently clamped, so do not route unrelated
-    * queries through it. Released loops (releaseStats /
+    * queries through it. Released loops ([[ArtifactStore.release]] /
     * [[releaseGraphLoop]]) drop the session for GC — child sessions
     * share the SparkContext and must never be close()d (that stops
     * the context).
@@ -416,73 +374,56 @@ object Relational {
     */
   private val PercentileBroadcastMaxKeys = 4L * 1000 * 1000
 
-  private val graphCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), GraphArtifact]()
-
   private[operators] def orientedCooccurGraph(s: SparkSession, dir: String): GraphArtifact =
-    graphCache.computeIfAbsent((s, dir), _ => {
-      // a failed build step (e.g. the wnv==nv require) must not leak
-      // the already-persisted tables with no unpersist handle — and a
-      // retried computeIfAbsent would leak another set (r10 ADVICE)
-      val kept = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      def keep(df: DataFrame): DataFrame = { kept += df.persist(); df }
-      try {
-        val pairs = keep(partCooccurrence(s, dir)
-          .groupBy("p1", "p2").agg(count(lit(1)).as("n_orders")))
-        pairs.count()  // materialize: the ONE fact-table pass
-        val canon = canonicalEdges(pairs, "p1", "p2")
-        val o = keep(orientEdges(canon))
-        val ne = o.count()  // materialize: ingest-time work
-        val adj = keep(o.groupBy(col("src"))
-          .agg(array_sort(collect_list(col("dst"))).as("ns")))
-        adj.count()  // materialize: ingest-time work
-        val deg = keep(o.select(col("src").as("v"))
-          .unionAll(o.select(col("dst").as("v")))
-          .groupBy("v").agg(count(lit(1)).as("d")))
-        val nv = deg.count()  // materialize: ingest-time work
-        val wdeg = keep(pairs.select(col("p1").as("v"), col("n_orders").as("wd"))
+    ArtifactStore.get(s, dir, "graph/cooccur") { b =>
+      // the ONE fact-table pass
+      val pairs = b.keep(partCooccurrence(s, dir)
+        .groupBy("p1", "p2").agg(count(lit(1)).as("n_orders")))
+      val canon = canonicalEdges(pairs, "p1", "p2")
+      val (o, ne) = b.keepCounted(orientEdges(canon))
+      val adj = b.keep(o.groupBy(col("src"))
+        .agg(array_sort(collect_list(col("dst"))).as("ns")))
+      val (deg, nv) = b.keepCounted(o.select(col("src").as("v"))
+        .unionAll(o.select(col("dst").as("v")))
+        .groupBy("v").agg(count(lit(1)).as("d")))
+      val (wdeg, wnv) = b.keepCounted(
+        pairs.select(col("p1").as("v"), col("n_orders").as("wd"))
           .unionAll(pairs.select(col("p2").as("v"), col("n_orders").as("wd")))
           .groupBy("v").agg(sum("wd").as("wd")))
-        val wnv = wdeg.count()  // materialize: ingest-time work
-        require(wnv == nv,
-          s"weighted and unweighted vertex sets diverged ($wnv vs $nv) — " +
-            "pairs and oriented must project the same vertices")
-        // r17 (VERDICT r16 items 2–3): the per-edge COMMON-NEIGHBOR
-        // count table — the triangle-derived root both q70 (per-vertex
-        // triangle counts) and q76 (Jaccard tie strength) aggregate
-        // from. The O(m^1.5)-bounded adjacency intersection formerly
-        // re-ran inside EACH query on the identical cached inputs; at
-        // 100 TB this is the common-neighbor index a link-prediction
-        // pipeline maintains at ingest next to its adjacency table.
-        // |common| ≤ |E| rows (triangle edges only). Broadcast sizing
-        // for the intersection join mirrors adjJoin's — the artifact's
-        // own measured counts, not the planner's estimate.
-        val adjB = if (8L * ne + 48L * nv <= AdjBroadcastMaxBytes)
-          broadcast(adj) else adj
-        val common = keep(triangleCommonCounts(o, Some(adjB)))
-        common.count()  // materialize: ingest-time work
-        val loop = prepareGraphLoop(o, "src", "dst", deg, nv, ne)
-        // r17: the WEIGHTED bidirectional edge list, hash-partitioned
-        // on the aggregation key `v` at the loop's graph-sized
-        // parallelism — biPlus's layout trick for the weighted-rank
-        // family (q75): the per-round |V|-row divisor broadcasts, so
-        // the contribution aggregate is exchange-free. Formerly q75
-        // re-derived this 2·|E|-row union from `pairs` per call and
-        // re-shuffled it through the groupBy at session width. At
-        // 100 TB this is the weighted adjacency-direction table a
-        // graph engine writes at ingest next to the unweighted one.
-        val wbi = keep(pairs
-          .select(col("p1").as("u"), col("p2").as("v"), col("n_orders").as("w"))
-          .unionAll(pairs
-            .select(col("p2").as("u"), col("p1").as("v"), col("n_orders").as("w")))
-          .repartition(loop.parts, col("v")))
-        wbi.count()  // materialize: ingest-time work
-        GraphArtifact(o, adj, deg, pairs, wdeg, common, wbi, nv, ne, loop)
-      } catch { case e: Throwable =>
-        kept.foreach(_.unpersist())
-        throw e
-      }
-    })
+      require(wnv == nv,
+        s"weighted and unweighted vertex sets diverged ($wnv vs $nv) — " +
+          "pairs and oriented must project the same vertices")
+      // r17 (VERDICT r16 items 2–3): the per-edge COMMON-NEIGHBOR
+      // count table — the triangle-derived root both q70 (per-vertex
+      // triangle counts) and q76 (Jaccard tie strength) aggregate
+      // from. The O(m^1.5)-bounded adjacency intersection formerly
+      // re-ran inside EACH query on the identical cached inputs; at
+      // 100 TB this is the common-neighbor index a link-prediction
+      // pipeline maintains at ingest next to its adjacency table.
+      // |common| ≤ |E| rows (triangle edges only). Broadcast sizing
+      // for the intersection join mirrors adjJoin's — the artifact's
+      // own measured counts, not the planner's estimate.
+      val adjB = if (8L * ne + 48L * nv <= AdjBroadcastMaxBytes)
+        broadcast(adj) else adj
+      val common = b.keep(triangleCommonCounts(o, Some(adjB)))
+      val loop = prepareGraphLoop(o, "src", "dst", deg, nv, ne)
+      b.onRelease(releaseGraphLoop(loop))
+      // r17: the WEIGHTED bidirectional edge list, hash-partitioned
+      // on the aggregation key `v` at the loop's graph-sized
+      // parallelism — biPlus's layout trick for the weighted-rank
+      // family (q75): the per-round |V|-row divisor broadcasts, so
+      // the contribution aggregate is exchange-free. Formerly q75
+      // re-derived this 2·|E|-row union from `pairs` per call and
+      // re-shuffled it through the groupBy at session width. At
+      // 100 TB this is the weighted adjacency-direction table a
+      // graph engine writes at ingest next to the unweighted one.
+      val wbi = b.keep(pairs
+        .select(col("p1").as("u"), col("p2").as("v"), col("n_orders").as("w"))
+        .unionAll(pairs
+          .select(col("p2").as("u"), col("p1").as("v"), col("n_orders").as("w")))
+        .repartition(loop.parts, col("v")))
+      GraphArtifact(o, adj, deg, pairs, wdeg, common, wbi, nv, ne, loop)
+    }
 
   /** The SECOND prepared loop context — the bipartite supplier–part
     * supply graph (part node = 2·partkey, supplier node =
@@ -493,19 +434,19 @@ object Relational {
     * loop economics on a graph with a completely different shape
     * (bipartite, no triangles, low diameter through supplier hubs).
     */
-  private val supplyLoopCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), GraphLoop]()
-
   private[operators] def supplyGraphLoop(s: SparkSession, dir: String): GraphLoop =
-    supplyLoopCache.computeIfAbsent((s, dir), _ =>
-      buildGraphLoop(lineitem(s, dir).select(
+    ArtifactStore.get(s, dir, "graph/supply") { b =>
+      val loop = buildGraphLoop(lineitem(s, dir).select(
         (col("l_partkey") * 2).as("a"),
-        (col("l_suppkey") * 2 + 1).as("b"))))
+        (col("l_suppkey") * 2 + 1).as("b")))
+      b.onRelease(releaseGraphLoop(loop))
+      loop
+    }
 
   /** Build the relational family's ingest artifacts (the hot-orderkey
-    * stats table, the oriented co-occurrence graph, and the supply
-    * graph's prepared loop) ahead of queries; Bench calls this in
-    * warm-up.
+    * stats table, the oriented co-occurrence graph, the supply graph's
+    * prepared loop and the q53 Bloom filter) ahead of queries; Bench
+    * calls this in warm-up.
     */
   def prepareStats(s: SparkSession, dir: String): Unit = {
     orderkeyHotStats(s, dir)
@@ -513,22 +454,6 @@ object Relational {
     supplyGraphLoop(s, dir)
     buildingSegmentBloom(s, dir)
     ()
-  }
-
-  /** Release the cached hot-key stats and graph artifact for a dataset
-    * (invalidation hook after re-ingest, mirrors
-    * Dedup.releaseArtifacts).
-    */
-  def releaseStats(s: SparkSession, dir: String): Unit = {
-    bloomCache.remove((s, dir))
-    Option(hotKeyCache.remove((s, dir))).foreach(_._1.unpersist())
-    Option(graphCache.remove((s, dir))).foreach { g =>
-      g.oriented.unpersist(); g.adj.unpersist()
-      g.deg.unpersist(); g.pairs.unpersist(); g.wdeg.unpersist()
-      g.common.unpersist(); g.wbi.unpersist()
-      g.loop.biPlus.unpersist(); g.loop.degStore.unpersist()
-    }
-    Option(supplyLoopCache.remove((s, dir))).foreach(releaseGraphLoop)
   }
 
   /** Distinct canonical (p1 < p2) part pairs bought together in one

@@ -79,4 +79,42 @@ class TablesSpec extends SparkSuite {
       emb.schema("embedding").dataType == ArrayType(FloatType, containsNull = false),
       s"embeddings.embedding must be array<float>; got ${emb.schema("embedding").dataType}")
   }
+
+  private def fixtureCopy(): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory("graft-fp")
+    java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      .forEach(f => java.nio.file.Files.copy(f, d.resolve(f.getFileName)))
+    d
+  }
+
+  test("fingerprint is stable across calls on an untouched dir") {
+    val d = fixtureCopy().toString
+    val fp = Tables.fingerprint(spark, d)
+    assert((1 to 3).map(_ => Tables.fingerprint(spark, d)).forall(_ == fp))
+  }
+
+  test("fingerprint changes when one table file is rewritten") {
+    val d = fixtureCopy()
+    val before = Tables.fingerprint(spark, d.toString)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf("sf0.01"), "customer.parquet"),
+      d.resolve("customer.parquet"), java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(Tables.fingerprint(spark, d.toString) != before)
+  }
+
+  test("fingerprint forks no process") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val d = fixtureCopy().toString
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try (1 to 5).foreach(_ => Tables.fingerprint(spark, d)) finally rec.stop()
+    val jfr = java.nio.file.Files.createTempFile("graft-fp", ".jfr")
+    rec.dump(jfr)
+    rec.close()
+    val forked = RecordingFile.readAllEvents(jfr).asScala
+      .map(_.getString("command")).filter(_.contains(d))
+    assert(forked.isEmpty, s"forked to fingerprint: ${forked.mkString("; ")}")
+  }
 }

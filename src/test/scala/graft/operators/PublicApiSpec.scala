@@ -165,21 +165,36 @@ class PublicApiSpec extends SparkSuite {
   }
 
   test("releaseArtifacts frees the dedup caches and the next query rebuilds them") {
-    val dir = sf("sf0.001")
+    // a private copy of the fixture: the lineage check below must see
+    // only what this test built
+    val dir = java.nio.file.Files.createTempDirectory("graft-release").toString
+    java.nio.file.Files.list(java.nio.file.Paths.get(sf("sf0.001"))).forEach { f =>
+      java.nio.file.Files.copy(f, java.nio.file.Paths.get(dir, f.getFileName.toString))
+    }
     def persistentRdds = spark.sparkContext.getPersistentRDDs.size
+    // persisted RDDs whose lineage scans a file under `dir`
+    def reads(r: org.apache.spark.rdd.RDD[_]): Boolean = r.partitions.exists {
+      case p: org.apache.spark.sql.execution.datasources.FilePartition =>
+        p.files.exists(_.filePath.toString.contains(dir))
+      case _ => false
+    } || r.dependencies.exists(d => reads(d.rdd))
+    def persistedReadingDir = spark.sparkContext.getPersistentRDDs.values.count(reads(_))
     val q = graft.SparkEntry.queries("d03_dedup_ngram_jaccard")
     val first = q(spark, dir).collect()
     Dedup.prepareShingles(spark, dir) // ensure both artifacts exist
     val withCaches = persistentRdds
-    Dedup.releaseArtifacts(spark, dir)
+    ArtifactStore.release(spark, dir)
     assert(persistentRdds < withCaches, "release did not free cached artifacts")
     // rebuild path: same results after release
     val second = q(spark, dir).collect()
     assert(second.toSeq == first.toSeq)
     Similarity.prepareIndex(spark, dir)
+    Relational.prepareStats(spark, dir)
     val withIvf = persistentRdds
-    Similarity.releaseIndex(spark, dir)
+    assert(persistedReadingDir > 0, "the lineage check sees no artifact")
+    ArtifactStore.release(spark, dir)
     assert(persistentRdds < withIvf, "releaseIndex did not free the IVF assignment table")
+    assert(persistedReadingDir == 0, "one release left persisted RDDs reading the dataset")
   }
 
   test("asofJoin matches each left row to the nearest right row, both directions") {
