@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType
   * distinct shuffle — at sf5 d04's `dropDuplicates` moved ~100M
   * candidate rows through a full shuffle (same-pair rows live in
   * different (band, bucket) partitions, so map-side partial
-  * aggregation never collapses them; SCALE.md's D04Probe showed the
+  * aggregation never collapses them; SCALE.md's D04Probe@059cb1a showed the
   * stage spill/GC-bound either way).
   *
   * Like [[PrefixDistinct]], a primitive long loop inside whole-stage

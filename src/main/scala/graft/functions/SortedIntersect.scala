@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * deduplicated edge list), so the hash set is pure overhead — on the
   * sf1 co-occurrence graph (12M oriented edges, O(√m)-bounded
   * out-lists) the per-edge intersection is the single largest cost in
-  * both q70 and q76 (TriangleProbe2: 5.0 s of q70's 5.3 s total is
+  * both q70 and q76 (TriangleProbe2@059cb1a: 5.0 s of q70's 5.3 s total is
   * joins+intersect).
   *
   * CONTRACT (the bucket-table-style precondition; sortedness is

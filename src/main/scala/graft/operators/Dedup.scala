@@ -425,7 +425,7 @@ object Dedup {
   /** Upper bound for hint-broadcasting the loop's |nodes|-row label
     * table each round (~48 bytes/row estimate, the
     * [[graft.operators.Relational]] adjJoin sizing style): 256 MB →
-    * ~5.6M nodes. The r15 CcProbe A/B on the s07b-shaped sf5 survivor
+    * ~5.6M nodes. The r15 CcProbe@059cb1a A/B on the s07b-shaped sf5 survivor
     * graph (100k nodes / 24M directed edges, clique components)
     * measured the hinted loop against the stats-blind shuffle plan —
     * see SCALE.md. Override per caller session via

@@ -137,7 +137,7 @@ object Joins {
     // No detected skew → the literal plain join: the salt machinery
     // (two broadcast probes + the right-side generator + a composite
     // join key) costs ~2× the plain join even when it replicates
-    // nothing (measured, Q36Probe), so an unskewed dataset shouldn't
+    // nothing (measured, Q36Probe@059cb1a), so an unskewed dataset shouldn't
     // pay it. The emptiness probe is one head(1) job — trivial against
     // a materialized ingest-time stats table, and subsumed by the
     // detection aggregate in the threshold overload; callers whose

@@ -119,7 +119,7 @@ object Multimodal {
       // one codegen loop per asset, unsigned bytes, identical index
       // arithmetic to the r<11 transform-HOF form whose every sample
       // paid a lambda call + substring slice + hex→conv string
-      // round-trip (PhashProbe measured the grid derivation at ~85%
+      // round-trip (PhashProbe@059cb1a measured the grid derivation at ~85%
       // of m06; m06 1.0-1.1 → 0.52-0.65 s, m05 0.33 → 0.22 s at
       // sf0.1, identical hashes).
       .withColumn("pix",

@@ -68,7 +68,7 @@ object Relational {
   /** Prepared iteration context for the k-round graph loops (q74
     * PageRank, q77 min-label) — built ONCE at ingest alongside the
     * other graph tables. The loop-shaped costs it removes (measured,
-    * tools/GraphLoopProbe*.scala at sf0.1, local[32]):
+    * GraphLoopProbe@059cb1a..GraphLoopProbe5@059cb1a at sf0.1, local[32]):
     *
     *  - `session`: a `newSession()` child of the owner — shares the
     *    SparkContext, cached blocks, and catalog but has an ISOLATED
@@ -108,7 +108,7 @@ object Relational {
     *    ([[GraphLoop.hintV]]): the broadcast join preserves the
     *    streamed cached partitioning, so every round's `groupBy("v")`
     *    is EXCHANGE-FREE — k rounds = k cached scans, zero shuffles
-    *    of the 2·|E| rows (GraphLoopProbe4 at sf1: q74 2.59 → 1.21 s,
+    *    of the 2·|E| rows (GraphLoopProbe4@059cb1a at sf1: q74 2.59 → 1.21 s,
     *    q72 0.76 → 0.32 s, q77 3.10 → 2.62 s, outputs bit-identical).
     *    The hint is REQUIRED for the layout to pay: AQE's
     *    broadcast conversion happens at exchange boundaries, so the
@@ -304,7 +304,7 @@ object Relational {
     *    incident edges), |V| rows — the weighted-PageRank divisor
     *    (q75); deriving it in-plan re-aggregated the bidirectional
     *    weighted list per run and paid a 1-row broadcast cross-join
-    *    for |V| (3.2 s → 1.1 s, GraphLoopProbe);
+    *    for |V| (3.2 s → 1.1 s, GraphLoopProbe@059cb1a);
     *  - `loop`: the prepared [[GraphLoop]] the k-round iterative
     *    operators (q74, q77) run on.
     */
@@ -332,7 +332,7 @@ object Relational {
     /** The JOIN-SIDE view of `adj`: broadcast-hinted iff the
       * artifact's own measured (nv, ne) bound the table under
       * [[AdjBroadcastMaxBytes]]. The r13 sf1 stage audit
-      * (GraphStageProbe) found the static planner sort-merge-joining
+      * (GraphStageProbe@059cb1a) found the static planner sort-merge-joining
       * the 12M-edge oriented list against this |V|-row table TWICE —
       * the ~105 MB adjacency estimate clears any real executor's
       * memory but not the 10 MB `autoBroadcastJoinThreshold` default,
@@ -348,7 +348,7 @@ object Relational {
   }
 
   /** Upper bound for hint-broadcasting a prepared adjacency table:
-    * 1 GiB — raised from 256 MB in r14 after TriangleProbe3 measured
+    * 1 GiB — raised from 256 MB in r14 after TriangleProbe3@059cb1a measured
     * the crossover at sf5 (59.8M edges, 526 MB adjacency): the forced
     * broadcast ran the triangle join in 9.9 s steady-state where the
     * SMJ fallback took 39.0 s (shuffle-hash-hinted attaches 87.1 s; a
@@ -357,7 +357,7 @@ object Relational {
     * constants). One static table reused by both attach joins, so —
     * unlike the per-round loop broadcast, which re-ships a CHANGING
     * |V|-row table every iteration and measurably flips at 256 MB
-    * ([[LoopVertexBroadcastMaxBytes]], GraphLoopProbe5) — the
+    * ([[LoopVertexBroadcastMaxBytes]], GraphLoopProbe5@059cb1a) — the
     * adjacency broadcast amortizes: past ~1 GiB (≳120M edges) the
     * per-executor residency cost stops being trivial and the shuffled
     * SMJ (moving |E| + |V| rows) takes over. Far above the 10 MB
@@ -954,7 +954,7 @@ object Relational {
     // and the r16 driver bench's slowest query (1.81 s). Now the
     // same rank-exact values come from the q55 two-phase bucketed
     // selection, stacked over both value columns in one 3-scan
-    // pipeline ([[exactPercentileSelectMulti]]): bounded per-task
+    // pipeline ([[exactPercentileSelect]]): bounded per-task
     // state, no per-group sort, no percentile buffer. The oracle
     // (quantile_cont, unchanged) mirrors the identical rank
     // positions p·(n−1) and the identical lo + frac·(hi−lo)
@@ -964,7 +964,7 @@ object Relational {
     // holds because lineitem's value columns are non-null (the
     // helper's documented precondition).
     "q31_percentiles" -> ((s, dir) =>
-      exactPercentileSelectMulti(
+      exactPercentileSelect(
         lineitem(s, dir), "l_returnflag",
         Seq("l_extendedprice" -> Seq("p50" -> 0.5, "p90" -> 0.9),
           "l_discount" -> Seq("disc_p25" -> 0.25)),
@@ -972,14 +972,12 @@ object Relational {
         keyCount = Some(3L))
         .orderBy("l_returnflag")),
 
-    // MEMORY-SAFE exact percentiles — the third member of the
-    // percentile trio: q31 is exact but holds every group's values in
-    // one in-memory aggregation buffer (OOMs at 100 TB; gate-only by
-    // design), q38 is mergeable but approximate (one-bucket error),
-    // and THIS is exact, cannot OOM, AND never sorts a group: the
-    // two-phase bucketed selection in [[exactPercentileSelect]] (two
-    // O(n) combinable scans + a row_number over only the ~n/buckets-row
-    // targeted buckets). Re-planned in r13 from a rank window over a
+    // MEMORY-SAFE exact percentiles over one value column (q31 runs
+    // the same selection over two; q38 is the mergeable but
+    // approximate twin, one-bucket error). Exact, cannot OOM, and
+    // never sorts a group: the two-phase bucketed selection in
+    // [[exactPercentileSelect]] (two O(n) combinable scans + a
+    // row_number over only the ~n/buckets-row targeted buckets). Re-planned in r13 from a rank window over a
     // value-sorted partition — that form was exact and spill-safe but
     // serialized each group's sort into one task (2M rows/task on
     // this 3-flag fixture at sf1: the 7.1× scaler VERDICT r12 item 3
@@ -989,11 +987,11 @@ object Relational {
     // arithmetic in the same operation order (not quantile_cont,
     // whose internal lerp order is the engine's own), so the result
     // is hash-exact; SketchAndFormatSpec asserts q55 ≡ q31 on the
-    // shared percentiles — two independent exact algorithms agreeing.
+    // shared percentiles, each of which matches its own oracle.
     "q55_percentile_rank" -> ((s, dir) =>
       exactPercentileSelect(
-        lineitem(s, dir), "l_returnflag", "l_extendedprice",
-        Seq("p50" -> 0.5, "p90" -> 0.9),
+        lineitem(s, dir), "l_returnflag",
+        Seq("l_extendedprice" -> Seq("p50" -> 0.5, "p90" -> 0.9)),
         // l_returnflag is a 3-value enum — pass the cardinality as the
         // table statistic it is, skipping the sizing pass
         keyCount = Some(3L))
@@ -1489,7 +1487,7 @@ object Relational {
     // equality: once sketches leave sparse mode (sf0.1+), Datasketches'
     // union path flags the result out-of-order and estimates with a
     // slightly different estimator than a directly-built sketch —
-    // Q37Probe measured ≤1.01% apart at sf0.1, zero in sparse mode
+    // Q37Probe@059cb1a measured ≤1.01% apart at sf0.1, zero in sparse mode
     // (exact equality IS asserted at sparse-mode scale in
     // SketchAndFormatSpec). Raw estimates asserted there too;
     // hash-exact twin: q37b.
@@ -2290,12 +2288,13 @@ object Relational {
       .select(col(keyCol), col("n_events"), col("ewma"))
   }
 
-  /** EXACT keyed percentiles by two-phase bucketed SELECTION — the
-    * r13 re-plan of q55's rank window (VERDICT r12 item 3: q55 was
-    * the steepest sf1 scaler at 7.1×, its dominant stage the
-    * per-group window sort — 2M rows per task on the 3-flag gate
-    * fixture). Selection replaces the O(n log n) per-group sort with
-    * two O(n) scans and never sorts a group:
+  /** EXACT keyed percentiles by two-phase bucketed SELECTION, over one
+    * or more value columns of the same keyed relation — the r13
+    * re-plan of q55's rank window (VERDICT r12 item 3: q55 was the
+    * steepest sf1 scaler at 7.1×, its dominant stage the per-group
+    * window sort — 2M rows per task on the 3-flag gate fixture).
+    * Selection replaces the O(n log n) per-group sort with two O(n)
+    * scans and never sorts a group:
     *
     *  1. one stats pass (count/min/max per key — map-side
     *     combinable);
@@ -2306,43 +2305,58 @@ object Relational {
     *     bucket rows locates, for every requested rank
     *     floor/ceil(p·(n−1)), the ONE bucket holding it and the rank's
     *     offset within it;
-    *  3. a second scan keeps only rows of the ≤4 targeted buckets per
+    *  3. a second scan keeps only rows of the targeted buckets per
     *     key (two broadcast joins — stats and targets are |keys|-sized)
     *     and row_numbers WITHIN each ~n/buckets-row bucket to pick the
     *     exact value at each offset.
+    *
+    * Several value columns share ONE three-scan pipeline (the r17
+    * re-plan of q31, whose sort-based `percentile` aggregate buffered
+    * EVERY group value in one in-memory aggregation buffer — the
+    * documented OOM-at-100 TB shape, and the slowest query of the
+    * r16 `Bench` run at 1.81 s): the columns are STACKED —
+    * `posexplode(array(v₁..vₘ))` tags each value with its column
+    * index `ci` — and every pass is keyed by (k, ci). One column is
+    * the m = 1 case of the same pipeline (q55); per-task state stays
+    * bounded the same way for any m (the grid is per (key, ci); pass
+    * 2 sorts only targeted ~n/buckets-row buckets).
     *
     * The picked values are bit-identical to the rank-window form's
     * (the (r+1)-th smallest value of a multiset is algorithm-
     * independent; ties collapse to the same value), and the final
     * interpolation `round(lo + frac·(hi − lo), 4)` is the identical
-    * IEEE op sequence — so the output hash-matches the unchanged q55
-    * oracle. Constant-valued keys (max = min) short-circuit to that
-    * value without touching pass 2 (their single bucket would hold the
-    * whole group). Honest limit: a non-constant key whose mass
+    * IEEE op sequence DuckDB's quantile_cont applies — so q55's and
+    * q31's outputs hash-match their unchanged oracles (SketchAndFormatSpec
+    * also asserts the shared p50/p90 of the two queries agree).
+    * Constant-valued keys (max = min) route to bucket 0 and ride the
+    * same passes. Honest limit: a non-constant key whose mass
     * concentrates in ONE bucket (≫ n/buckets duplicates of a single
     * value) degrades pass 2 toward the window form's per-group sort —
     * spilled, not crashed — and q38's mergeable histogram remains the
     * approximate recommendation at that extreme. NULL values are
-    * excluded (SQL percentile semantics); NaN values are NOT
-    * supported (the bucket assignment would cast NaN under ANSI —
-    * filter them upstream; the rank-window form this replaced ordered
-    * them last, which is equally meaningless as a percentile
-    * input).
+    * excluded per column (SQL percentile semantics); a NaN value
+    * routes its whole (key, column) group to bucket 0 and orders last,
+    * which is as meaningless a percentile input as it was in the
+    * rank-window form — filter NaNs upstream.
     *
     * KEY-CARDINALITY SIZING (the adjJoin/vMode sized-hint pattern):
     * the stats/ranks/targets tables are |keys|-row side inputs, and
     * the broadcast hints that make the few-group case cheap would
     * blow the driver at billions of keys. So the hints are applied
-    * ONLY when the key count clears [[PercentileBroadcastMaxKeys]];
+    * ONLY when the side tables clear [[PercentileBroadcastMaxKeys]];
     * above it the same joins run key-partitioned (shuffled — slower
     * but unbounded-safe). `keyCount`: pass the known cardinality
-    * (ingest pipelines have it as a table statistic; q55 passes the
-    * 3-flag bound) to size the decision for free; when absent the
+    * (ingest pipelines have it as a table statistic; q31 and q55 pass
+    * the 3-flag bound) to size the decision for free; when absent the
     * function spends ONE eager map-side-combinable pass counting the
     * groups — safety is the default, the hint is the optimization.
     *
-    * Output: (keyCol, n, <one column per requested percentile name>),
-    * one row per key.
+    * `vCols`: (valueColumn → (outputName → p)*)*. Output: (keyCol, n,
+    * <one column per requested name, in vCols order>), one row per
+    * key, values as double. `n` is the FIRST column's non-null count —
+    * identical to COUNT(*) when the columns are non-null, as
+    * lineitem's are; a caller with nullable value columns must not
+    * read `n` as a row count.
     */
   // Default bucket count (r16): the picked values are rank-exact for
   // ANY bucket count — the grid only sets how many rows pass 2 keeps
@@ -2351,136 +2365,10 @@ object Relational {
   // 65536 optimized the wrong side: pass-2's row_number runs over a
   // single targeted bucket (spill-safe sort, fine at millions of rows)
   // while pass-1's hash table is per-task memory on EVERY scan task.
-  // Measured at sf0.1 (Q55BucketProbe, interleaved, outputs asserted
-  // identical): 65536 → 2.01 s, 16384 → 1.28, 4096 → 1.03, 1024 → 1.12.
-  def exactPercentileSelect(df: DataFrame, keyCol: String, vCol: String,
-      ps: Seq[(String, Double)], buckets: Int = 4096,
-      keyCount: Option[Long] = None): DataFrame = {
-    val base = df.select(col(keyCol).as("k"), col(vCol).as("v"))
-      .filter(col("v").isNotNull)
-    val stats = base.groupBy("k").agg(count(lit(1)).as("n"),
-      min("v").as("mn"), max("v").as("mx"))
-    // sized hint: each side table is ≤ |keys|·(2·|ps|+2) tiny rows
-    val nKeys = keyCount.getOrElse(stats.count())
-    val sized: DataFrame => DataFrame =
-      if (nKeys * (2L * ps.size + 2L) <= PercentileBroadcastMaxKeys)
-        broadcast else identity
-    val statsB = sized(stats)
-
-    def posOf(p: Double): Column = lit(p) * (col("n") - 1).cast("double")
-    val rankCols = ps.flatMap { case (_, p) =>
-      Seq(floor(posOf(p)).cast("long"), ceil(posOf(p)).cast("long")) }
-
-    // the same bucket expression in both passes — consistency of the
-    // assignment, not its precision, is what exactness rides on.
-    // Constant-valued keys (mx ≤ mn) route to bucket 0 IN the
-    // expression (their width would be 0 → NaN → ANSI cast error), so
-    // they ride the same two passes as everyone else: r16 re-plan —
-    // the former separate constVals/ranks/withN branches each re-ran
-    // the stats aggregate from its own parquet scan (AQE could not
-    // reuse them: per-branch column pruning made the exchanges
-    // non-identical — measured 5 scans / 8 exchanges at sf0.01), where
-    // deriving targets and n inline makes the whole job the documented
-    // 3 scans (stats + the two passes).
-    val width = (col("mx").cast("double") - col("mn").cast("double")) /
-      lit(buckets.toDouble)
-    // isnan(mx): a NaN value makes mx NaN, which FAILS the mx <= mn
-    // guard (NaN comparisons are false) and would turn width/bucket
-    // into NaN → an ANSI cast error (r16 ADVICE). NaN keys route to
-    // bucket 0 like constant keys: degraded (pass 2 sorts the whole
-    // group's bucket), never crashed — and a NaN percentile input is
-    // meaningless anyway (the scaladoc says filter upstream).
-    val bExpr = when(col("mx") <= col("mn") || isnan(col("mx")), lit(0L))
-      .otherwise(least(
-        floor((col("v").cast("double") - col("mn").cast("double")) / width)
-          .cast("long"),
-        lit(buckets - 1L)))
-
-    // both passes consume the IDENTICAL (k, v, b) projection over the
-    // IDENTICAL (k, mn, mx) broadcast — per-branch column pruning would
-    // otherwise specialize the two broadcast subtrees apart and defeat
-    // AQE exchange reuse (measured: a 4th parquet scan appears when
-    // pass 1 also pulls n through the join)
-    val withB = base.join(statsB, "k").withColumn("b", bExpr)
-      .select(col("k"), col("v"), col("b"))
-    // pass 1: per-(key, bucket) counts + cumulative rank boundaries;
-    // n is the key's total bucket mass — a second frame over the same
-    // window partitioning, not a join back to stats
-    val wKey = Window.partitionBy("k")
-    val cum = withB
-      .groupBy("k", "b").agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum("c").over(
-        wKey.orderBy("b")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("n", sum("c").over(wKey))
-    // targets inline: the candidate ranks floor/ceil(p·(n−1)) are pure
-    // expressions of n, so the bucket holding each rank is a FILTER on
-    // the tiny cum relation — no separate ranks table, no extra join
-    val targets = cum
-      .select(col("k"), col("b"), col("n"), col("cum"), col("c"),
-        explode(filter(array_distinct(array(rankCols: _*)),
-          r => r >= col("cum") - col("c") && r < col("cum"))).as("r"))
-      .select(col("k"), col("b"), col("n"), col("r"),
-        (col("r") - (col("cum") - col("c"))).as("off"))
-
-    // pass 2: only the targeted buckets' rows survive into the pick
-    // (k, v, b only — n/mn/mx would ride every surviving row into the
-    // row_number shuffle; targets already carries n per key)
-    val vals = withB.select(col("k"), col("v"), col("b"))
-      .join(sized(targets), Seq("k", "b"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("k", "b", "r").orderBy("v")))
-      .filter(col("rn") === col("off") + 1)
-      .select(col("k"), col("r"), col("v").as("pv"), col("n"))
-    val aggCols = ps.flatMap { case (nm, p) =>
-      Seq(min(when(col("r") === floor(posOf(p)).cast("long"), col("pv")))
-          .as(s"__lo_$nm"),
-        min(when(col("r") === ceil(posOf(p)).cast("long"), col("pv")))
-          .as(s"__hi_$nm")) }
-    val g = vals.groupBy("k").agg(max("n").as("n"), aggCols: _*)
-    val sel = col("k").as(keyCol) +: col("n") +: ps.map { case (nm, p) =>
-      val pos = posOf(p)
-      val frac = pos - floor(pos)
-      round(col(s"__lo_$nm") + frac * (col(s"__hi_$nm") - col(s"__lo_$nm")), 4)
-        .as(nm)
-    }
-    g.select(sel: _*)
-  }
-
-  /** [[exactPercentileSelect]] over SEVERAL value columns of the same
-    * keyed relation in ONE three-scan pipeline — the r17 re-plan of
-    * q31 (the r16 driver bench's slowest query at 1.81 s: its single
-    * sort-based `percentile` aggregate buffers EVERY group value in
-    * one in-memory aggregation buffer, the documented OOM-at-100 TB
-    * shape). Calling the single-column machinery once per value
-    * column would pay the 3-scan pipeline per column; instead the
-    * value columns are STACKED — `posexplode(array(v₁..vₘ))` tags
-    * each value with its column index `ci` — and the whole two-phase
-    * bucketed selection runs keyed by (k, ci): same stats pass, same
-    * histogram pass, same targeted-bucket pick, m× the rows through
-    * one pipeline instead of one pipeline per column. Per-task state
-    * stays bounded exactly as in the single-column form (the grid is
-    * per (key, ci); pass 2 sorts only targeted ~n/buckets-row
-    * buckets).
-    *
-    * Exactness: identical argument to [[exactPercentileSelect]] — the
-    * picked values are the rank statistics floor/ceil(p·(n−1)) of
-    * each (key, column) multiset, and `round(lo + frac·(hi−lo), 4)`
-    * is the same IEEE interpolation DuckDB's quantile_cont applies,
-    * so the output hash-matches the unchanged q31 oracle (verified at
-    * every gate scale; SketchAndFormatSpec already asserts the shared
-    * p50/p90 agree with q55's independent machinery).
-    *
-    * `n` in the output is the FIRST column's non-null count (SQL
-    * percentile semantics exclude NULLs per column) — identical to
-    * COUNT(*) when the columns are non-null, as lineitem's are; a
-    * caller with nullable value columns must not read `n` as a row
-    * count.
-    *
-    * `vCols`: (valueColumn → (outputName → p)*)*; output is
-    * (keyCol, n, <one column per requested name, in vCols order>).
-    */
-  def exactPercentileSelectMulti(df: DataFrame, keyCol: String,
+  // Measured at sf0.1 (Q55BucketProbe@059cb1a, interleaved, outputs
+  // asserted identical): 65536 → 2.01 s, 16384 → 1.28, 4096 → 1.03,
+  // 1024 → 1.12.
+  def exactPercentileSelect(df: DataFrame, keyCol: String,
       vCols: Seq[(String, Seq[(String, Double)])], buckets: Int = 4096,
       keyCount: Option[Long] = None): DataFrame = {
     require(vCols.nonEmpty, "vCols must be non-empty")
@@ -2492,8 +2380,7 @@ object Relational {
       .filter(col("v").isNotNull)
     val stats = base.groupBy("k", "ci").agg(count(lit(1)).as("n"),
       min("v").as("mn"), max("v").as("mx"))
-    // sized hint (see exactPercentileSelect): side tables are
-    // |keys|·m·(2·|ps|+2)-ish tiny rows
+    // sized hint: each side table is ≤ |keys|·m·(2·|ps|+2) tiny rows
     val psTotal = vCols.map(_._2.size).sum
     val nKeys = keyCount.getOrElse(stats.count() / nCols)
     val sized: DataFrame => DataFrame =
@@ -2504,7 +2391,7 @@ object Relational {
     def posOf(p: Double): Column = lit(p) * (col("n") - 1).cast("double")
     // candidate ranks differ per column index: a CASE over ci keeps
     // the expression codegen'd, no per-ci branch relations (whose
-    // diverging subtrees would defeat exchange reuse — the q55 lesson)
+    // diverging subtrees would defeat exchange reuse)
     def ranksFor(ps: Seq[(String, Double)]): Column =
       array_distinct(array(ps.flatMap { case (_, p) =>
         Seq(floor(posOf(p)).cast("long"), ceil(posOf(p)).cast("long")) }: _*))
@@ -2513,18 +2400,42 @@ object Relational {
         when(col("ci") === i, ranksFor(ps)).otherwise(acc)
     }
 
-    // identical bucket expression in both passes, identical (k, ci)
-    // keying — the single-column form's consistency/NaN/constant-key
-    // reasoning applies per (key, column) group
+    // the same bucket expression in both passes — consistency of the
+    // assignment, not its precision, is what exactness rides on.
+    // Constant-valued groups (mx ≤ mn) route to bucket 0 IN the
+    // expression (their width is 0, and dividing by it is an ANSI
+    // DIVIDE_BY_ZERO error), so they ride the same two passes as
+    // everyone else: r16 re-plan — the former separate constVals/ranks/withN branches each re-ran
+    // the stats aggregate from its own parquet scan (AQE could not
+    // reuse them: per-branch column pruning made the exchanges
+    // non-identical — measured 5 scans / 8 exchanges at sf0.01), where
+    // deriving targets and n inline makes the whole job the documented
+    // 3 scans (stats + the two passes).
     val width = (col("mx").cast("double") - col("mn").cast("double")) /
       lit(buckets.toDouble)
+    // isnan(mx): a NaN value makes mx NaN (Spark orders NaN above
+    // every number), which fails the mx <= mn guard and makes width
+    // NaN. NaN groups route to bucket 0 like constant groups: degraded
+    // (pass 2 sorts the whole group's bucket), never crashed. Spark's
+    // floor of a NaN double is 0L, not an ANSI cast error, so the rows
+    // would land in bucket 0 without this term too; it states the
+    // routing instead of leaning on that.
     val bExpr = when(col("mx") <= col("mn") || isnan(col("mx")), lit(0L))
       .otherwise(least(
         floor((col("v").cast("double") - col("mn").cast("double")) / width)
           .cast("long"),
         lit(buckets - 1L)))
+
+    // both passes consume the IDENTICAL (k, ci, v, b) projection over
+    // the IDENTICAL stats broadcast — per-branch column pruning would
+    // otherwise specialize the two broadcast subtrees apart and defeat
+    // AQE exchange reuse (measured: a 4th parquet scan appears when
+    // pass 1 also pulls n through the join)
     val withB = base.join(statsB, Seq("k", "ci")).withColumn("b", bExpr)
       .select(col("k"), col("ci"), col("v"), col("b"))
+    // pass 1: per-(key, ci, bucket) counts + cumulative rank
+    // boundaries; n is the group's total bucket mass — a second frame
+    // over the same window partitioning, not a join back to stats
     val wKey = Window.partitionBy("k", "ci")
     val cum = withB
       .groupBy("k", "ci", "b").agg(count(lit(1)).as("c"))
@@ -2532,6 +2443,9 @@ object Relational {
         wKey.orderBy("b")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("n", sum("c").over(wKey))
+    // targets inline: the candidate ranks floor/ceil(p·(n−1)) are pure
+    // expressions of n, so the bucket holding each rank is a FILTER on
+    // the tiny cum relation — no separate ranks table, no extra join
     val targets = cum
       .select(col("k"), col("ci"), col("b"), col("n"), col("cum"), col("c"),
         explode(filter(rankArr,
@@ -2539,6 +2453,8 @@ object Relational {
       .select(col("k"), col("ci"), col("b"), col("n"), col("r"),
         (col("r") - (col("cum") - col("c"))).as("off"))
 
+    // pass 2: only the targeted buckets' rows survive into the pick
+    // (no n/mn/mx on the surviving rows; targets carries n per group)
     val vals = withB.select(col("k"), col("ci"), col("v"), col("b"))
       .join(sized(targets), Seq("k", "ci", "b"))
       .withColumn("rn", row_number().over(
@@ -2629,7 +2545,7 @@ object Relational {
     * blow up a row.
     *
     * Shape economics (sf0.1 co-occurrence graph, measured in r9's
-    * TriangleProbe): the classic wedge-join + closing-semi-join plan
+    * TriangleProbe@059cb1a): the classic wedge-join + closing-semi-join plan
     * shuffles 41M wedge rows for 1.2M edges — 12 s of exchange; this
     * plan joins 1.2M edges against a 20k-row adjacency table twice
     * and runs in ~1 s. (A Bloom pre-filter on the closing edge was
@@ -2670,14 +2586,14 @@ object Relational {
     * list — the contract an adjOpt caller must also meet), so the
     * per-row hash set array_intersect builds is pure overhead — the
     * intersection was q70's single largest stage at sf1
-    * (TriangleProbe2: 3.99 → 2.14 s, element-identical output).
+    * (TriangleProbe2@059cb1a: 3.99 → 2.14 s, element-identical output).
     *
     * Above the adjacency broadcast bound the attach joins fall back
     * to sort-merge, shuffling |E| rows that CARRY out-list arrays
     * (O(Σ outdeg²) bytes). A skinny-row WEDGE re-plan — explode each
     * out-list's ordered in-row pairs, close them against the
     * id-canonical edge set with one narrow equi-join — was measured
-    * at sf5 and REJECTED (TriangleProbe3, 59.8M edges / 2.05G
+    * at sf5 and REJECTED (TriangleProbe3@059cb1a, 59.8M edges / 2.05G
     * wedges: wedge 333 s vs SMJ fallback 39 s steady-state; every
     * fallback moves O(Σ outdeg²) bytes and the 2e9-row skinny
     * shuffle has the worst constants). What the probe DID move was
@@ -2764,7 +2680,7 @@ object Relational {
     * schema) and |V| literal (q75 passes `GraphArtifact.wdeg`/`nv`) or
     * the plan re-aggregates the 2·|E|-row bidirectional weighted list
     * per run and pays a 1-row broadcast cross-join for |V| (measured
-    * 3.2 s → 1.1 s at sf0.1, GraphLoopProbe). The rank arithmetic is
+    * 3.2 s → 1.1 s at sf0.1, GraphLoopProbe@059cb1a). The rank arithmetic is
     * IEEE-identical either way (long wd, long |V|).
     * Output: (`v`, `s` = grid-summed inbound mass, `rank`).
     */
@@ -2827,8 +2743,9 @@ object Relational {
     * This is the GENERIC, lazy form for arbitrary edge lists. The
     * registered q74 runs on the prepared [[GraphLoop]] instead
     * ([[pagerankIterateLoop]]) — identical per-row arithmetic
-    * (verified exact, zero per-row diffs in GraphLoopProbe2/3), minus
-    * the loop-shaped overheads the [[GraphLoop]] scaladoc itemizes.
+    * (verified exact, zero per-row diffs in GraphLoopProbe2@059cb1a
+    * and GraphLoopProbe3@059cb1a), minus the loop-shaped overheads the
+    * [[GraphLoop]] scaladoc itemizes.
     *
     * Cross-engine exactness, per iteration: each edge contribution is
     * snapped to an integer grid (round(rank·10¹²/deg) as a long), the
@@ -2880,7 +2797,7 @@ object Relational {
   /** [[pagerankStep]] on a prepared [[GraphLoop]] — the registered
     * q72 path. Identical output (`v`, `s`, `rank`) and identical
     * grid arithmetic to the generic single step with cached divisors
-    * (s-sums cross-checked exact in GraphLoopProbe3); the prepared
+    * (s-sums cross-checked exact in GraphLoopProbe3@059cb1a); the prepared
     * context supplies the pre-materialized bidirectional list and
     * degree table so the one vertex-keyed join + aggregate plan at
     * graph-sized parallelism is all that runs per query.
@@ -2904,7 +2821,7 @@ object Relational {
   /** [[pagerankIterate]] on a prepared [[GraphLoop]] — the registered
     * q74 path. Same math per row (the grid snap re-synchronizes every
     * round; per-row equality against the generic form verified in
-    * GraphLoopProbe3), but every round's join + aggregate plans inside
+    * GraphLoopProbe3@059cb1a), but every round's join + aggregate plans inside
     * the loop context: clamped parallelism, pre-materialized
     * bidirectional list and degree table, rank side left to AQE's
     * broadcast choice. The k rounds stay one lazy plan — growth is

@@ -362,7 +362,7 @@ object Similarity {
     // of the modern large-scale ANN recipe (IVF routes, PQ scores,
     // rerank exact — s09/[[ivfPqTopK]] runs the full composition).
     // CERTIFIED in-query via [[certifyAnnTopK]]. Floor 2/5: the gate
-    // floor must hold at EVERY fixture scale, and AnnRecallProbe
+    // floor must hold at EVERY fixture scale, and AnnRecallProbe@059cb1a
     // measures 70% (sf0.001) / 80% (sf0.01) / 56% (sf0.1) — the fixed
     // 50-candidate shortlist covers a shrinking corpus fraction as n
     // grows, so sf0.1 dips under the spec's small-sf 3/5 (the
@@ -412,8 +412,8 @@ object Similarity {
     // DedupSimilaritySpec.
     "s07_semantic_survivors" -> ((s, dir) => {
       val pairs = semPairs(s, dir).select(col("id_a"), col("id_b"))
-      // (r16 probe, re-plans tried and REJECTED — S07CertProbe is the
-      // interleaved pinned-heap measurement record: this r15 anti-join
+      // (r16 probe, re-plans tried and REJECTED — S07CertProbe@059cb1a
+      // is the interleaved pinned-heap measurement record: this r15 anti-join
       // shape 1.56 s, a drop-list form with the phantom check as a
       // full_outer join 1.85 s (full outer has no broadcast plan, so
       // the corpus rides a SortMergeJoin exchange + sort), and two

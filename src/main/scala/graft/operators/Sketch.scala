@@ -150,7 +150,7 @@ object Sketch {
   // ONE object-hash aggregate with bounded ≤ k-long partials
   // ([[graft.functions.KmvBottomK]]); bit-identical to the r11
   // distinct+salted-window form at any parallelism (bottom-k of a set
-  // is duplicate/order/partition-independent — KmvProbe measured the
+  // is duplicate/order/partition-independent — KmvProbe@059cb1a measured the
   // window form at ~4× this plan's cost at sf0.1).
   private def bottomKAgg(pairs: DataFrame, grp: Seq[String],
       k: Int): DataFrame = {

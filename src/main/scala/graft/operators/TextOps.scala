@@ -504,7 +504,7 @@ object TextOps {
     // but it REPLACES the second tokenize — a zero-exchange map stage —
     // with a full shuffle of the per-doc bigram relation plus a second
     // exchange into the doc aggregate; measured 1.78 → 2.04 s at sf0.1
-    // (OrderCostProbe, interleaved best-of-3). The two-pass shape
+    // (OrderCostProbe@059cb1a, interleaved best-of-3). The two-pass shape
     // keeps the occurrence stream exchange-free end to end: pass 1
     // partial-aggs into the vocabulary-sized model, pass 2 joins the
     // broadcast model and partial-aggs by doc — tokenize is cheap CPU,
@@ -627,7 +627,7 @@ object TextOps {
   // RangePartitioning's bounds-sampling pass execute the whole
   // projection once BEFORE the shuffle executes it again — the heavy
   // per-row work (native counters, regex, shingling) ran twice per
-  // query (t08 measured 1.2 s → 0.57 s at sf0.1, OrderCostProbe).
+  // query (t08 measured 1.2 s → 0.57 s at sf0.1, OrderCostProbe@059cb1a).
   // Same rows, same total order: the ops are row-wise and
   // order-preserving, doc_id is unique.
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

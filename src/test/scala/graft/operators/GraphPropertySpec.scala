@@ -155,7 +155,7 @@ class GraphPropertySpec extends SparkSuite {
     // case exercises the u-layout flip at a size where the layout
     // actually matters — 30k vertices / ~90k hash-random edges (many
     // components, nontrivial diameter) — and asserts both branches
-    // equal the generic operators. GraphLoopProbe5 carries the
+    // equal the generic operators. GraphLoopProbe5@059cb1a carries the
     // million-vertex timing A/B; this keeps row-exact parity at the
     // largest size a unit test can afford.
     val nV = 30000L

@@ -533,9 +533,9 @@ class PlanShapeSpec extends SparkSuite {
     // the O(m^1.5) wedge set must stay in-row: common neighbors come
     // from the native sorted_intersect over the adjacency arrays, not
     // a self-join + closing semi-join (the r8 shape this replaced —
-    // 41M shuffled wedge rows for 1.2M edges at sf0.1, TriangleProbe;
+    // 41M shuffled wedge rows for 1.2M edges at sf0.1, TriangleProbe@059cb1a;
     // the r13 native merge scan replaced array_intersect's per-row
-    // hash set, TriangleProbe2)
+    // hash set, TriangleProbe2@059cb1a)
     assert(p.contains("sorted_intersect"),
       s"triangles must intersect adjacency arrays in-row:\n$p")
     assert(!p.contains("LeftSemi"),
@@ -591,7 +591,7 @@ class PlanShapeSpec extends SparkSuite {
       s"expected hash/merge equi-joins for the rank+degree attach:\n$p")
     // r13: every round's groupBy(v) runs on the v-partitioned cached
     // biPlus under a hinted broadcast join — ZERO shuffle exchanges in
-    // the whole k-round plan (GraphLoopProbe4; also pins that the
+    // the whole k-round plan (GraphLoopProbe4@059cb1a; also pins that the
     // ordering collapses rather than range-shuffling |V| rows). Losing
     // either the layout or the hint re-inserts one per round.
     assert(!p.contains("Exchange hashpartitioning"),

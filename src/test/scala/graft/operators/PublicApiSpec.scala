@@ -1190,15 +1190,16 @@ class PublicApiSpec extends SparkSuite {
       ).size
     // LOW cardinality (declared): hints present — the q55 fast shape
     val lo = Relational.exactPercentileSelect(
-      df.filter(col("g") < 3), "g", "v",
-      Seq("p50" -> 0.5, "p90" -> 0.9), keyCount = Some(3L))
+      df.filter(col("g") < 3), "g",
+      Seq("v" -> Seq("p50" -> 0.5, "p90" -> 0.9)), keyCount = Some(3L))
     // analyzed (not optimized) plan keeps UnresolvedHint/ResolvedHint
     assert(lo.queryExecution.analyzed.toString.contains("Hint"),
       "low-cardinality path lost its broadcast hints")
     // HIGH cardinality (declared above the 4M-row side-table bound):
     // NO broadcast hints — the joins stay key-partitioned, driver-safe
-    val hi = Relational.exactPercentileSelect(df, "g", "v",
-      Seq("p50" -> 0.5, "p90" -> 0.9), keyCount = Some(5L * 1000 * 1000))
+    val hi = Relational.exactPercentileSelect(df, "g",
+      Seq("v" -> Seq("p50" -> 0.5, "p90" -> 0.9)),
+      keyCount = Some(5L * 1000 * 1000))
     assert(!hi.queryExecution.analyzed.toString.contains("Hint"),
       "high-cardinality path still hints a |keys|-row broadcast")
     // and the unhinted path is still EXACT (spot-check 3 keys + count)
@@ -1211,8 +1212,8 @@ class PublicApiSpec extends SparkSuite {
     assert(hi.count() == 50000L)
     // undeclared cardinality: the sizing pass counts the groups itself
     // and still lands on the safe shape at 50k·6 ≤ 4M → hinted
-    val auto = Relational.exactPercentileSelect(df, "g", "v",
-      Seq("p50" -> 0.5))
+    val auto = Relational.exactPercentileSelect(df, "g",
+      Seq("v" -> Seq("p50" -> 0.5)))
     assert(auto.queryExecution.analyzed.toString.contains("Hint"))
   }
 

@@ -148,20 +148,22 @@ class SketchAndFormatSpec extends SparkSuite {
     import spark.implicits._
     // Edge cases the fixture can't produce: a constant-valued key, a
     // single-row key, a two-row key (pure interpolation), heavy
-    // duplicate concentration (most mass in ONE bucket), and a spread
-    // key — with buckets=8 so multiple ranks land in one bucket and
-    // bucket boundaries actually bite.
+    // duplicate concentration (most mass in ONE bucket), a spread
+    // key, and a key holding a NaN (its max and bucket width are NaN;
+    // both forms order NaN last) — with buckets=8 so multiple ranks
+    // land in one bucket and bucket boundaries actually bite.
     val rows =
       Seq.fill(500)(("const", 42.5)) ++
       Seq(("one", 7.0)) ++
       Seq(("two", 1.0), ("two", 2.0)) ++
       (1 to 400).map(i => ("heavy", if (i <= 380) 5.0 else i.toDouble)) ++
-      (1 to 997).map(i => ("spread", (i * 37 % 1009).toDouble))
+      (1 to 997).map(i => ("spread", (i * 37 % 1009).toDouble)) ++
+      Seq(("nan", 1.0), ("nan", 2.0), ("nan", Double.NaN), ("nan", 4.0))
     val df = rows.toDF("k", "v")
     val ps = Seq("p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99)
 
     val sel = graft.operators.Relational
-      .exactPercentileSelect(df, "k", "v", ps, buckets = 8)
+      .exactPercentileSelect(df, "k", Seq("v" -> ps), buckets = 8)
       .orderBy("k").collect().map(_.toSeq)
 
     // the pre-r13 rank-window reference, inline
@@ -183,11 +185,14 @@ class SketchAndFormatSpec extends SparkSuite {
     }
     val ref = g.select(selCols: _*).orderBy("k").collect().map(_.toSeq)
 
-    assert(ref.nonEmpty && sel.toSeq == ref.toSeq,
+    // NaN-aware: boxed NaN == NaN is false, so compare a NaN marker
+    def nanSafe(rows: Array[Seq[Any]]): Seq[Seq[Any]] =
+      rows.toSeq.map(_.map { case d: Double if d.isNaN => "NaN"; case x => x })
+    assert(ref.nonEmpty && nanSafe(sel) == nanSafe(ref),
       s"selection != window form:\nsel=${sel.toSeq}\nref=${ref.toSeq}")
   }
 
-  test("exactPercentileSelectMulti == percentile-buffer aggregate on adversarial groups") {
+  test("exactPercentileSelect == percentile-buffer aggregate on adversarial groups") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     // The r17 q31 re-plan: the stacked multi-column selection must
@@ -205,7 +210,7 @@ class SketchAndFormatSpec extends SparkSuite {
       (1 to 997).map(i =>
         ("spread", (i * 37 % 1009).toDouble, (i * 53 % 89).toDouble))
     val df = rows.toDF("k", "v1", "v2")
-    val sel = graft.operators.Relational.exactPercentileSelectMulti(
+    val sel = graft.operators.Relational.exactPercentileSelect(
         df, "k",
         Seq("v1" -> Seq("a50" -> 0.5, "a90" -> 0.9),
           "v2" -> Seq("b25" -> 0.25, "b99" -> 0.99)),
