@@ -74,28 +74,4 @@ object SparkEntry {
     */
   def certRawTwins: Map[String, (SparkSession, String) => DataFrame] =
     operators.Relational.rawTwins ++ operators.Similarity.rawTwins
-
-  /** The rows-only policy, machine-readable: every registered query
-    * WITHOUT an [[oracleSql]] entry maps to (a) the named ScalaTest
-    * invariant that stands in for the hash gate and (b) its
-    * hash-checked deterministic twin query where one exists (""
-    * otherwise). [[Verify]] emits this as `rows_only.json` next to
-    * `oracle_sql.json` and fails loudly if the two drift, so the
-    * correctness gate can mechanically confirm that no query is
-    * merely rows-counted without a named green test backing it.
-    */
-  def rowsOnlyInvariants: Map[String, (String, String)] = Map.empty
-  // r12: EMPTY — every registered query now carries an oracle. The
-  // HLL sketches (q27/q37/q65) and the ANN recall family
-  // (s04/s06/s07/s08/s09) graduated via in-query certification: the
-  // registered outputs carry exact cross-engine references plus
-  // deterministic accuracy/structure flags that the DuckDB oracle
-  // bound-checks as literal TRUEs, so an out-of-tolerance sketch or a
-  // collapsed-recall ANN path hash-fails the driver gate directly.
-  // The raw estimate/top-k/pair surfaces remain available through the
-  // public operators and the hash-exact deterministic twins
-  // (q27b/q37b/q65b, s04b–s09b); the tighter measured bounds stay
-  // asserted in SketchAndFormatSpec / DedupSimilaritySpec. The
-  // drift-check machinery stays: Verify still fails loudly if a query
-  // is ever registered without an oracle and without an entry here.
 }

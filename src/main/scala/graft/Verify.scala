@@ -92,20 +92,7 @@ object Verify {
         .map { case (f, v) => s"${q(f)}: ${q(v)}" }.mkString("{", ",", "}")}"
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_ext.json"), extJson)
-    // Machine-readable rows-only policy: every non-oracled query's named
-    // stand-in invariant (+ hash-checked twin), so the gate can confirm
-    // no query is merely rows-counted. Drift between the declared map
-    // and the actual (queries ∖ oracleSql) set is a LOUD failure.
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    val declared = SparkEntry.rowsOnlyInvariants
-    val drift = (rowsOnly -- declared.keySet) ++ (declared.keySet -- rowsOnly)
-    drift.foreach(n => System.err.println(
-      s"[verify] rows-only policy drift: $n"))
-    val roJson = declared.toSeq.sortBy(_._1).map { case (k, (inv, twin)) =>
-      s"${q(k)}: {${q("invariant")}: ${q(inv)}, ${q("twin")}: ${q(twin)}}"
-    }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/rows_only.json"), roJson)
-    println(s"""{"verify_failures": ${errors.size}, "rows_only": ${declared.size}, "rows_only_drift": ${drift.size}}""")
+    println(s"""{"verify_failures": ${errors.size}}""")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -99,22 +98,5 @@ object AlphaTokens {
       i += 1
     }
     new GenericArrayData(out.toArray)
-  }
-
-  /** Register `alpha_tokens` in the session's function registry
-    * (idempotent and quiet, like [[VectorDot.register]]).
-    */
-  def register(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("alpha_tokens")
-    if (!s.sessionState.functionRegistry.functionExists(id)) {
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "alpha_tokens",
-        exprs => {
-          require(exprs.length == 2,
-            s"alpha_tokens expects 2 arguments, got ${exprs.length}")
-          AlphaTokens(exprs(0), exprs(1))
-        },
-        "built-in")
-    }
   }
 }

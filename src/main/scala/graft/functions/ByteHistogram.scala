@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -54,17 +53,4 @@ case class ByteHistogram(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object ByteHistogram {
-  /** Register `byte_histogram` (idempotent and quiet, like
-    * [[VectorDot.register]]).
-    */
-  def register(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("byte_histogram")
-    if (!s.sessionState.functionRegistry.functionExists(id)) {
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "byte_histogram", exprs => ByteHistogram(exprs.head), "built-in")
-    }
-  }
 }

@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session-extension entry point — the idiomatic way to ship the
   * engine's custom Catalyst functions to every session in a cluster:
@@ -13,85 +13,67 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * SparkSession.builder().withExtensions(new GraftExtensions)
   * }}}
   *
-  * Queries can also call [[VectorDot.register]] per-session; this class
-  * makes the functions available cluster-wide without user code.
+  * Sessions built without it get the same functions from
+  * [[GraftExtensions.register]], which every query builder calls.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  /** Wrong-arity SQL calls must fail as analysis errors with the
-    * function's name, not as IndexOutOfBoundsException from the
-    * builder's exprs(i) (the r12-advice guard class, applied to the
-    * extension path too).
-    */
-  private def arity(name: String, n: Int,
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    require(exprs.length == n,
-      s"$name expects $n arguments, got ${exprs.length}")
-    exprs
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(f =>
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getCanonicalName, f.name), f.build _)))
+}
+
+object GraftExtensions {
+  /** One SQL function: `make` sees exactly `arity` arguments. */
+  case class SqlFunction(name: String, cls: Class[_ <: Expression], arity: Int,
+      make: Seq[Expression] => Expression) {
+    /** The builder both registration paths install. A wrong-arity SQL
+      * call fails naming the function, instead of dropping extra
+      * arguments or throwing IndexOutOfBoundsException from `make`.
+      */
+    def build(exprs: Seq[Expression]): Expression = {
+      require(exprs.length == arity,
+        s"$name expects $arity arguments, got ${exprs.length}")
+      make(exprs)
+    }
   }
 
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("vector_dot"),
-      new ExpressionInfo(classOf[VectorDot].getCanonicalName, "vector_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VectorDot(arity("vector_dot", 2, exprs)(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("vector_cosine"),
-      new ExpressionInfo(classOf[VectorCosine].getCanonicalName, "vector_cosine"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VectorCosine(arity("vector_cosine", 2, exprs)(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("byte_histogram"),
-      new ExpressionInfo(classOf[ByteHistogram].getCanonicalName, "byte_histogram"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ByteHistogram(arity("byte_histogram", 1, exprs).head)))
-    e.injectFunction((
-      FunctionIdentifier("quiet_runs"),
-      new ExpressionInfo(classOf[QuietRuns].getCanonicalName, "quiet_runs"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        QuietRuns(arity("quiet_runs", 3, exprs)(0), exprs(1), exprs(2))))
-    e.injectFunction((
-      FunctionIdentifier("resize_grid"),
-      new ExpressionInfo(classOf[ResizeGrid].getCanonicalName, "resize_grid"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ResizeGrid(arity("resize_grid", 4, exprs)(0), exprs(1), exprs(2), exprs(3))))
-    e.injectFunction((
-      FunctionIdentifier("prefix_distinct"),
-      new ExpressionInfo(classOf[PrefixDistinct].getCanonicalName, "prefix_distinct"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PrefixDistinct(arity("prefix_distinct", 3, exprs)(0), exprs(1), exprs(2))))
-    e.injectFunction((
-      FunctionIdentifier("char_class_count"),
-      new ExpressionInfo(classOf[CharClassCount].getCanonicalName, "char_class_count"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CharClassCount(arity("char_class_count", 2, exprs)(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("word_list_count"),
-      new ExpressionInfo(classOf[WordListCount].getCanonicalName, "word_list_count"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WordListCount(arity("word_list_count", 2, exprs)(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("alpha_tokens"),
-      new ExpressionInfo(classOf[AlphaTokens].getCanonicalName, "alpha_tokens"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        AlphaTokens(arity("alpha_tokens", 2, exprs)(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("sorted_intersect"),
-      new ExpressionInfo(classOf[SortedIntersect].getCanonicalName, "sorted_intersect"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SortedIntersect(arity("sorted_intersect", 2, exprs)(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("grouped_prefix_distinct"),
-      new ExpressionInfo(classOf[GroupedPrefixDistinct].getCanonicalName,
-        "grouped_prefix_distinct"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GroupedPrefixDistinct(arity("grouped_prefix_distinct", 4, exprs)(0),
-          exprs(1), exprs(2), exprs(3))))
-    e.injectFunction((
-      FunctionIdentifier("kmv_bottomk"),
-      new ExpressionInfo(classOf[KmvBottomK].getCanonicalName, "kmv_bottomk"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        KmvBottomK.fromExprs(exprs)))
+  /** graft's SQL functions, declared once for both paths. */
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("vector_dot", classOf[VectorDot], 2,
+      a => VectorDot(a(0), a(1))),
+    SqlFunction("vector_cosine", classOf[VectorCosine], 2,
+      a => VectorCosine(a(0), a(1))),
+    SqlFunction("byte_histogram", classOf[ByteHistogram], 1,
+      a => ByteHistogram(a(0))),
+    SqlFunction("quiet_runs", classOf[QuietRuns], 3,
+      a => QuietRuns(a(0), a(1), a(2))),
+    SqlFunction("resize_grid", classOf[ResizeGrid], 4,
+      a => ResizeGrid(a(0), a(1), a(2), a(3))),
+    SqlFunction("prefix_distinct", classOf[PrefixDistinct], 3,
+      a => PrefixDistinct(a(0), a(1), a(2))),
+    SqlFunction("grouped_prefix_distinct", classOf[GroupedPrefixDistinct], 4,
+      a => GroupedPrefixDistinct(a(0), a(1), a(2), a(3))),
+    SqlFunction("char_class_count", classOf[CharClassCount], 2,
+      a => CharClassCount(a(0), a(1))),
+    SqlFunction("word_list_count", classOf[WordListCount], 2,
+      a => WordListCount(a(0), a(1))),
+    SqlFunction("alpha_tokens", classOf[AlphaTokens], 2,
+      a => AlphaTokens(a(0), a(1))),
+    SqlFunction("sorted_intersect", classOf[SortedIntersect], 2,
+      a => SortedIntersect(a(0), a(1))),
+    SqlFunction("kmv_bottomk", classOf[KmvBottomK], 2,
+      KmvBottomK.fromExprs))
+
+  /** Register every function the session lacks, so `expr(...)` and SQL
+    * can call them. Idempotent AND quiet: replacing an existing entry
+    * logs a registry WARN per call, and query builders call this once
+    * per query construction.
+    */
+  def register(s: SparkSession): Unit = {
+    val registry = s.sessionState.functionRegistry
+    functions.foreach(f =>
+      if (!registry.functionExists(FunctionIdentifier(f.name)))
+        registry.createOrReplaceTempFunction(f.name, f.build, "built-in"))
   }
 }

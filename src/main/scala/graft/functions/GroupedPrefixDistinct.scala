@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
@@ -126,23 +125,4 @@ case class GroupedPrefixDistinct(first: Expression, second: Expression,
       newFourth: Expression): Expression =
     copy(first = newFirst, second = newSecond, third = newThird,
       fourth = newFourth)
-}
-
-object GroupedPrefixDistinct {
-  /** Register `grouped_prefix_distinct` in the session's function
-    * registry. Idempotent and quiet, like [[PrefixDistinct.register]].
-    */
-  def register(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("grouped_prefix_distinct")
-    if (!s.sessionState.functionRegistry.functionExists(id)) {
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "grouped_prefix_distinct",
-        exprs => {
-          require(exprs.length == 4,
-            s"grouped_prefix_distinct expects 4 arguments, got ${exprs.length}")
-          GroupedPrefixDistinct(exprs(0), exprs(1), exprs(2), exprs(3))
-        },
-        "built-in")
-    }
-  }
 }

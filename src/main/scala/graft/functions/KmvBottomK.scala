@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -114,12 +113,10 @@ case class KmvBottomK(child: Expression, k: Int,
 }
 
 object KmvBottomK {
-  /** Shared builder for the per-session registry and
-    * [[GraftExtensions]]: arity-checks and extracts the literal k.
+  /** SQL builder for `kmv_bottomk(hash, k)` ([[GraftExtensions]]
+    * checks the arity): `k` must be an integer literal.
     */
-  def fromExprs(exprs: Seq[Expression]): KmvBottomK = {
-    if (exprs.length != 2) throw new IllegalArgumentException(
-      s"kmv_bottomk(hash, k) takes exactly 2 arguments, got ${exprs.length}")
+  def fromExprs(exprs: Seq[Expression]): KmvBottomK =
     KmvBottomK(exprs(0), exprs(1) match {
       case Literal(i: Int, _) => i
       case Literal(l: Long, _) => l.toInt
@@ -128,16 +125,4 @@ object KmvBottomK {
       case other => throw new IllegalArgumentException(
         s"kmv_bottomk: k must be an integer literal, got $other")
     })
-  }
-
-  /** Register `kmv_bottomk(h, k)` (idempotent and quiet, like
-    * [[VectorDot.register]]); `k` must be an integer literal.
-    */
-  def register(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("kmv_bottomk")
-    if (!s.sessionState.functionRegistry.functionExists(id)) {
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "kmv_bottomk", fromExprs, "built-in")
-    }
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -140,19 +139,6 @@ object CharClassCount {
     }
     c
   }
-
-  /** Register `char_class_count` (idempotent, quiet). */
-  def register(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("char_class_count")
-    if (!s.sessionState.functionRegistry.functionExists(id)) {
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "char_class_count", exprs => {
-          require(exprs.length == 2,
-            s"char_class_count expects 2 arguments, got ${exprs.length}")
-          CharClassCount(exprs(0), exprs(1))
-        }, "built-in")
-    }
-  }
 }
 
 /** Native whole-word occurrence counter:
@@ -260,18 +246,5 @@ object WordListCount {
     val arr = e.eval(null).asInstanceOf[ArrayData]
     (0 until arr.numElements()).map(i =>
       arr.getUTF8String(i))
-  }
-
-  /** Register `word_list_count` (idempotent, quiet). */
-  def register(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("word_list_count")
-    if (!s.sessionState.functionRegistry.functionExists(id)) {
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "word_list_count", exprs => {
-          require(exprs.length == 2,
-            s"word_list_count expects 2 arguments, got ${exprs.length}")
-          WordListCount(exprs(0), exprs(1))
-        }, "built-in")
-    }
   }
 }

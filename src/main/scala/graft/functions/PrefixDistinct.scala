@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
@@ -94,23 +93,4 @@ case class PrefixDistinct(first: Expression, second: Expression,
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): Expression =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object PrefixDistinct {
-  /** Register `prefix_distinct` in the session's function registry.
-    * Idempotent and quiet, like [[VectorDot.register]].
-    */
-  def register(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("prefix_distinct")
-    if (!s.sessionState.functionRegistry.functionExists(id)) {
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "prefix_distinct",
-        exprs => {
-          require(exprs.length == 3,
-            s"prefix_distinct expects 3 arguments, got ${exprs.length}")
-          PrefixDistinct(exprs(0), exprs(1), exprs(2))
-        },
-        "built-in")
-    }
-  }
 }

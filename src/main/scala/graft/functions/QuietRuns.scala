@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -89,17 +88,4 @@ case class QuietRuns(content: Expression, threshold: Expression,
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): Expression =
     copy(content = newFirst, threshold = newSecond, minRun = newThird)
-}
-
-object QuietRuns {
-  /** Register `quiet_runs` (idempotent and quiet, like
-    * [[VectorDot.register]]).
-    */
-  def register(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("quiet_runs")
-    if (!s.sessionState.functionRegistry.functionExists(id)) {
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "quiet_runs", exprs => QuietRuns(exprs(0), exprs(1), exprs(2)), "built-in")
-    }
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
@@ -90,18 +89,4 @@ case class ResizeGrid(content: Expression, srcWidth: Expression,
       newFourth: Expression): Expression =
     copy(content = newFirst, srcWidth = newSecond, outW = newThird,
       outH = newFourth)
-}
-
-object ResizeGrid {
-  /** Register `resize_grid` (idempotent and quiet, like
-    * [[VectorDot.register]]).
-    */
-  def register(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("resize_grid")
-    if (!s.sessionState.functionRegistry.functionExists(id)) {
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "resize_grid",
-        exprs => ResizeGrid(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    }
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
@@ -117,23 +116,4 @@ case class SortedIntersect(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object SortedIntersect {
-  /** Register `sorted_intersect` in the session's function registry
-    * (idempotent and quiet, like [[VectorDot.register]]).
-    */
-  def register(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("sorted_intersect")
-    if (!s.sessionState.functionRegistry.functionExists(id)) {
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "sorted_intersect",
-        exprs => {
-          require(exprs.length == 2,
-            s"sorted_intersect expects 2 arguments, got ${exprs.length}")
-          SortedIntersect(exprs(0), exprs(1))
-        },
-        "built-in")
-    }
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -62,19 +61,4 @@ case class VectorDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object VectorDot {
-  /** Register `vector_dot` in the session's function registry so it is
-    * usable from `expr(...)` / SQL. Idempotent AND quiet: replacing an
-    * existing entry logs a registry WARN per call, so skip when already
-    * registered (query builders call this once per query construction).
-    */
-  def register(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("vector_dot")
-    if (!s.sessionState.functionRegistry.functionExists(id)) {
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vector_dot", exprs => VectorDot(exprs(0), exprs(1)), "built-in")
-    }
-  }
 }

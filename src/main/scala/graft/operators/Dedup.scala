@@ -428,8 +428,7 @@ object Dedup {
     * ~5.6M nodes. The r15 CcProbe@059cb1a A/B on the s07b-shaped sf5 survivor
     * graph (100k nodes / 24M directed edges, clique components)
     * measured the hinted loop against the stats-blind shuffle plan —
-    * see SCALE.md. Override per caller session via
-    * `graft.cc.labelBroadcastMaxBytes`.
+    * see SCALE.md.
     */
   private val CcLabelBroadcastMaxBytes = 256L << 20
 
@@ -512,13 +511,9 @@ object Dedup {
       // label side and the only per-round edge-width work is an
       // in-memory scan + map-side partial min. Above the bound (the
       // 100 TB regime: billions of NODES, not just edges) the hint is
-      // skipped and the loop shuffles as before. Bound overridable per
-      // caller session (testing/ops knob, the graft.loop.* pattern).
+      // skipped and the loop shuffles as before.
       val nNodes = labels.count()
-      val bcMax = pairs.sparkSession.conf
-        .get("graft.cc.labelBroadcastMaxBytes",
-          CcLabelBroadcastMaxBytes.toString).toLong
-      val hintLabels = 48L * nNodes <= bcMax
+      val hintLabels = 48L * nNodes <= CcLabelBroadcastMaxBytes
       def hinted(df: DataFrame): DataFrame =
         if (hintLabels) broadcast(df) else df
       // Min-label propagation only ever DECREASES labels, so the label
@@ -793,7 +788,7 @@ object Dedup {
     // and carrying duplicates through them would out-cost the
     // distinct, so the dedup-first shuffle plan stands.
     val bcast = n * (48L + 8L * NumPerms) <= bcMax
-    graft.functions.GroupedPrefixDistinct.register(sig.sparkSession)
+    graft.functions.GraftExtensions.register(sig.sparkSession)
     val candPairs = bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.doc_id") < col("b.doc_id"))

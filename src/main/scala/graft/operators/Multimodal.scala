@@ -108,7 +108,7 @@ object Multimodal {
   def resizeNearest(df: DataFrame, srcWidth: Int, outW: Int, outH: Int,
       idCol: String = "doc_id", contentCol: String = "content"): DataFrame = {
     require(srcWidth > 0 && outW > 0 && outH > 0, "dims must be positive")
-    graft.functions.ResizeGrid.register(df.sparkSession)
+    graft.functions.GraftExtensions.register(df.sparkSession)
     df.select(col(idCol).as("doc_id"), col(contentCol).as("content"))
       .withColumn("src_h",
         expr(s"CAST(octet_length(content) DIV $srcWidth AS INT)"))
@@ -235,7 +235,7 @@ object Multimodal {
     // remainder is the binary scan itself). Folding the
     // 256-element histogram with HOFs is fine — the repo's HOF pitfall
     // is exploding OVER a lambda array, not folding a small one.
-    graft.functions.ByteHistogram.register(df.sparkSession)
+    graft.functions.GraftExtensions.register(df.sparkSession)
     df.select(col(idCol).as("doc_id"), col(contentCol).as("content"))
       .filter(octet_length(col("content")) > 0)
       .withColumn("__hist", expr("byte_histogram(content)"))
@@ -324,7 +324,7 @@ object Multimodal {
     // call + struct accumulator + 1-byte substring slice PER BYTE —
     // measured 1.4-1.7 s vs 0.20-0.24 s at sf0.1, same run arithmetic
     // and hashes).
-    graft.functions.QuietRuns.register(df.sparkSession)
+    graft.functions.GraftExtensions.register(df.sparkSession)
     df.select(col(idCol).as("doc_id"), col(contentCol).as("content"))
       .withColumn("__st", expr(s"quiet_runs(content, $threshold, $minRun)"))
       .select(col("doc_id"),

@@ -198,19 +198,16 @@ object Relational {
       .get("graft.loop.vertexBroadcastMaxBytes",
         LoopVertexBroadcastMaxBytes.toString).toLong
     val vMode = 48L * nv <= maxBytes
-    // r17: in vMode the loop session runs with AQE OFF (overridable
-    // via owner conf graft.loop.aqe). The v-layout plan is exactly
-    // the one AQE cannot improve — the per-round aggregate is
-    // exchange-free by cached layout and every |V|-row join is
-    // already hinted broadcast, so there is NO exchange boundary to
-    // coalesce or re-strategize — while AQE wraps each of the k
-    // chained broadcast builds in its own re-planning stage
+    // r17: in vMode the loop session runs with AQE OFF. The v-layout
+    // plan is exactly the one AQE cannot improve — the per-round
+    // aggregate is exchange-free by cached layout and every |V|-row
+    // join is already hinted broadcast, so there is NO exchange
+    // boundary to coalesce or re-strategize — while AQE wraps each of
+    // the k chained broadcast builds in its own re-planning stage
     // (measured: JobCountProbe/OPTIMIZATION_r17.md). The u-layout
     // (giant graphs) KEEPS AQE: its unhinted joins rely on runtime
     // size-based strategy choice.
-    val aqe = edges.sparkSession.conf.get("graft.loop.aqe",
-      if (vMode) "false" else "true")
-    s.conf.set("spark.sql.adaptive.enabled", aqe)
+    s.conf.set("spark.sql.adaptive.enabled", (!vMode).toString)
     def cross(df: DataFrame) = s.createDataFrame(df.rdd, df.schema)
     // a partial failure must not leak persisted loop tables with no
     // release handle (r10 ADVICE) — track and unpersist before rethrow
@@ -986,8 +983,8 @@ object Relational {
     // oracle (unchanged) mirrors the SAME rank/interpolation
     // arithmetic in the same operation order (not quantile_cont,
     // whose internal lerp order is the engine's own), so the result
-    // is hash-exact; SketchAndFormatSpec asserts q55 ≡ q31 on the
-    // shared percentiles, each of which matches its own oracle.
+    // is hash-exact; SketchAndFormatSpec checks q55's and q31's
+    // percentiles against Spark's exact `percentile` aggregate.
     "q55_percentile_rank" -> ((s, dir) =>
       exactPercentileSelect(
         lineitem(s, dir), "l_returnflag",
@@ -2603,7 +2600,7 @@ object Relational {
     */
   private def triangleInstances(oriented: DataFrame,
       adjOpt: Option[DataFrame]): DataFrame = {
-    graft.functions.SortedIntersect.register(oriented.sparkSession)
+    graft.functions.GraftExtensions.register(oriented.sparkSession)
     val adj = adjOpt.getOrElse(
       oriented.groupBy(col("src"))
         .agg(array_sort(collect_list(col("dst"))).as("ns")))

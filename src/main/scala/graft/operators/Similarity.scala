@@ -26,8 +26,7 @@ object Similarity {
   private def dot(a: String, b: String): Column = expr(s"vector_dot($a, $b)")
 
   private def vecs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorDot.register(s)
-    graft.functions.PrefixDistinct.register(s)
+    graft.functions.GraftExtensions.register(s)
     embeddings(s, dir).select(col("vec_id"), col("label"),
       col("embedding").cast("array<double>").as("v"))
   }
@@ -674,13 +673,8 @@ object Similarity {
     * the shape falls back to the shuffle plan.
     */
   private val VecSideBroadcastMaxBytes = 256L << 20
-  private def vecHint(n: Long)(df: DataFrame): DataFrame = {
-    // bound overridable per session (testing/ops knob, graft.* pattern)
-    val bcMax = df.sparkSession.conf
-      .get("graft.sim.vecBroadcastMaxBytes",
-        VecSideBroadcastMaxBytes.toString).toLong
-    if (n * (48L + 8L * Dim) <= bcMax) broadcast(df) else df
-  }
+  private def vecHint(n: Long)(df: DataFrame): DataFrame =
+    if (n * (48L + 8L * Dim) <= VecSideBroadcastMaxBytes) broadcast(df) else df
 
   /** The shared s03/s03c pair pipeline over a prebuilt LSH bucket
     * table: narrow bucket self-join → in-row first-collision dedup →
@@ -718,8 +712,7 @@ object Similarity {
     */
   private def lshBuckets(e: DataFrame,
       planes: Seq[Seq[Double]], bitsPerTable: Int): DataFrame = {
-    graft.functions.VectorDot.register(e.sparkSession)
-    graft.functions.PrefixDistinct.register(e.sparkSession)
+    graft.functions.GraftExtensions.register(e.sparkSession)
     val nTables = planes.size / bitsPerTable
     e
       .withColumn("planes", typedLit(planes))
@@ -792,7 +785,7 @@ object Similarity {
     require(cells > 0, s"cells must be positive, got $cells")
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    graft.functions.VectorDot.register(emb.sparkSession)
+    graft.functions.GraftExtensions.register(emb.sparkSession)
     val e = emb.select(col(idCol).as("vec_id"),
         col(vecCol).cast("array<double>").as("v"))
       .withColumn("fv", array_to_vector(col("v")))
@@ -891,7 +884,7 @@ object Similarity {
   def ivfTopK(index: IvfIndex, probeIds: DataFrame, k: Int, nProbe: Int = 4,
       idCol: String = "vec_id"): DataFrame = {
     require(nProbe > 0, s"nProbe must be positive, got $nProbe")
-    graft.functions.VectorDot.register(index.assigned.sparkSession)
+    graft.functions.GraftExtensions.register(index.assigned.sparkSession)
     val q = index.assigned
       .join(broadcast(probeIds.select(col(idCol).as("vec_id"))), Seq("vec_id"))
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -924,8 +917,7 @@ object Similarity {
   def cosineTopK(corpus: DataFrame, probes: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       normalized: Boolean = true): DataFrame = {
-    graft.functions.VectorDot.register(corpus.sparkSession)
-    graft.functions.VectorCosine.register(corpus.sparkSession)
+    graft.functions.GraftExtensions.register(corpus.sparkSession)
     val score =
       if (normalized) dot("qv", "cv") else expr("vector_cosine(qv, cv)")
     val c = corpus.select(col(idCol).as("cid"),
@@ -957,12 +949,10 @@ object Similarity {
   def annTopK(corpus: DataFrame, probeIds: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       bkOpt: Option[DataFrame] = None): DataFrame = {
-    // register on THIS session even when bkOpt skips lshBuckets (the
-    // only other registration site) — r13 review: the documented
-    // prebuilt-bucket path otherwise fails analysis on sessions
-    // without GraftExtensions
-    graft.functions.VectorDot.register(corpus.sparkSession)
-    graft.functions.PrefixDistinct.register(corpus.sparkSession)
+    // register on THIS session even when bkOpt skips lshBuckets —
+    // r13 review: the documented prebuilt-bucket path otherwise fails
+    // analysis on sessions without GraftExtensions
+    graft.functions.GraftExtensions.register(corpus.sparkSession)
     val e = corpus.select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("v"))
     val bk = bkOpt.getOrElse(lshBuckets(e, annPlanes, BitsPerTable))
@@ -1016,8 +1006,7 @@ object Similarity {
       nOpt: Option[Long] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // same prebuilt-bucket registration guard as [[annTopK]]
-    graft.functions.VectorDot.register(emb.sparkSession)
-    graft.functions.PrefixDistinct.register(emb.sparkSession)
+    graft.functions.GraftExtensions.register(emb.sparkSession)
     val e = emb.select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("v"))
     val bk = bkOpt.getOrElse(lshBuckets(e, annPlanes, BitsPerTable))
@@ -1068,7 +1057,7 @@ object Similarity {
   private[graft] def cellBlockedPairs(corpus: DataFrame,
       cents: DataFrame, threshold: Double, nAssign: Int): DataFrame = {
     require(nAssign > 0, s"nAssign must be positive, got $nAssign")
-    graft.functions.VectorDot.register(corpus.sparkSession)
+    graft.functions.GraftExtensions.register(corpus.sparkSession)
     val wCell = Window.partitionBy(col("vec_id")).orderBy(col("cdot").desc, col("cell"))
     // Narrow multi-assign (r14): the vector is projected away BEFORE
     // the window's partitionBy-vec_id exchange, so the n·cells scored
@@ -1172,7 +1161,7 @@ object Similarity {
   def pqEncode(emb: DataFrame, codebooks: DataFrame, subs: Int, dim: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(subs > 0 && dim % subs == 0, s"dim $dim not divisible by subs $subs")
-    graft.functions.VectorDot.register(emb.sparkSession)
+    graft.functions.GraftExtensions.register(emb.sparkSession)
     val subDim = dim / subs
     val books = codebooks
       .select(struct(col("sub").cast("int").as("sub"),
@@ -1253,7 +1242,7 @@ object Similarity {
     */
   def pqTopK(index: PqIndex, probes: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.VectorDot.register(index.codes.sparkSession)
+    graft.functions.GraftExtensions.register(index.codes.sparkSession)
     val subDim = index.dim / index.subs
     val q = probes.select(col(idCol).as("qid"),
       col(vecCol).cast("array<double>").as("qv"))
@@ -1320,7 +1309,7 @@ object Similarity {
     */
   private[operators] def ivfRoutedCandidates(ivf: IvfIndex, q: DataFrame,
       nProbe: Int): DataFrame = {
-    graft.functions.VectorDot.register(ivf.assigned.sparkSession)
+    graft.functions.GraftExtensions.register(ivf.assigned.sparkSession)
     val wCell = Window.partitionBy(col("qid")).orderBy(col("cdot").desc, col("cell"))
     val probeCells = q.crossJoin(broadcast(ivf.centroids))
       .withColumn("cdot", dot("qv", "cv"))
@@ -1364,7 +1353,7 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     require(nProbe > 0, s"nProbe must be positive, got $nProbe")
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    graft.functions.VectorDot.register(ivf.assigned.sparkSession)
+    graft.functions.GraftExtensions.register(ivf.assigned.sparkSession)
     val subDim = pq.dim / pq.subs
     val q = probes.select(col(idCol).as("qid"),
       col(vecCol).cast("array<double>").as("qv"))
@@ -1440,7 +1429,7 @@ object Similarity {
   def kmeansAssign(emb: DataFrame, centroids: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       cidCol: String = "cid"): DataFrame = {
-    graft.functions.VectorDot.register(emb.sparkSession)
+    graft.functions.GraftExtensions.register(emb.sparkSession)
     val cents = centroids
       .select(struct(col(cidCol).cast("long").as("cid"),
         col(vecCol).cast("array<double>").as("cv")).as("c"))

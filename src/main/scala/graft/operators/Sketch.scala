@@ -154,7 +154,7 @@ object Sketch {
   // window form at ~4× this plan's cost at sf0.1).
   private def bottomKAgg(pairs: DataFrame, grp: Seq[String],
       k: Int): DataFrame = {
-    graft.functions.KmvBottomK.register(pairs.sparkSession)
+    graft.functions.GraftExtensions.register(pairs.sparkSession)
     pairs.groupBy(grp.map(col): _*)
       .agg(expr(s"kmv_bottomk(h, $k)").as("ks"))
   }

@@ -40,14 +40,6 @@ object TextOps {
   private def normalized(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
 
-  /** Register the native text counters (idempotent) on the input's
-    * session so the expr(...) spellings below resolve.
-    */
-  private def registerTextCounters(docs: DataFrame): Unit = {
-    graft.functions.CharClassCount.register(docs.sparkSession)
-    graft.functions.WordListCount.register(docs.sparkSession)
-  }
-
   // The Gopher quality-filter stopword set (Rae et al. 2021, §A1.1):
   // a document must contain at least two of these to pass.
   private val GopherStops =
@@ -58,7 +50,7 @@ object TextOps {
     */
   def tokenStats(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    registerTextCounters(docs)
+    graft.functions.GraftExtensions.register(docs.sparkSession)
     // Native single-pass counters (CharClassCount) instead of
     // size(regexp_extract_all(...)): the regex engine materialized
     // every match as a string just to count it — the whole cost of
@@ -85,7 +77,7 @@ object TextOps {
     */
   def qualityScore(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    registerTextCounters(docs)
+    graft.functions.GraftExtensions.register(docs.sparkSession)
     // Native counters for the two regex hot paths (see [[tokenStats]]
     // and NativeTextCounts): stop_hits' \b(...)\b alternation is a
     // whole-word count over maximal \w runs (WordListCount), and
@@ -114,7 +106,7 @@ object TextOps {
     * callers keep their own id/metadata columns without a re-join.
     */
   def languageId(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    registerTextCounters(docs)
+    graft.functions.GraftExtensions.register(docs.sparkSession)
     // The four alphabetic marker sets are whole-word counts (native
     // WordListCount ≡ their \b(...)\b regexes — see NativeTextCounts);
     // zh's single-CJK-char alternation has no \b and keeps the regex.
@@ -175,7 +167,7 @@ object TextOps {
   def tfidfTopTerms(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.AlphaTokens.register(docs.sparkSession)
+    graft.functions.GraftExtensions.register(docs.sparkSession)
     val base = normalized(docs, idCol, textCol)
     // native byte-scan tokenizer over the PRE-LOWERED text ≡ the
     // oracle's regexp_extract_all(lower(text), '[a-z]+') + length > 3

@@ -5,42 +5,20 @@ import org.apache.spark.sql.{ForeachWriter, Row}
 /** Write-back side: a ForeachWriter pushing rows into a Kinesis-style
   * stream (the producer twin of the source — the reference library is
   * consume-only, so this extends its surface the way a Spark user
-  * expects: `df.writeStream.foreach(new KinesisSink(...)).start()`).
+  * expects: `df.writeStream.foreach(new KinesisBatchSink(...)).start()`).
   *
   * Rows need `data: binary` and `partitionKey: string` columns; the
-  * client routes each record to a shard by partition key (PutRecord
-  * semantics). Delivery is at-least-once, per Spark's foreach
-  * contract.
-  */
-class KinesisSink(streamName: String, clientName: String)
-  extends ForeachWriter[Row] {
-
-  @transient private var client: KinesisLikeClient = _
-
-  override def open(partitionId: Long, epochId: Long): Boolean = {
-    client = KinesisRegistry.clients.getOrElse(clientName,
-      throw new IllegalArgumentException(s"no client registered as '$clientName'"))
-    true
-  }
-
-  override def process(row: Row): Unit =
-    client.putRecord(streamName,
-      row.getAs[String]("partitionKey"), row.getAs[Array[Byte]]("data"))
-
-  override def close(errorOrNull: Throwable): Unit = ()
-}
-
-/** The PRODUCER shape that scales: buffer rows and flush them through
-  * the batch `putRecords` RPC (≤500 records or ~`maxBytes` per call —
-  * the AWS PutRecords envelope) instead of one RPC per row. Partial
-  * failures are retried as a SUBSET — succeeded entries are never
-  * resent within an attempt cycle — with bounded backoff; records
-  * still failing after `maxRetries` fail the task, which Spark
-  * retries whole (at-least-once, the same contract as [[KinesisSink]]).
+  * client routes each record to a shard by partition key. Rows are
+  * buffered and flushed through the batch `putRecords` RPC (≤500
+  * records or ~`maxBytes` per call — the AWS PutRecords envelope)
+  * instead of one RPC per row. Partial failures are retried as a
+  * SUBSET — succeeded entries are never resent within an attempt
+  * cycle — with bounded backoff; records still failing after
+  * `maxRetries` fail the task, which Spark retries whole. Delivery is
+  * at-least-once, per Spark's foreach contract.
   *
-  * At 1000 executors this is the difference between
-  * rows/500 and rows RPCs against a 1000-records/s/shard service
-  * limit — [[KinesisSink]] stays as the simple per-row form.
+  * At 1000 executors this is the difference between rows/500 and rows
+  * RPCs against a 1000-records/s/shard service limit.
   */
 class KinesisBatchSink(streamName: String, clientName: String,
     maxBatch: Int = 500, maxBytes: Long = 4L << 20,

@@ -6,8 +6,9 @@ import graft.sources.kinesis._
 import graft.streaming._
 
 /** End-to-end drive of the producer sink + custom-state operator:
-  * memory rows → KinesisSink (putRecord) → fake stream → kinesis-graft
-  * source → flatMapGroupsWithState running totals → memory sink.
+  * memory rows → KinesisBatchSink (putRecords) → fake stream →
+  * kinesis-graft source → flatMapGroupsWithState running totals →
+  * memory sink.
   */
 object StateSinkDemo {
   def main(args: Array[String]): Unit = {
@@ -25,7 +26,7 @@ object StateSinkDemo {
     val memIn = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Array[Byte], String)](spark)
     val wq = memIn.toDF().toDF("data", "partitionKey")
-      .writeStream.foreach(new KinesisSink("rt", "rtc"))
+      .writeStream.foreach(new KinesisBatchSink("rt", "rtc"))
       .trigger(Trigger.ProcessingTime(50)).start()
     memIn.addData(producer.collect().map(r =>
       (r.getAs[Array[Byte]]("data"), r.getAs[String]("partitionKey"))).toSeq: _*)

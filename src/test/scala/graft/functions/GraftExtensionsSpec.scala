@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.util.Try
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -72,6 +74,72 @@ class GraftExtensionsSpec extends AnyFunSuite {
         "SELECT kmv_bottomk(h, 3) AS s FROM VALUES (5L),(1L),(9L),(3L) AS t(h)")
         .collect().head.getSeq[Long](0)
       assert(km == Seq(1L, 3L, 5L), s"kmv_bottomk via extensions: $km")
+    } finally {
+      prior.foreach { p =>
+        SparkSession.setDefaultSession(p)
+        SparkSession.setActiveSession(p)
+      }
+    }
+  }
+
+  /** One well-typed call per function in [[GraftExtensions.functions]]:
+    * its SQL arguments, exactly the declared arity of them.
+    */
+  private val calls: Map[String, Seq[String]] = Map(
+    "vector_dot" -> Seq("array(1.0D, 2.0D)", "array(3.0D, 4.0D)"),
+    "vector_cosine" -> Seq("array(3.0D, 4.0D)", "array(4.0D, 3.0D)"),
+    "byte_histogram" -> Seq("CAST('aab' AS BINARY)"),
+    "quiet_runs" -> Seq("unhex('010101FF0102')", "32", "2"),
+    "resize_grid" -> Seq("unhex('FF000180')", "2", "2", "2"),
+    "prefix_distinct" -> Seq("array(1, 2, 3, 4)", "array(9, 2, 3, 9)", "2"),
+    "grouped_prefix_distinct" ->
+      Seq("array(1L, 2L, 3L, 4L)", "array(1L, 9L, 3L, 4L)", "2", "1"),
+    "char_class_count" -> Seq("'a1b c'", "'alpha_runs'"),
+    "word_list_count" -> Seq("'the cat and the hat'", "array('the', 'a')"),
+    "alpha_tokens" -> Seq("'The CAT sat1x'", "3"),
+    "sorted_intersect" -> Seq("array(1L, 3L, 5L)", "array(2L, 3L, 5L)"),
+    "kmv_bottomk" -> Seq("h", "3"))
+
+  test("every table function runs and checks its arity on both registration paths") {
+    assert(calls.keySet == GraftExtensions.functions.map(_.name).toSet,
+      "each function in the table needs a sample call")
+    val prior = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    def detached(b: SparkSession.Builder): SparkSession = {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      b.master("local[2]").appName("ext-spec")
+        .config("spark.ui.enabled", "false").getOrCreate()
+    }
+    def run(s: SparkSession, name: String, args: Seq[String]) =
+      s.sql(s"SELECT $name(${args.mkString(", ")}) AS r " +
+        "FROM VALUES (5L), (1L), (9L), (3L) AS t(h)").collect().toSeq
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).toSeq
+    val wrongArity = scala.collection.mutable.ArrayBuffer.empty[String]
+    try {
+      val perSession = detached(SparkSession.builder())
+      GraftExtensions.register(perSession)
+      val extension = detached(SparkSession.builder().withExtensions(new GraftExtensions))
+      val results = Seq("per-session" -> perSession, "extension" -> extension)
+        .map { case (path, s) =>
+          GraftExtensions.functions.map { f =>
+            val args = calls(f.name)
+            assert(args.length == f.arity, s"${f.name}: sample call arity")
+            val got = run(s, f.name, args)
+            assert(got.nonEmpty && got.forall(!_.isNullAt(0)), s"$path ${f.name}: $got")
+            for (bad <- Seq(args :+ args.last, args.init)) {
+              val outcome = Try(run(s, f.name, bad))
+              if (!outcome.failed.toOption.exists(e => messages(e).exists(_.contains(
+                  s"${f.name} expects ${f.arity} arguments, got ${bad.length}"))))
+                wrongArity += s"$path ${f.name} with ${bad.length} arguments: " +
+                  outcome.toString.take(160)
+            }
+            f.name -> got
+          }
+        }
+      if (wrongArity.nonEmpty) fail(wrongArity.mkString("\n"))
+      assert(results(0) == results(1), "the two paths disagree")
     } finally {
       prior.foreach { p =>
         SparkSession.setDefaultSession(p)

@@ -68,7 +68,7 @@ class KmvBottomKSpec extends SparkSuite {
   }
 
   test("registered builder: wrong arity and non-literal k fail with clear messages") {
-    KmvBottomK.register(spark)
+    GraftExtensions.register(spark)
     val one = intercept[Exception](
       spark.sql("SELECT kmv_bottomk(CAST(1 AS BIGINT)) AS x").collect())
     assert(one.getMessage.contains("2 arguments"),
@@ -93,7 +93,7 @@ class KmvBottomKSpec extends SparkSuite {
 
   test("DataFrame-level: result is partition-count independent and equals brute force") {
     import spark.implicits._
-    KmvBottomK.register(spark)
+    GraftExtensions.register(spark)
     val xs = (1 to 5000).map(i => ((i % 7).toString, (i * 2654435761L) % 100000))
     def run(parts: Int) =
       xs.toDF("g", "h").repartition(parts)

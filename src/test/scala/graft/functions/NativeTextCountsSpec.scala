@@ -14,14 +14,14 @@ class NativeTextCountsSpec extends SparkSuite {
 
   private def ccc(text: String, mode: String): Int = {
     import spark.implicits._
-    CharClassCount.register(spark)
+    GraftExtensions.register(spark)
     Seq(text).toDF("t")
       .select(expr(s"char_class_count(t, '$mode')")).as[Int].head()
   }
 
   private def wlc(text: String, words: Seq[String]): Int = {
     import spark.implicits._
-    WordListCount.register(spark)
+    GraftExtensions.register(spark)
     val arr = words.map(w => s"'$w'").mkString(", ")
     Seq(text).toDF("t")
       .select(expr(s"word_list_count(t, array($arr))")).as[Int].head()
@@ -93,7 +93,7 @@ class NativeTextCountsSpec extends SparkSuite {
   test("alpha_tokens ≡ regexp_extract_all(lower(text), '[a-z]+') + length filter") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    AlphaTokens.register(spark)
+    GraftExtensions.register(spark)
     def at(text: String, minLen: Int): Seq[String] =
       Seq(text).toDF("t")
         .select(expr(s"alpha_tokens(t, $minLen)")).as[Seq[String]].head()
@@ -120,7 +120,7 @@ class NativeTextCountsSpec extends SparkSuite {
   test("alpha_tokens requires pre-lowered input: the KELVIN-SIGN divergence") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    AlphaTokens.register(spark)
+    GraftExtensions.register(spark)
     // U+212A lowercases to ASCII 'k' (and U+0130 to 'i' + combining
     // dot) — the only way a non-ASCII letter enters [a-z]. The regex
     // pipeline lowercases FIRST, so "xKy" is ONE token "xky";
@@ -140,8 +140,7 @@ class NativeTextCountsSpec extends SparkSuite {
 
   test("builder guards: bad mode, non-literal list, non-word word") {
     import spark.implicits._
-    CharClassCount.register(spark)
-    WordListCount.register(spark)
+    GraftExtensions.register(spark)
     val df = Seq("x").toDF("t")
     intercept[Exception] {
       df.select(expr("char_class_count(t, 'bogus')")).collect()

@@ -13,7 +13,7 @@ class SortedIntersectSpec extends SparkSuite {
 
   private def si(a: Seq[Long], b: Seq[Long]): Seq[Long] = {
     import spark.implicits._
-    SortedIntersect.register(spark)
+    GraftExtensions.register(spark)
     Seq((a, b)).toDF("a", "b")
       .select(expr("sorted_intersect(a, b)")).as[Seq[Long]].head()
   }
@@ -38,7 +38,7 @@ class SortedIntersectSpec extends SparkSuite {
 
   test("null array propagates; null vs empty distinguished") {
     import spark.implicits._
-    SortedIntersect.register(spark)
+    GraftExtensions.register(spark)
     val out = Seq((Some(Seq(1L, 2L)), Option.empty[Seq[Long]]),
         (Option.empty[Seq[Long]], Some(Seq(1L, 2L))),
         (Some(Seq.empty[Long]), Some(Seq(1L, 2L))))
@@ -51,7 +51,7 @@ class SortedIntersectSpec extends SparkSuite {
 
   test("type mismatch is an analysis error, not a runtime one") {
     import spark.implicits._
-    SortedIntersect.register(spark)
+    GraftExtensions.register(spark)
     val e = intercept[Exception] {
       Seq(("x", Seq(1L))).toDF("a", "b")
         .select(expr("sorted_intersect(a, b)")).collect()
@@ -62,7 +62,7 @@ class SortedIntersectSpec extends SparkSuite {
 
   test("nullable ELEMENT type is an analysis error (silent-corruption guard)") {
     import spark.implicits._
-    SortedIntersect.register(spark)
+    GraftExtensions.register(spark)
     // Seq[Option[Long]] encodes as array<bigint> with containsNull=true —
     // exactly the shape whose null slots getLong() would misread as 0 /
     // undefined bytes. Must fail analysis, not return plausible data.
@@ -79,7 +79,7 @@ class SortedIntersectSpec extends SparkSuite {
 
   test("randomized equivalence with array_intersect on sorted arrays, both eval paths") {
     import spark.implicits._
-    SortedIntersect.register(spark)
+    GraftExtensions.register(spark)
     val rnd = new scala.util.Random(13)
     // sorted DISTINCT arrays from a small id universe → dense overlap
     def arr(): Seq[Long] =

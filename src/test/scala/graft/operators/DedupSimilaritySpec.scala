@@ -479,7 +479,7 @@ class DedupSimilaritySpec extends SparkSuite {
 
   test("vector_dot matches an independent fold") {
     import spark.implicits._
-    graft.functions.VectorDot.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0))).toDF("a", "b")
     val got = df.select(expr("vector_dot(a, b)")).as[Double].head()
     assert(got == 1.0 * 4 + 2 * 5 + 3 * 6)
@@ -491,7 +491,7 @@ class DedupSimilaritySpec extends SparkSuite {
 
   test("prefix_distinct: semantics, HOF equivalence, and exactly-once pair dedup") {
     import spark.implicits._
-    graft.functions.PrefixDistinct.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     // direct semantics: n=0 vacuous, agree-inside-prefix false,
     // agree-only-at-or-after-prefix true
     val df = Seq((Array(1, 2, 3, 4), Array(9, 2, 3, 9))).toDF("a", "b")
@@ -544,7 +544,7 @@ class DedupSimilaritySpec extends SparkSuite {
 
   test("grouped_prefix_distinct: semantics, HOF equivalence, and d04 path parity") {
     import spark.implicits._
-    graft.functions.GroupedPrefixDistinct.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     // groups of 2: group 0 = (1,2)/(1,9) differs at index 1;
     // group 1 = (3,4)/(3,4) fully equal
     val df = Seq((Array(1L, 2L, 3L, 4L), Array(1L, 9L, 3L, 4L))).toDF("a", "b")

@@ -32,5 +32,7 @@ class OperatorSmokeSpec extends SparkSuite {
   test("every oracle key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracles without queries: $missing")
+    val unchecked = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    assert(unchecked.isEmpty, s"queries without oracles: $unchecked")
   }
 }

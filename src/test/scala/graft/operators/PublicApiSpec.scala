@@ -307,7 +307,7 @@ class PublicApiSpec extends SparkSuite {
 
   test("vector_cosine matches an independent computation; zero norms and nulls are safe") {
     import spark.implicits._
-    graft.functions.VectorCosine.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val df = Seq(
       (Array(3.0, 4.0), Array(4.0, 3.0)),
       (Array(1.0, 0.0), Array(0.0, 2.0)),
@@ -323,7 +323,7 @@ class PublicApiSpec extends SparkSuite {
 
   test("vector_cosine returns null on mismatched dimensions (not a truncated score)") {
     import spark.implicits._
-    graft.functions.VectorCosine.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val df = Seq((Array(3.0, 4.0, 5.0), Array(3.0, 4.0))).toDF("a", "b")
     // codegen path
     val r = df.select(expr("vector_cosine(a, b)")).collect().head

@@ -127,19 +127,27 @@ class SketchAndFormatSpec extends SparkSuite {
   }
 
   test("q55 rank-interpolated percentiles equal q31's exact aggregate percentiles") {
-    // Two independent implementations — q31's stacked multi-column
-    // selection (since r17; formerly the sort-based aggregation
-    // buffer, which the multi-vs-buffer test below still pins) vs
-    // q55's single-column selection — must produce the same p50/p90
-    // per group (both round to 4dp).
-    val q31 = graft.SparkEntry.queries("q31_percentiles")(spark, dir)
-      .select("l_returnflag", "p50", "p90").orderBy("l_returnflag").collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-    val q55 = graft.SparkEntry.queries("q55_percentile_rank")(spark, dir)
-      .select("l_returnflag", "p50", "p90").orderBy("l_returnflag").collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-    assert(q31.nonEmpty && q31.toSeq == q55.toSeq,
-      s"exact algorithms disagree: q31=${q31.toSeq} q55=${q55.toSeq}")
+    // q31 and q55 both run exactPercentileSelect, so comparing them to
+    // each other checks nothing. Each is compared instead with Spark's
+    // built-in exact `percentile` aggregate, an independent algorithm
+    // (it collects and sorts each group's values). The queries round
+    // to 4 dp, so they agree within one unit of that rounding.
+    val exact = Tables.lineitem(spark, dir).groupBy("l_returnflag")
+      .agg(expr("percentile(l_extendedprice, 0.5)"),
+        expr("percentile(l_extendedprice, 0.9)"))
+      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    assert(exact.nonEmpty)
+    for (q <- Seq("q31_percentiles", "q55_percentile_rank")) {
+      val got = SparkEntry.queries(q)(spark, dir)
+        .select("l_returnflag", "p50", "p90").collect()
+        .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+      assert(got.keySet == exact.keySet, s"$q groups: ${got.keySet}")
+      got.foreach { case (flag, (p50, p90)) =>
+        val (e50, e90) = exact(flag)
+        assert(math.abs(p50 - e50) <= 1e-4 && math.abs(p90 - e90) <= 1e-4,
+          s"$q $flag: p50/p90 ($p50, $p90) vs exact ($e50, $e90)")
+      }
+    }
   }
 
   test("exactPercentileSelect == rank-window form on adversarial groups") {

@@ -768,7 +768,7 @@ class StreamOpsSpec extends SparkSuite {
     KinesisRegistry.clients.put("sink-fake", new FakeKinesisClient())
     val mem = MemoryStream[(Array[Byte], String)](spark)
     val wq = mem.toDF().toDF("data", "partitionKey")
-      .writeStream.foreach(new KinesisSink("sink-rt", "sink-fake"))
+      .writeStream.foreach(new KinesisBatchSink("sink-rt", "sink-fake"))
       .trigger(Trigger.ProcessingTime(50)).start()
     try {
       mem.addData(("one".getBytes, "k1"), ("two".getBytes, "k2"), ("three".getBytes, "k3"))

@@ -63,17 +63,14 @@ if ! GRAFT_VERIFY_JSON="$STAGE/CORRECTNESS_local.json" \
   fail correctness "local_verify.py rc!=0 (failing queries above)"
 fi
 # refuse the r14 failure shape: an artifact that parses but is empty,
-# or one with any non-hash-matched oracled query
+# or one with any non-hash-matched query (a query without an oracle
+# is not hash-matched, so it fails too)
 python3 -c "
 import json,sys
 m=json.load(open('$STAGE/CORRECTNESS_local.json'))
 assert m, 'GATE_FAIL(correctness-empty): map is {}'
-bad=[k for k,v in m.items()
-     if not v['hash_match'] and v.get('err')!='rows-only (no oracle)']
+bad=[k for k,v in m.items() if not v['hash_match']]
 assert not bad, f'GATE_FAIL(correctness): {sorted(bad)[:10]}'
-empty=[k for k,v in m.items()
-       if v.get('err')=='rows-only (no oracle)' and v['spark_rows']==0]
-assert not empty, f'GATE_FAIL(correctness): rows-only EMPTY: {empty}'
 print(f'correctness map: {len(m)} queries, 0 fail')
 " || fail correctness-empty "structural check failed"
 
