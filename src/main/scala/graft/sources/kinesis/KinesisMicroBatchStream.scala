@@ -14,6 +14,9 @@ import graft.streaming.SequenceSaver
 
 /** Test/DI registry for savers and clients referenced by name in
   * DataSource options (reflection can't carry constructor args).
+  * `GraftConsumer.start` registers the consumer's saver here under its
+  * query name, `graft-consumer-<streamName>`, so that the source it
+  * builds is that saver's one writer.
   */
 object KinesisRegistry {
   val savers: TrieMap[String, SequenceSaver] = TrieMap.empty
@@ -76,12 +79,14 @@ case class KinesisInputPartition(
   *    pauses the whole stream until all parents close, kinesis.go:84-93)
   *  - O3/O7 start-position resolution → [[initialOffset]]: saved
   *    sequence from the SequenceSaver if present (AFTER_SEQUENCE_NUMBER),
-  *    else TRIM_HORIZON (sequence.go:74-89, 26-36)
+  *    else TRIM_HORIZON (sequence.go:74-89, 26-36); a drained parent of
+  *    a resumed child starts at its end
   *  - O2/O11 per-shard poll + iterator refresh → [[KinesisPartitionReader]]
-  *  - O5 batch-granularity checkpoint → [[commit]] writes each shard's
-  *    last sequence to the saver (kinesis.go:198-201)
-  *  - O8 closed-shard checkpoint delete → [[commit]]/[[latestOffset]]
-  *    (kinesis.go:203-210, sequence.go:51-53)
+  *  - O5 batch-granularity checkpoint → [[latestOffset]] writes each
+  *    shard's last WAL-committed sequence to the saver
+  *    (kinesis.go:198-201); the source is the saver's only writer
+  *  - O8 closed-shard checkpoint delete → the same write deletes a
+  *    drained closed shard's entry (kinesis.go:203-210, sequence.go:51-53)
   *  - O10 admission control → per-shard maxRecordsPerFetch cap
   *    (kinesis.go:182's Limit: 1000), integrated with Spark's
   *    ReadLimit/maxRows
@@ -134,12 +139,27 @@ class KinesisMicroBatchStream(
     logInfo(s"AvailableNow: captured tail for ${target.size} shard(s) of $streamName")
   }
 
-  /** O3/O7: resolve each live shard's start position. */
+  /** O3/O7: resolve each live shard's start position. A drained closed
+    * shard has no saver entry (O8), so a closed shard with no entry but
+    * with a descendant that has one was drained before that descendant
+    * was read: it starts at its last sequence. From TRIM_HORIZON it would
+    * be read again, and would hold back its children (gating) until then.
+    */
   override def initialOffset(): Offset = {
     val shards = client.listShards(streamName)
+    val saved = shards.flatMap(sh =>
+      saver.flatMap(_.get(streamName, sh.shardId)).map(sh.shardId -> _)).toMap
+    val children = shards
+      .flatMap(sh => (sh.parentShardId.toSeq ++ sh.adjacentParentShardId).map(_ -> sh.shardId))
+      .groupMap(_._1)(_._2)
+    def resumed(shardId: String): Boolean =
+      saved.contains(shardId) || children.getOrElse(shardId, Nil).exists(resumed)
     val positions = shards.map { sh =>
-      val saved = saver.flatMap(_.get(streamName, sh.shardId))
-      sh.shardId -> saved.getOrElse("") // "" = TRIM_HORIZON (sequence.go:83-86)
+      val drained = sh.closed && !saved.contains(sh.shardId) && resumed(sh.shardId)
+      val start =
+        if (drained) client.sequenceAfter(streamName, sh.shardId, None, Int.MaxValue)._1
+        else saved.get(sh.shardId)
+      sh.shardId -> start.getOrElse("") // "" = TRIM_HORIZON (sequence.go:83-86)
     }.toMap
     // gate against the same (pre-batch) positions: nothing consumed yet
     KinesisOffset(gateChildren(positions, shards, basis = positions, new SeqCache))
@@ -155,10 +175,10 @@ class KinesisMicroBatchStream(
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startPos = start.asInstanceOf[KinesisOffset].positions
     // `start` is the last WAL-committed offset: mirror it into the
-    // user-visible saver now. (Spark only calls commit() when a LATER
-    // batch completes, so a trailing batch would otherwise never reach
-    // the saver — the reference writes after every batch,
-    // kinesis.go:198-201.)
+    // user-visible saver now, the saver's one write site. So the saver
+    // never leads the WAL, and in tail mode trails it by at most one
+    // trigger (the reference writes after every batch,
+    // kinesis.go:198-201).
     val cache = new SeqCache
     syncSaver(startPos, cache)
     // O9 (status half): while the stream is not ACTIVE (UPDATING /
@@ -208,7 +228,7 @@ class KinesisMicroBatchStream(
       // Drained closed shards KEEP their final position in the offset
       // map — dropping them would let the next shard discovery
       // resurrect them at TRIM_HORIZON and re-read the whole shard.
-      // (Their saver entry is still deleted in commit(), O8.)
+      // (Their saver entry is still deleted by syncSaver, O8.)
       shardId -> lastOpt.getOrElse("")
     }.toMap
     // Children are gated against the START positions: a child may only
@@ -308,15 +328,14 @@ class KinesisMicroBatchStream(
   override def createReaderFactory(): PartitionReaderFactory =
     new KinesisPartitionReaderFactory(client)
 
-  /** O5 + O8: batch-granularity saver maintenance. Open (or partially
-    * read) shards get their last sequence written (kinesis.go:198-201);
-    * a closed shard that is fully drained gets its entry *deleted*
-    * (kinesis.go:203-210, sequence.go:51-53) — so a saver-only restart
-    * re-enters only live shards, with closed parents replayed from
-    * TRIM_HORIZON exactly like the reference's at-least-once restart.
+  /** Does nothing: [[latestOffset]] has already synced these positions.
+    * Spark 4.1.2's MicroBatchExecution calls `commit(end of batch N-1)`
+    * from inside batch N's `walCommit`, after `latestOffset(start = end
+    * of N-1)` has written the same positions to the saver. Syncing again
+    * would write nothing (`lastSynced` dedupes it) yet would still probe
+    * `sequenceAfter` once per shard, a GetRecords call on AWS.
     */
-  override def commit(end: Offset): Unit =
-    syncSaver(end.asInstanceOf[KinesisOffset].positions, new SeqCache)
+  override def commit(end: Offset): Unit = ()
 
   // Last (sequence, drained) state pushed to the saver per shard —
   // dedupes saver writes across triggers. Drained-ness is part of the
@@ -324,6 +343,15 @@ class KinesisMicroBatchStream(
   // set→del transition (O8) must still fire.
   private var lastSynced: Map[String, (String, Boolean)] = Map.empty
 
+  /** O5 + O8: batch-granularity saver maintenance. Open (or partially
+    * read) shards get their last sequence written (kinesis.go:198-201);
+    * a closed shard that is fully drained gets its entry *deleted*
+    * (kinesis.go:203-210, sequence.go:51-53). A saver-only restart
+    * resumes each shard from its entry and skips a drained parent once a
+    * child has an entry ([[initialOffset]]); a parent whose children have
+    * none yet is read again from TRIM_HORIZON, like the reference's
+    * at-least-once restart.
+    */
   private def syncSaver(positions: Map[String, String], cache: SeqCache): Unit =
     saver.foreach { sv =>
     positions.foreach { case (shardId, seq) =>

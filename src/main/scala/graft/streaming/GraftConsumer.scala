@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.util.LongAccumulator
 
+import graft.sources.kinesis.KinesisRegistry
+
 /** Connection/config options — mirror of the reference's `Option`
   * builder (option.go:10-34): stream name, region, STS toggle.
   */
@@ -37,9 +39,21 @@ object ErrorPolicy {
   * Built on Structured Streaming: the poll ticker (kinesis.go:172-179)
   * is `Trigger.ProcessingTime(sleepLimit)`; batch-granularity
   * checkpointing (kinesis.go:198-201) writes each shard's last delivered
-  * sequence to the saver. Each micro-batch is one Spark action: the
-  * handler pass also returns the last sequence per shard, and the
-  * saver is written once that action has finished.
+  * sequence to the saver. Each micro-batch is one Spark action.
+  *
+  * The saver ([[setSaver]]) has exactly one writer, chosen by how the
+  * consumer was started:
+  *  - [[start]] hands it to its kinesis-graft source, which resumes each
+  *    shard from it, writes it only after the offset WAL has committed
+  *    a batch, and deletes the entries of drained closed shards
+  *    (sequence.go:51-53). The consumer itself never writes it, so the
+  *    saver never runs ahead of the WAL. It trails the WAL by at most
+  *    one trigger: a restart from the saver alone (a new checkpoint
+  *    location) delivers that last batch again, which keeps delivery
+  *    at-least-once, like the reference's;
+  *  - [[run]]'s input is not a saver-aware source, so the handler pass
+  *    also returns the last sequence per shard, and the consumer writes
+  *    the saver once that action has finished.
   *
   * The goroutine-per-shard loop (kinesis.go:131-139, in-order delivery
   * 173-212) depends on how the consumer was started:
@@ -122,7 +136,10 @@ class GraftConsumer(val option: GraftOption) {
     * options: streamName AND region/sts all reach the DSv2 client
     * factory (option.go:36-43 feeding NewClient, kinesis.go:45-52 — a
     * [[graft.sources.kinesis.ConfigurableKinesisClient]] receives them
-    * via `configure` before first use).
+    * via `configure` before first use). A `saverName` in `extra` makes
+    * the source read and write that registered saver; do not also
+    * [[setSaver]] when passing this DataFrame to [[run]], or the saver
+    * gets two writers ([[start]] wires the saver itself).
     */
   def source(spark: org.apache.spark.sql.SparkSession,
       extra: Map[String, String] = Map.empty): DataFrame = {
@@ -141,6 +158,14 @@ class GraftConsumer(val option: GraftOption) {
     * `extra` passes source options (clientName/clientClass, saverName,
     * maxRecordsPerFetch).
     *
+    * A saver given to [[setSaver]] goes to the source, registered in
+    * [[graft.sources.kinesis.KinesisRegistry.savers]] under the query
+    * name, `graft-consumer-<streamName>` (each start replaces that
+    * entry). The source is then its only writer. A `saverName` in
+    * `extra` must name that same saver, or start throws
+    * IllegalArgumentException; without [[setSaver]] it names the
+    * source's saver as in [[source]].
+    *
     * The handler runs directly over the batch's source partitions, with
     * no regroup, because each one is already one shard's slice in
     * order:
@@ -154,8 +179,21 @@ class GraftConsumer(val option: GraftOption) {
     * a streaming DSv2 scan carries no reported partitioning.)
     */
   def start(spark: org.apache.spark.sql.SparkSession,
-      extra: Map[String, String] = Map.empty): StreamingQuery =
-    consume(source(spark, extra), shardPartitioned = true)
+      extra: Map[String, String] = Map.empty): StreamingQuery = {
+    val options = saverOpt.fold(extra) { sv =>
+      val (named, rest) = extra.partition { case (k, _) => k.equalsIgnoreCase("saverName") }
+      for ((_, n) <- named) {
+        val other = KinesisRegistry.savers.get(n)
+        if (!other.exists(_ eq sv))
+          throw new IllegalArgumentException(s"saverName '$n' names " +
+            other.fold("no registered saver")(o => s"saver $o") +
+            s", not the saver $sv given to setSaver")
+      }
+      KinesisRegistry.savers.put(queryName, sv)
+      rest + ("saverName" -> queryName)
+    }
+    consume(source(spark, options), shardPartitioned = true)
+  }
 
   /** ≈ Run (kinesis.go:147-154): validates the handler (the reference
     * errors with HandlerIsNil, kinesis.go:148-150) and starts the
@@ -164,9 +202,11 @@ class GraftConsumer(val option: GraftOption) {
     */
   def run(stream: DataFrame): StreamingQuery = consume(stream, shardPartitioned = false)
 
+  private def queryName: String = s"graft-consumer-${option.streamName}"
+
   /** `shardPartitioned`: every partition of each batch already holds one
     * shard's records in sequence order (true only for [[start]]'s own
-    * source), so the regroup is skipped.
+    * source), so the regroup is skipped, and the source writes the saver.
     */
   private def consume(stream: DataFrame, shardPartitioned: Boolean): StreamingQuery = {
     val h = handlerOpt.getOrElse(
@@ -175,9 +215,8 @@ class GraftConsumer(val option: GraftOption) {
     val acc = spark.sparkContext.longAccumulator("graft.handler.errors")
     errorsAcc = acc
     val pol = policy
-    val saver = saverOpt
+    val saver = if (shardPartitioned) None else saverOpt
     val onErr = onErrorOpt
-    val streamName = option.streamName
 
     import spark.implicits._
     val runBatch: DataFrame => Unit = { batch =>
@@ -214,12 +253,12 @@ class GraftConsumer(val option: GraftOption) {
           lastSeq.iterator.map { case ((s, sh), seq) => (s, sh, seq) }
         }
         .collect()
-      // Batch-granularity checkpoint (kinesis.go:198-201), written only
-      // once every partition's handler calls have finished.
+      // Batch-granularity checkpoint (kinesis.go:198-201) for run(df),
+      // written only once every partition's handler calls have finished.
       saver.foreach(sv => last.foreach { case (s, sh, seq) => sv.set(s, sh, seq) })
     }
     val writer = stream.writeStream
-      .queryName(s"graft-consumer-$streamName")
+      .queryName(queryName)
       .trigger(if (availNow) Trigger.AvailableNow() else Trigger.ProcessingTime(sleep.toMillis))
       .foreachBatch { (batch: DataFrame, _: Long) => runBatch(batch) }
     checkpointLoc.foreach(writer.option("checkpointLocation", _))

@@ -13,8 +13,12 @@ import scala.collection.concurrent.TrieMap
   * In Spark the authoritative offset log is the Structured Streaming
   * checkpoint WAL; a SequenceSaver is the *user-visible* twin the
   * reference exposes (resume-from-saved-sequence, delete-on-shard-close
-  * — sequence.go:26-36, 46-53). The DSv2 source (graft.sources.kinesis)
-  * consults it for initial offsets and deletes closed shards from it.
+  * — sequence.go:26-36, 46-53). Each saver has one writer. The DSv2
+  * source (graft.sources.kinesis) consults it for initial offsets,
+  * writes each shard's last WAL-committed sequence (so the saver never
+  * leads the WAL) and deletes drained closed shards from it. Under
+  * `GraftConsumer.run`, whose input is not a saver-aware source, the
+  * consumer writes it after each batch's handler pass.
   */
 trait SequenceSaver {
   def get(streamName: String, shardId: String): Option[String]

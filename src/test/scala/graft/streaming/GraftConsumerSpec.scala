@@ -108,6 +108,15 @@ object CountingCheckpointFileManager {
   val creates = new AtomicLong()
 }
 
+/** An in-memory saver that records every (shard, sequence) it is set to. */
+class RecordingSaver extends InMemorySequenceSaver {
+  val sets = new ConcurrentLinkedQueue[(String, String)]()
+  override def set(streamName: String, shardId: String, sequence: String): Unit = {
+    sets.add((shardId, sequence))
+    super.set(streamName, shardId, sequence)
+  }
+}
+
 class GraftConsumerSpec extends SparkSuite {
 
   private val SparkDefaultManager = classOf[FileContextBasedCheckpointFileManager].getName
@@ -464,7 +473,7 @@ class GraftConsumerSpec extends SparkSuite {
     val name = "gc-split"
     FakeKinesisService.createStream(name, 4)
     KinesisRegistry.clients.put("gc-split-fake", new FakeKinesisClient())
-    val saver = new InMemorySequenceSaver
+    val saver = new RecordingSaver
     KinesisRegistry.savers.put("gc-split-saver", saver)
     val pushed = scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
     def push(shard: String, n: Int): Unit = (1 to n).foreach { i =>
@@ -504,6 +513,8 @@ class GraftConsumerSpec extends SparkSuite {
       for ((s, seqs) <- pushed if s != parent)
         assert(saver.get(name, s).contains(seqs.last), s"checkpoint on $s")
       assert(saver.get(name, parent).isEmpty, "drained parent keeps a checkpoint")
+      val sets = saver.sets.asScala.toList
+      assert(sets.distinct.size == sets.size, s"checkpoints written twice: ${sets.diff(sets.distinct)}")
 
       val dataBatches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
       assert(dataBatches.length > 2)
@@ -515,6 +526,116 @@ class GraftConsumerSpec extends SparkSuite {
       spark.sparkContext.removeSparkListener(jobs)
       assert(consumer.shutdown(10.seconds))
     }
+  }
+
+  test("start() with setSaver alone resumes from the saver and deletes a drained parent's checkpoint") {
+    import graft.sources.kinesis._
+    HandlerSink.clear()
+    val name = "gc-saver-only"
+    FakeKinesisService.createStream(name, 2)
+    KinesisRegistry.clients.put(s"$name-fake", new FakeKinesisClient())
+    val pushed = scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
+    def push(shard: String, n: Int): Unit = (1 to n).foreach { i =>
+      val seq = FakeKinesisService.push(name, shard, s"pk$i", s"$shard-$i".getBytes)
+      pushed(shard) = pushed.getOrElse(shard, Vector.empty) :+ seq
+    }
+    val (other, parent) = ("shardId-000000000000", "shardId-000000000001")
+    Seq(other, parent).foreach(push(_, 5))
+    val (c1, c2) = FakeKinesisService.splitShard(name, parent)
+    Seq(other, c1, c2).foreach(push(_, 4))
+    val saver = new InMemorySequenceSaver
+    def drain(): List[(String, String)] = {
+      val before = HandlerSink.seen.size
+      val consumer = GraftConsumer(GraftOption().withStreamName(name))
+        .availableNow()
+        .setSaver(saver)
+        .checkpointLocation(java.nio.file.Files.createTempDirectory("graft-ckpt-saver").toString)
+        .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
+      val q = consumer.start(spark, Map("clientName" -> s"$name-fake", "maxRecordsPerFetch" -> "6"))
+      try assert(q.awaitTermination(60000))
+      finally assert(consumer.shutdown(10.seconds))
+      q.exception.foreach(e => throw e)
+      HandlerSink.seen.asScala.toList.drop(before)
+    }
+    val first = drain()
+    assert(first.sorted == pushed.toList.flatMap { case (sh, seqs) => seqs.map(sh -> _) }.sorted)
+    assert(saver.snapshot == Seq(other, c1, c2).map(sh => (name, sh) -> pushed(sh).last).toMap,
+      "the saver must hold each open shard's last sequence and nothing for the drained parent")
+
+    // A new checkpoint location: only the saver tells the second drain where to start.
+    val before = pushed.map { case (sh, seqs) => sh -> seqs.size }.toMap
+    Seq(other, c1, c2).foreach(push(_, 3))
+    val second = drain()
+    val fresh = pushed.toList.flatMap { case (sh, seqs) => seqs.drop(before(sh)).map(sh -> _) }
+    assert(second.sorted == fresh.sorted, "the second drain delivered more than the new records")
+  }
+
+  test("start() accepts a saverName naming its setSaver saver and rejects one naming another") {
+    import graft.sources.kinesis._
+    HandlerSink.clear()
+    val name = "gc-saver-name"
+    FakeKinesisService.createStream(name, 1)
+    KinesisRegistry.clients.put(s"$name-fake", new FakeKinesisClient())
+    val seqs = (1 to 3).map(i =>
+      FakeKinesisService.push(name, "shardId-000000000000", s"pk$i", s"p$i".getBytes))
+    val (mine, theirs) = (new InMemorySequenceSaver, new InMemorySequenceSaver)
+    KinesisRegistry.savers.put(s"$name-mine", mine)
+    KinesisRegistry.savers.put(s"$name-theirs", theirs)
+    def consumer() = GraftConsumer(GraftOption().withStreamName(name))
+      .availableNow()
+      .setSaver(mine)
+      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
+
+    val active = spark.streams.active.length
+    val e = intercept[IllegalArgumentException] {
+      consumer().start(spark, Map("clientName" -> s"$name-fake", "saverName" -> s"$name-theirs"))
+    }
+    for (part <- Seq(s"$name-theirs", theirs.toString, mine.toString))
+      assert(e.getMessage.contains(part), s"'${e.getMessage}' does not name $part")
+    assert(spark.streams.active.length == active, "a rejected start left a query running")
+
+    val c = consumer()
+    val q = c.start(spark, Map("clientName" -> s"$name-fake", "saverName" -> s"$name-mine"))
+    try assert(q.awaitTermination(60000))
+    finally assert(c.shutdown(10.seconds))
+    q.exception.foreach(e => throw e)
+    assert(HandlerSink.seen.size == 3)
+    assert(mine.get(name, "shardId-000000000000").contains(seqs.last))
+    assert(theirs.snapshot.isEmpty)
+  }
+
+  test("start() under ErrorPolicy.Fail: the saver holds the last good batch and nothing of the failed one") {
+    import graft.sources.kinesis._
+    HandlerSink.clear()
+    val name = "gc-saver-fail"
+    FakeKinesisService.createStream(name, 2)
+    KinesisRegistry.clients.put(s"$name-fake", new FakeKinesisClient())
+    val shards = Seq("shardId-000000000000", "shardId-000000000001")
+    val seqs = shards.map(sh => sh -> (1 to 4).map(i =>
+      FakeKinesisService.push(name, sh, s"pk$i", s"$sh-$i".getBytes))).toMap
+    val saver = new RecordingSaver
+    val bad = s"${shards.head}-4"
+    val consumer = GraftConsumer(GraftOption().withStreamName(name))
+      .availableNow()
+      .setSaver(saver)
+      .errorPolicy(ErrorPolicy.Fail)
+      .handle { r =>
+        if (new String(r.data, "UTF-8") == bad) sys.error("boom")
+        HandlerSink.seen.add((r.shardId, r.sequenceNumber))
+      }
+    // A cap of 4 over 2 shards admits 2 records per shard: batch 1 holds
+    // records 1-2 of each shard, batch 2 records 3-4, and its handler
+    // throws on the last record of the first shard.
+    val q = consumer.start(spark, Map("clientName" -> s"$name-fake", "maxRecordsPerFetch" -> "4"))
+    try {
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination(60000))
+      assert(q.recentProgress.count(_.numInputRows > 0) == 1, "batch 1 did not complete")
+      assert(saver.snapshot == shards.map(sh => (name, sh) -> seqs(sh)(1)).toMap,
+        "the saver must hold batch 1's end")
+      val sets = saver.sets.asScala.toSet
+      for (sh <- shards; seq <- seqs(sh).drop(2))
+        assert(!sets.contains((sh, seq)), s"batch 2's $sh/$seq reached the saver")
+    } finally consumer.shutdown(10.seconds)
   }
 
   test("a second drain from the same session compiles no generated class") {
