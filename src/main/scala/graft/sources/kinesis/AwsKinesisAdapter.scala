@@ -71,7 +71,7 @@ object AwsKinesisAdapter {
   // SDK minor-version rename would otherwise surface as a
   // NoSuchMethodException at FIRST USE in production — possibly days
   // after deploy, in whichever code path reaches the renamed member
-  // first. These three tables enumerate every name the adapter
+  // first. These tables enumerate every name the adapter
   // resolves; `AwsKinesisClient.validate()` checks ALL of them against
   // the loaded classes at configure-time and reports every
   // missing/mismatched signature at once. AwsKinesisClientSpec asserts
@@ -99,29 +99,11 @@ object AwsKinesisAdapter {
     "PutRecordsRequestEntry" -> Seq("partitionKey", "data"),
     "PutRecordsRequest" -> Seq("streamName", "records"))
 
-  /** Response/model class → the 0-arg accessors the adapter reads.
-    * Names containing a dot are absolute (core classes outside the
-    * kinesis package); the rest live under `<pkg>.model`.
-    */
-  val responseAccessors: Map[String, Seq[String]] = Map(
-    "ListShardsResponse" -> Seq("shards", "nextToken"),
-    "Shard" -> Seq("shardId", "parentShardId", "sequenceNumberRange",
-      "adjacentParentShardId"),
-    "SequenceNumberRange" -> Seq("endingSequenceNumber"),
-    "DescribeStreamSummaryResponse" -> Seq("streamDescriptionSummary"),
-    "StreamDescriptionSummary" -> Seq("streamStatusAsString"),
-    "GetShardIteratorResponse" -> Seq("shardIterator"),
-    "GetRecordsResponse" -> Seq("records", "nextShardIterator",
-      "millisBehindLatest"),
-    "Record" -> Seq("data", "partitionKey", "sequenceNumber",
-      "approximateArrivalTimestamp"),
-    "PutRecordResponse" -> Seq("sequenceNumber"),
-    "PutRecordsResponse" -> Seq("records"),
-    "PutRecordsResultEntry" -> Seq("sequenceNumber", "errorCode"),
-    "software.amazon.awssdk.core.SdkBytes" -> Seq("asByteArray"))
-
-  /** Expected RETURN type per response accessor — the piece of the
-    * surface a name/arity check cannot see: an SDK minor version that
+  /** Response/model class → the 0-arg accessors the adapter reads,
+    * each with its expected RETURN type. Names containing a dot are
+    * absolute (core classes outside the kinesis package); the rest live
+    * under `<pkg>.model`. The return type is the piece of the surface a
+    * name/arity check cannot see: an SDK minor version that
     * keeps a member's name but changes its type (e.g.
     * `millisBehindLatest(): Long` → `String`) would pass resolution
     * and then fail as a ClassCastException at first use.

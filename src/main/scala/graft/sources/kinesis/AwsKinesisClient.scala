@@ -69,7 +69,7 @@ class AwsKinesisClient extends ConfigurableKinesisClient {
 
   /** Fails FAST on version skew: after storing the options, resolve the
     * ENTIRE reflective surface ([[AwsKinesisAdapter.requestSetters]] /
-    * `responseAccessors` / `clientRpcs`) against the loaded classes and
+    * `responseAccessorTypes` / `clientRpcs`) against the loaded classes and
     * throw with the complete problem list — one renamed SDK member
     * would otherwise be a NoSuchMethodException at first use in
     * production, in whichever code path reaches it first. Opt out with
@@ -119,21 +119,18 @@ class AwsKinesisClient extends ConfigurableKinesisClient {
     // return type) would otherwise only fail as a ClassCastException
     // at first use. Expected types match by FQCN or simple name
     // (overloads pass if any candidate matches).
-    AwsKinesisAdapter.responseAccessors.toSeq.sortBy(_._1).foreach { case (cname, accs) =>
+    AwsKinesisAdapter.responseAccessorTypes.toSeq.sortBy(_._1).foreach { case (cname, types) =>
       val fqcn = if (cname.contains('.')) cname else s"$pkg.model.$cname"
-      val types = AwsKinesisAdapter.responseAccessorTypes.getOrElse(cname, Map.empty)
-      withClass(fqcn, cname)(cls => accs.foreach { a =>
+      withClass(fqcn, cname)(cls => types.foreach { case (a, want) =>
         val candidates = cls.getMethods.filter(
           m => m.getName == a && m.getParameterCount == 0)
         if (candidates.isEmpty)
           problems += s"$cname: no public method $a/0 on ${cls.getName}"
-        else types.get(a).foreach { want =>
-          val ok = candidates.exists(m =>
-            m.getReturnType.getName == want || m.getReturnType.getSimpleName == want)
-          if (!ok) problems += s"$cname.$a(): return type " +
+        else if (!candidates.exists(m =>
+            m.getReturnType.getName == want || m.getReturnType.getSimpleName == want))
+          problems += s"$cname.$a(): return type " +
             s"${candidates.map(_.getReturnType.getName).distinct.mkString("|")} " +
             s"does not match expected $want"
-        }
       })
     }
     // static factories the adapter calls (credential/region ones only

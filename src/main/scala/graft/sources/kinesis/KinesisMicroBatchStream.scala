@@ -1,6 +1,7 @@
 package graft.sources.kinesis
 
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
@@ -77,6 +78,11 @@ case class KinesisInputPartition(
   *    are gated until their parent is drained, preserving Kinesis
   *    parent-before-child order — stronger than the reference, which
   *    pauses the whole stream until all parents close, kinesis.go:84-93)
+  *  - one drained-shard rule → `Round`: each planning round decides,
+  *    at its start positions and with at most one probe per shard,
+  *    which shards are drained (closed, nothing after the start) and
+  *    which children are gated; gating, admission, metrics and the
+  *    saver sync (O5/O8/O9) all read that one view
   *  - O3/O7 start-position resolution → [[initialOffset]]: saved
   *    sequence from the SequenceSaver if present (AFTER_SEQUENCE_NUMBER),
   *    else TRIM_HORIZON (sequence.go:74-89, 26-36); a drained parent of
@@ -85,8 +91,9 @@ case class KinesisInputPartition(
   *  - O5 batch-granularity checkpoint → [[latestOffset]] writes each
   *    shard's last WAL-committed sequence to the saver
   *    (kinesis.go:198-201); the source is the saver's only writer
-  *  - O8 closed-shard checkpoint delete → the same write deletes a
-  *    drained closed shard's entry (kinesis.go:203-210, sequence.go:51-53)
+  *  - O8 closed-shard checkpoint delete → the same write deletes the
+  *    entry of a shard the round finds drained (kinesis.go:203-210,
+  *    sequence.go:51-53)
   *  - O10 admission control → per-shard maxRecordsPerFetch cap
   *    (kinesis.go:182's Limit: 1000), integrated with Spark's
   *    ReadLimit/maxRows
@@ -162,7 +169,7 @@ class KinesisMicroBatchStream(
       sh.shardId -> start.getOrElse("") // "" = TRIM_HORIZON (sequence.go:83-86)
     }.toMap
     // gate against the same (pre-batch) positions: nothing consumed yet
-    KinesisOffset(gateChildren(positions, shards, basis = positions, new SeqCache))
+    KinesisOffset(positions -- new Round(positions).gated(shards))
   }
 
   override def latestOffset(): Offset =
@@ -170,17 +177,17 @@ class KinesisMicroBatchStream(
       "latestOffset(start, limit) is used via SupportsAdmissionControl")
 
   /** O1 + O9 + O10: discover shards, advance each shard's end position
-    * by at most the per-shard cap, drop drained closed shards.
+    * by at most the per-shard cap, hold back gated children.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startPos = start.asInstanceOf[KinesisOffset].positions
+    val round = new Round(startPos)
     // `start` is the last WAL-committed offset: mirror it into the
     // user-visible saver now, the saver's one write site. So the saver
     // never leads the WAL, and in tail mode trails it by at most one
     // trigger (the reference writes after every batch,
     // kinesis.go:198-201).
-    val cache = new SeqCache
-    syncSaver(startPos, cache)
+    syncSaver(round)
     // O9 (status half): while the stream is not ACTIVE (UPDATING /
     // DELETING / CREATING), hold the offsets — an empty batch, no new
     // admission — and resume from the same positions once ACTIVE again.
@@ -193,18 +200,18 @@ class KinesisMicroBatchStream(
       return KinesisOffset(startPos)
     }
     val shards = client.listShards(streamName)
-    val byId = shards.map(s => s.shardId -> s).toMap
+    // Children are gated against the START positions: a child may only
+    // enter the offset map once its parent was fully consumed by a
+    // PREVIOUS (committed) batch — never in the same batch that reads
+    // the parent's tail, which would let a downstream observer see
+    // child records before the parent's final ones.
+    val gated = round.gated(shards)
     // Admission cap divides over shards that can actually produce rows
     // THIS batch: closed drained parents linger in listShards forever,
-    // and fresh children are gated until their parent drains — neither
-    // may dilute live shards' share.
-    val producing = shards.count { sh =>
-      !blockedByParent(sh, startPos, byId, cache) && (!sh.closed || {
-        val pos = startPos.get(sh.shardId).filter(_.nonEmpty)
-        val (lastOpt, _) = cache(sh.shardId, pos, 1)
-        lastOpt.exists(l => !pos.exists(p => seqLeq(l, p))) // undrained remainder
-      })
-    }
+    // and gated children wait for their parents — neither may dilute
+    // live shards' share. An open shard counts without a probe.
+    val producing = shards.count(sh =>
+      !gated(sh.shardId) && (!sh.closed || !round.drained(sh.shardId)))
     val perShard = limit match {
       case r: ReadMaxRows =>
         math.max(1, (r.maxRows() / math.max(1, producing)).toInt)
@@ -216,27 +223,19 @@ class KinesisMicroBatchStream(
       "holdingOffsets" -> "false",
       "numShards" -> shards.size.toString,
       "numClosedShards" -> shards.count(_.closed).toString,
-      "numGatedChildren" ->
-        shards.count(sh => blockedByParent(sh, startPos, byId, cache)).toString,
+      "numGatedChildren" -> gated.size.toString,
       "numProducingShards" -> producing.toString,
       "admittedPerShard" -> perShard.toString)
-    val known = startPos.keySet ++ byId.keySet
+    val known = startPos.keySet ++ shards.map(_.shardId) -- gated
     val positions = known.map { shardId =>
-      val pos = startPos.get(shardId)
-      val after = pos.filter(_.nonEmpty)
-      val (lastOpt, _) = cache(shardId, after, perShard)
+      val after = startPos.get(shardId).filter(_.nonEmpty)
+      val (lastOpt, _) = client.sequenceAfter(streamName, shardId, after, perShard)
       // Drained closed shards KEEP their final position in the offset
       // map — dropping them would let the next shard discovery
       // resurrect them at TRIM_HORIZON and re-read the whole shard.
       // (Their saver entry is still deleted by syncSaver, O8.)
       shardId -> lastOpt.getOrElse("")
     }.toMap
-    // Children are gated against the START positions: a child may only
-    // enter the offset map once its parent was fully consumed by a
-    // PREVIOUS (committed) batch — never in the same batch that reads
-    // the parent's tail, which would let a downstream observer see
-    // child records before the parent's final ones.
-    val gated = gateChildren(positions, shards, basis = startPos, cache)
     // AvailableNow: clamp every shard's end to the captured tail; drop
     // shards born after the capture (they're outside the backfill's
     // target); shards tracked in startPos but absent from the capture
@@ -244,9 +243,9 @@ class KinesisMicroBatchStream(
     // their start position unchanged — dropping them would discard the
     // drained-shard guard and re-read the shard on the next discovery.
     val clamped = availableNowTarget match {
-      case None => gated
+      case None => positions
       case Some(target) =>
-        gated.flatMap { case (shardId, seq) =>
+        positions.flatMap { case (shardId, seq) =>
           target.get(shardId) match {
             case Some(cap) =>
               Some(shardId -> (if (cap.isEmpty || (seq.nonEmpty && !seqLeq(seq, cap))) cap
@@ -261,50 +260,37 @@ class KinesisMicroBatchStream(
 
   private def seqLeq(a: String, b: String): Boolean = SequenceOrder.leq(a, b)
 
-  /** Memoizes `sequenceAfter` per (shard, position, limit) within one
-    * planning round. `latestOffset` consults the same (shard, position)
-    * up to three times (producing count, child gating, saver sync) — on
-    * an AWS-backed client each probe is a metadata RPC, so without the
-    * cache every trigger costs ~3× the per-shard scan actually needed.
+  /** One planning round's view of the shards at its start positions
+    * `basis` (shardId → last consumed sequence, "" = TRIM_HORIZON).
+    * Every drained-shard decision of the round reads it, so a shard is
+    * probed at most once per round (`sequenceAfter(start, 1)`, a
+    * GetRecords call on AWS), and only when a decision needs it.
     */
-  private final class SeqCache {
-    private val m = scala.collection.mutable.HashMap
-      .empty[(String, Option[String], Int), (Option[String], Boolean)]
-    def apply(shardId: String, after: Option[String], limit: Int): (Option[String], Boolean) =
-      m.getOrElseUpdate((shardId, after, limit),
-        client.sequenceAfter(streamName, shardId, after, limit))
-  }
+  private final class Round(val basis: Map[String, String]) {
+    private val probes = mutable.HashMap.empty[String, (Option[String], Boolean)]
 
-  /** True when `sh` is a child with ANY parent — judged by the `basis`
-    * positions (what has already been consumed) — not yet fully
-    * drained, so the child must wait to preserve Kinesis
-    * parent-before-child order. A split child lists one parent; a
-    * MERGE child lists two (parent + adjacent parent) and is gated on
-    * BOTH — reading it after only one parent drained could surface
-    * post-merge records before the other parent's final ones.
-    */
-  private def blockedByParent(sh: ShardInfo, basis: Map[String, String],
-      byId: Map[String, ShardInfo], cache: SeqCache): Boolean =
-    (sh.parentShardId.toSeq ++ sh.adjacentParentShardId).exists { parent =>
-      byId.contains(parent) && {
-        val pp = basis.get(parent)
-        val (lastOpt, closed) = cache(parent, pp.filter(_.nonEmpty), 1)
-        val parentEmpty = closed && pp.forall(_.isEmpty) && lastOpt.isEmpty
-        val parentDrained = closed &&
-          pp.exists(p => p.nonEmpty && lastOpt.forall(l => seqLeq(l, p)))
-        !(parentEmpty || parentDrained)
-      }
+    /** Closed, with nothing after its start position: the shard has been
+      * read to its end (kinesis.go:203-210). A shard absent from `basis`
+      * starts at TRIM_HORIZON, so it is drained only if it is empty.
+      */
+    def drained(shardId: String): Boolean = {
+      val after = basis.get(shardId).filter(_.nonEmpty)
+      val (lastOpt, closed) = probes.getOrElseUpdate(shardId,
+        client.sequenceAfter(streamName, shardId, after, 1))
+      closed && lastOpt.forall(l => after.exists(seqLeq(l, _)))
     }
 
-  /** Kinesis ordering: a child shard enters the offset map only when
-    * its parent — judged by the `basis` positions — is fully drained.
-    */
-  private def gateChildren(positions: Map[String, String],
-      shards: Seq[ShardInfo], basis: Map[String, String],
-      cache: SeqCache): Map[String, String] = {
-    val byId = shards.map(s => s.shardId -> s).toMap
-    positions.filter { case (shardId, _) =>
-      byId.get(shardId).forall(sh => !blockedByParent(sh, basis, byId, cache))
+    /** The listed children with a listed parent that is not drained:
+      * they must wait, to preserve Kinesis parent-before-child order. A
+      * split child lists one parent; a MERGE child lists two (parent +
+      * adjacent parent) and waits for BOTH — reading it after only one
+      * parent drained could surface post-merge records before the other
+      * parent's final ones.
+      */
+    def gated(shards: Seq[ShardInfo]): Set[String] = {
+      val listed = shards.map(_.shardId).toSet
+      shards.filter(sh => (sh.parentShardId.toSeq ++ sh.adjacentParentShardId)
+        .exists(p => listed(p) && !drained(p))).map(_.shardId).toSet
     }
   }
 
@@ -345,19 +331,17 @@ class KinesisMicroBatchStream(
 
   /** O5 + O8: batch-granularity saver maintenance. Open (or partially
     * read) shards get their last sequence written (kinesis.go:198-201);
-    * a closed shard that is fully drained gets its entry *deleted*
+    * a shard the round finds drained gets its entry *deleted*
     * (kinesis.go:203-210, sequence.go:51-53). A saver-only restart
     * resumes each shard from its entry and skips a drained parent once a
     * child has an entry ([[initialOffset]]); a parent whose children have
     * none yet is read again from TRIM_HORIZON, like the reference's
     * at-least-once restart.
     */
-  private def syncSaver(positions: Map[String, String], cache: SeqCache): Unit =
-    saver.foreach { sv =>
-    positions.foreach { case (shardId, seq) =>
+  private def syncSaver(round: Round): Unit = saver.foreach { sv =>
+    round.basis.foreach { case (shardId, seq) =>
       if (seq.nonEmpty) {
-        val (lastOpt, closed) = cache(shardId, Some(seq), 1)
-        val drained = closed && lastOpt.forall(l => seqLeq(l, seq))
+        val drained = round.drained(shardId)
         if (!lastSynced.get(shardId).contains((seq, drained))) {
           if (drained) sv.del(streamName, shardId)
           else sv.set(streamName, shardId, seq)

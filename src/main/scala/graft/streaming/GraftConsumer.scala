@@ -2,9 +2,9 @@ package graft.streaming
 
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, Dataset, HomeSession}
+import org.apache.spark.sql.{DataFrame, Dataset, HomeSession, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.util.LongAccumulator
 
 import graft.sources.kinesis.KinesisRegistry
@@ -161,7 +161,8 @@ class GraftConsumer(val option: GraftOption) {
     * A saver given to [[setSaver]] goes to the source, registered in
     * [[graft.sources.kinesis.KinesisRegistry.savers]] under the query
     * name, `graft-consumer-<streamName>` (each start replaces that
-    * entry). The source is then its only writer. A `saverName` in
+    * entry, and the entry is removed when the query terminates). The
+    * source is then its only writer. A `saverName` in
     * `extra` must name that same saver, or start throws
     * IllegalArgumentException; without [[setSaver]] it names the
     * source's saver as in [[source]].
@@ -189,10 +190,11 @@ class GraftConsumer(val option: GraftOption) {
             other.fold("no registered saver")(o => s"saver $o") +
             s", not the saver $sv given to setSaver")
       }
-      KinesisRegistry.savers.put(queryName, sv)
       rest + ("saverName" -> queryName)
     }
-    consume(source(spark, options), shardPartitioned = true)
+    val registration = saverOpt.map(new GraftConsumer.SaverRegistration(spark, queryName, _))
+    try consume(source(spark, options), shardPartitioned = true)
+    catch { case e: Throwable => registration.foreach(_.release()); throw e }
   }
 
   /** ≈ Run (kinesis.go:147-154): validates the handler (the reference
@@ -235,6 +237,9 @@ class GraftConsumer(val option: GraftOption) {
           val seq = ltrim(col("sequenceNumber"), "0")
           ds.repartition(col("shardId")).sortWithinPartitions(col("shardId"), length(seq), seq)
         }
+      // Only run(df) writes the saver, so only it needs each shard's last
+      // sequence back; under start() the pass returns no rows.
+      val writes = saver.isDefined
       val last = ordered
         .mapPartitions { (it: Iterator[KinesisRecord]) =>
           val lastSeq = scala.collection.mutable.HashMap.empty[(String, String), String]
@@ -248,7 +253,7 @@ class GraftConsumer(val option: GraftOption) {
                 case ErrorPolicy.Fail => throw e
               }
             }
-            lastSeq((rec.streamName, rec.shardId)) = rec.sequenceNumber
+            if (writes) lastSeq((rec.streamName, rec.shardId)) = rec.sequenceNumber
           }
           lastSeq.iterator.map { case ((s, sh), seq) => (s, sh, seq) }
         }
@@ -287,4 +292,39 @@ class GraftConsumer(val option: GraftOption) {
 object GraftConsumer {
   /** ≈ NewIteratorWithOpt (kinesis.go:252-263). */
   def apply(option: GraftOption): GraftConsumer = new GraftConsumer(option)
+
+  // The registration that last put each query name's saver. Guarded by
+  // its own monitor, together with the puts and removes it orders.
+  private val latest = scala.collection.mutable.HashMap.empty[String, SaverRegistration]
+
+  /** [[GraftConsumer.start]]'s entry in
+    * [[graft.sources.kinesis.KinesisRegistry.savers]]: put when built,
+    * removed when the query named `name` that starts next in `spark`
+    * terminates, whether stopped, failed or drained under availableNow.
+    * Only the latest registration for a name removes it, and only while
+    * the entry is still `saver`, so a newer consumer's entry survives an
+    * older query's late termination event.
+    */
+  private final class SaverRegistration(spark: SparkSession, name: String, saver: SequenceSaver)
+      extends StreamingQueryListener {
+    @volatile private var runId: java.util.UUID = _
+    latest.synchronized { KinesisRegistry.savers.put(name, saver); latest(name) = this }
+    spark.streams.addListener(this)
+
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      if (runId == null && e.name == name) runId = e.runId
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      if (e.runId == runId) release()
+
+    def release(): Unit = {
+      spark.streams.removeListener(this)
+      latest.synchronized {
+        if (latest.get(name).contains(this)) {
+          latest.remove(name)
+          KinesisRegistry.savers.remove(name, saver)
+        }
+      }
+    }
+  }
 }

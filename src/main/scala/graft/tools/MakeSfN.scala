@@ -4,17 +4,21 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Derive an sfN-scale fixture from the driver's sf0.1 parquet by N×
-  * KEY-STRIDED replication — the generalization of [[MakeSf1]]
-  * (same stride table, same disjoint-sub-database rationale; see that
-  * object's scaladoc for why the strides clear every in-query id
-  * injection). Built for the r14 second-scaling-data-point ask
-  * (VERDICT r13 item 1): sf0.1 → sf1 → sf5 turns ONE scaling ratio
-  * into a trajectory — a family that is linear shows ~5× sf1→sf5; a
+  * KEY-STRIDED replication: replica i shifts every key column by
+  * i·stride (strides are powers of ten above the key range), so the
+  * copies are disjoint in key space and every FK join
+  * (lineitem↔orders↔customer, lineitem↔part/supplier) lands inside its
+  * own replica — N disjoint sub-databases, the shape an N× TPC-H load
+  * has. region/nation stay fixed (they are fixed-size at every TPC-H
+  * sf). Built for the r14 second-scaling-data-point ask (VERDICT r13
+  * item 1): sf0.1 → sf1 → sf5 turns ONE scaling ratio into a
+  * trajectory — a family that is linear shows ~5× sf1→sf5; a
   * creeping-superlinear one (s03's output-bound 8.5×, t02) shows its
   * curve.
   *
   * Usage: runMain graft.tools.MakeSfN <replicas> <dstDir>
-  *   e.g.  runMain graft.tools.MakeSfN 50 /root/repo/target/sf5
+  *   e.g.  runMain graft.tools.MakeSfN 10 target/sf1
+  *         runMain graft.tools.MakeSfN 50 target/sf5
   *
   * Content columns are byte-identical replicas of sf0.1, so the
   * fixture is valid for PLAN-SHAPE and SCALING measurement and for
@@ -31,10 +35,14 @@ object MakeSfN {
     val spark = ProbeSession()
     val src = "/root/testdata/sf0.1"
 
-    // identical stride table to MakeSf1 — strides clear each key's
-    // sf0.1 range by ≥10× AND every in-query derived-id injection
-    // (m06 doc_id+999999, d09 doc_id+1000000) stays inside its
-    // replica's id space
+    // key → stride; every stride clears its key's sf0.1 range by ≥ 10×.
+    // doc/vec strides are 10M, NOT 1M: several queries inject derived
+    // ids in-query (m06 copies at doc_id+999999, d09 passages at
+    // doc_id+1000000), and a 1M stride made those collide with
+    // replica-1's id space — duplicate doc_ids with DIFFERENT content,
+    // whose pair identity is ambiguous (the m06 rowcount divergence
+    // that exposed this). 10M keeps every in-query injection inside
+    // its replica's id space.
     val strides: Map[String, Long] = Map(
       "o_orderkey" -> 10000000L, "l_orderkey" -> 10000000L,
       "o_custkey" -> 1000000L, "c_custkey" -> 1000000L,

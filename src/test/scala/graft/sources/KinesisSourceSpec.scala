@@ -3,6 +3,7 @@ package graft.sources
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSuite
@@ -650,5 +651,50 @@ class KinesisSourceSpec extends SparkSuite {
         .map(r => new String(r.getAs[Array[Byte]](0))).toSet
       assert(got == Set("a1", "a2", "a3", "b1", "b2"))
     } finally q.stop()
+  }
+
+  test("one planning round probes each shard at most once per kind, and no shard it need not") {
+    val name = "s-probes"
+    FakeKinesisService.createStream(name, 4)
+    val probes = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
+    val client = new FakeKinesisClient() {
+      override def sequenceAfter(streamName: String, shardId: String,
+          afterSequence: Option[String], maxRecords: Int): (Option[String], Boolean) = {
+        probes += ((shardId, maxRecords))
+        super.sequenceAfter(streamName, shardId, afterSequence, maxRecords)
+      }
+    }
+    def shard(i: Int) = f"shardId-$i%012d"
+    def push(i: Int, n: Int): Seq[String] =
+      (1 to n).map(k => FakeKinesisService.push(name, shard(i), s"pk$k", s"$i-$k".getBytes))
+    val seqs = (0 until 4).map(push(_, 3))
+    // split shard 1 (children 4, 5), merge shards 2 and 3 (child 6)
+    FakeKinesisService.splitShard(name, shard(1))
+    FakeKinesisService.mergeShards(name, shard(2), shard(3))
+    (4 to 6).foreach(push(_, 2))
+    // shard 0: open, nobody's parent, at TRIM_HORIZON; shard 1 part read;
+    // shard 2 drained; shard 3 not yet read: every child waits
+    val start = KinesisOffset(Map(shard(0) -> "", shard(1) -> seqs(1)(0),
+      shard(2) -> seqs(2).last, shard(3) -> ""))
+    val saver = new InMemorySequenceSaver
+    val stream = new KinesisMicroBatchStream(name, client, Some(saver), 1000)
+    val end = stream.latestOffset(start, ReadLimit.maxRows(90)).asInstanceOf[KinesisOffset]
+
+    val m = stream.metrics(java.util.Optional.empty())
+    assert(m.get("numGatedChildren") == "3" && m.get("numProducingShards") == "3", s"metrics: $m")
+    val perShard = m.get("admittedPerShard").toInt
+    assert(perShard == 30)
+    assert(end.positions == Map(shard(0) -> seqs(0).last, shard(1) -> seqs(1).last,
+      shard(2) -> seqs(2).last, shard(3) -> seqs(3).last))
+    assert(saver.snapshot == Map((name, shard(1)) -> seqs(1)(0)), "shard 2 is drained: no entry")
+
+    val byShard = probes.toList.groupBy(_._1)
+    for ((sh, ps) <- byShard) {
+      assert(ps.count(_._2 == 1) <= 1, s"$sh: more than one limit-1 probe: $ps")
+      assert(ps.count(_._2 == perShard) <= 1, s"$sh: more than one admission probe: $ps")
+    }
+    assert(byShard(shard(0)).map(_._2) == List(perShard),
+      "an open shard at TRIM_HORIZON that is nobody's parent gets no limit-1 probe")
+    for (c <- 4 to 6) assert(!byShard.contains(shard(c)), s"gated ${shard(c)} was probed")
   }
 }

@@ -638,6 +638,56 @@ class GraftConsumerSpec extends SparkSuite {
     } finally consumer.shutdown(10.seconds)
   }
 
+  test("start() removes its saver's registry entry when its query ends, drained or stopped") {
+    import graft.sources.kinesis._
+    HandlerSink.clear()
+    val name = "gc-registry"
+    FakeKinesisService.createStream(name, 1)
+    KinesisRegistry.clients.put(s"$name-fake", new FakeKinesisClient())
+    val shard = "shardId-000000000000"
+    val seqs = (1 to 3).map(i => FakeKinesisService.push(name, shard, s"pk$i", s"p$i".getBytes))
+    val key = s"graft-consumer-$name"
+    def consumer(saver: SequenceSaver) = GraftConsumer(GraftOption().withStreamName(name))
+      .setSaver(saver)
+      .checkpointLocation(java.nio.file.Files.createTempDirectory("graft-ckpt-registry").toString)
+      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
+    val options = Map("clientName" -> s"$name-fake")
+
+    // ends on its own under availableNow()
+    val drained = new InMemorySequenceSaver
+    val c1 = consumer(drained).availableNow()
+    val q1 = c1.start(spark, options)
+    try assert(q1.awaitTermination(60000))
+    finally assert(c1.shutdown(10.seconds))
+    q1.exception.foreach(e => throw e)
+    ListenerBusFlush(spark.sparkContext)
+    assert(drained.get(name, shard).contains(seqs.last))
+    assert(!KinesisRegistry.savers.contains(key), "a drained query left its saver registered")
+
+    // stopped while tailing
+    val tailing = new InMemorySequenceSaver
+    val c2 = consumer(tailing).sleepLimit(50.millis)
+    val q2 = c2.start(spark, options)
+    try {
+      q2.processAllAvailable()
+      assert(KinesisRegistry.savers.get(key).exists(_ eq tailing), "no entry while running")
+    } finally assert(c2.shutdown(10.seconds))
+    ListenerBusFlush(spark.sparkContext)
+    assert(!KinesisRegistry.savers.contains(key), "a stopped query left its saver registered")
+
+    // an entry someone put after the start is not this query's to remove
+    val c3 = consumer(new InMemorySequenceSaver).sleepLimit(50.millis)
+    val q3 = c3.start(spark, options)
+    val newer = new InMemorySequenceSaver
+    try {
+      q3.processAllAvailable()
+      KinesisRegistry.savers.put(key, newer)
+    } finally assert(c3.shutdown(10.seconds))
+    ListenerBusFlush(spark.sparkContext)
+    assert(KinesisRegistry.savers.get(key).exists(_ eq newer), "a newer entry was removed")
+    KinesisRegistry.savers.remove(key)
+  }
+
   test("a second drain from the same session compiles no generated class") {
     import graft.sources.kinesis._
     HandlerSink.clear()

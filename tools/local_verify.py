@@ -13,7 +13,8 @@ Reads each <verifyOutDir>/<name> parquet (Spark result), runs the
 matching oracle SQL from oracle_sql.json in DuckDB against the sfDir
 tables, and compares: schema (column names), row count, and values
 (columns sorted by name, rows sorted, exact match; floats compared to
-1e-9 rel tolerance as a fallback diagnostic).
+1e-9 rel tolerance as a fallback diagnostic). A query without an
+oracle fails.
 
 GRAFT_VERIFY_EXT=1 swaps in the scale-robust oracle EXTENSIONS from
 oracle_ext.json (SparkEntry.oracleExt) for the queries that have one:
@@ -163,7 +164,7 @@ if len(sys.argv) > 3:
 # the CORRECTNESS_sf1.json shape, regenerable at any fixture.
 json_out = os.environ.get("GRAFT_VERIFY_JSON")
 records = {}
-n_pass = n_fail = n_rowsonly = 0
+n_pass = n_fail = 0
 for name in names:
     files = glob.glob(f"{out}/{name}/*.parquet")
     got = con.sql(f"SELECT * FROM read_parquet({files})").df()
@@ -179,10 +180,9 @@ for name in names:
             n_fail += 1
             continue
     elif name not in oracle:
-        status = "ROWS-ONLY" if len(got) > 0 else "ROWS-ONLY-EMPTY!"
-        n_rowsonly += 1
-        rec["err"] = "rows-only (no oracle)"
-        print(f"{status:18s} {name:28s} rows={len(got)}")
+        print(f"{'NO-ORACLE-ERR':18s} {name:28s} rows={len(got)}")
+        rec["err"] = "no oracle"
+        n_fail += 1
         continue
     else:
         try:
@@ -201,7 +201,7 @@ for name in names:
         n_pass += 1
     else:
         n_fail += 1
-print(f"\n== {n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only ==")
+print(f"\n== {n_pass} pass, {n_fail} fail ==")
 if json_out:
     with open(json_out, "w") as f:
         json.dump(records, f, indent=1)
