@@ -10,83 +10,52 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Committed previous-round snapshot (BENCH_BASELINE.json —
-    // refreshed at round OPEN from the previous round's driver capture,
-    // so a round's bench always compares against the PRIOR round).
-    // Parsed up front because it doubles as the matched-subset
-    // selector below. sf-mismatched (or sf-less) baselines are
-    // unusable — treated as absent (r10 ADVICE).
-    val baseline: Option[(Long, Map[String, Double])] = try {
-      val p = java.nio.file.Paths.get("BENCH_BASELINE.json")
-      if (!java.nio.file.Files.exists(p)) None
-      else {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(java.nio.file.Files.readAllBytes(p))
-        if (!root.hasNonNull("sf") || root.get("sf").asText() != sfDir) None
-        else {
-          val best = root.get("best")
-          val it = best.fieldNames()
-          val prev = scala.collection.mutable.Map.empty[String, Double]
-          while (it.hasNext) {
-            val k = it.next(); prev(k) = best.get(k).asDouble()
-          }
-          Some((root.get("round").asLong(), prev.toMap))
-        }
-      }
-    } catch { case _: Throwable => None }
-    // Isolation mode (r11 VERDICT item 1): SPARK_GRAFT_BENCH_ONLY_MATCHED=1
-    // runs ONLY the baseline-matched subset — a fresh JVM with no JIT/
-    // code-cache/artifact pressure from the other ~90 queries — so a
-    // matched-total drift can be attributed: persists in isolation ⇒
-    // box drift; vanishes ⇒ suite-growth pressure.
-    val onlyMatched = sys.env.get("SPARK_GRAFT_BENCH_ONLY_MATCHED").contains("1")
-    // Arbitrary subset (comma-separated names) for targeted scale runs
-    // (e.g. the sf1 top-20 capture); composes with nothing — it wins.
+    // Arbitrary subset (comma-separated names) for targeted runs, e.g.
+    // the sf1 top-20 capture: such a run builds only the artifacts its
+    // queries read.
     val onlyNames = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Skip-list for scale captures: a query whose parameters are
-    // gate-pinned can exhaust LOCAL disk at a big derived sf (the r14
-    // finding on the then-pinned s03/s10 LSH at sf5) and, worse,
-    // poison every LATER query's run with no-space-left-on-device
-    // failures. Since r16 no registered query needs it — s03/s10 are
-    // re-registered on the scale-sized rule — but the mechanism stays
-    // for future derived-scale triage. Skipping is loud: the skipped
-    // names are recorded in the output JSON.
-    val skipNames = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val suite0 =
-      if (onlyNames.isDefined)
-        SparkEntry.queries.filter { case (k, _) => onlyNames.get(k) }
-      else if (onlyMatched)
-        SparkEntry.queries.filter { case (k, _) => baseline.exists(_._2.contains(k)) }
-      else SparkEntry.queries
-    val suite = suite0.filter { case (k, _) => !skipNames(k) }
+    val suite = onlyNames.fold(SparkEntry.queries)(names =>
+      SparkEntry.queries.filter { case (k, _) => names(k) })
     // Untimed warm-up: JIT/codegen/classloading otherwise lands on
     // whichever query happens to run first (incl. MLlib's one-time
     // BLAS/class init, which the IVF query would otherwise absorb).
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()
-    // Ingest-time artifact builds: s04 reads the precomputed IVF index
-    // and the dedup family (d03/d04/d06) reads the materialized shingle
-    // table — both are data-preparation outputs at scale (partitioned /
-    // written tables), not per-query work.
-    operators.Similarity.prepareIndex(spark, sfDir)
-    operators.Dedup.prepareShingles(spark, sfDir)
-    operators.Relational.prepareStats(spark, sfDir)
+    // Ingest-time artifacts (the IVF index, the shingle table, the
+    // stats) are built by each query's first read through ArtifactStore,
+    // inside the untimed warm pass below: its run is `cold_s`, the build
+    // plus the query.
+    val sc = spark.sparkContext
+    val layers = obs.QueryLayers.attach(sc)
     // Queries are materialized through the noop DSv2 sink: every output
     // column is fully evaluated, unlike count(), whose column pruning
     // lets Catalyst skip unreferenced scalar-expression work.
     // A failed run must never win best-of-N (a fast AnalysisException
     // would otherwise report as the query's best time) — failures score
     // +Inf and surface as -1 if no run of a query ever succeeded.
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // Each run is keyed (`name/label`), so QueryLayers attributes its
+    // jobs, tasks and bytes to it; jobs that building the DataFrame
+    // starts count as outside its exec phase.
+    def runOnce(name: String, label: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, obs.Layers) = {
+      val key = s"$name/$label"
+      sc.setLocalProperty(obs.QueryLayers.QueryKey, key)
       val t0 = System.nanoTime()
       val dt =
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          sc.setLocalProperty(obs.QueryLayers.PhaseKey, "build")
+          val df = fn(spark, sfDir)
+          sc.setLocalProperty(obs.QueryLayers.PhaseKey, "exec")
+          df.write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         } catch { case _: Throwable => Double.PositiveInfinity }
+        finally {
+          sc.setLocalProperty(obs.QueryLayers.QueryKey, null)
+          sc.setLocalProperty(obs.QueryLayers.PhaseKey, null)
+        }
+      org.apache.spark.ListenerBusFlush(sc)
+      val spent = layers.remove(key)
       // Inter-query reap, OUTSIDE the timed window AND outside the
       // failure-scoring try (an InterruptedException during the sleep
       // must not mark a successful run as failed): Spark's
@@ -99,14 +68,14 @@ object Bench {
       // d04 in one unreaped JVM, 7.4 s with the reap). Each query
       // is charged its own execution, not its predecessors' trash.
       try { System.gc(); Thread.sleep(800) } catch { case _: InterruptedException => () }
-      dt
+      (dt, spent)
     }
     // One untimed interleaved warm pass over the whole suite before any
     // timed run: janino codegen + classloading for each query's plan
     // otherwise lands inside run 1, making the median track run-1 JIT
     // noise instead of plan cost (r4: median 60.5 s vs best-of 38.6 s,
     // dominated by one slow first run).
-    suite.foreach { case (name, fn) => runOnce(name, fn) }
+    val cold = suite.map { case (name, fn) => name -> runOnce(name, "warm", fn)._1 }
     // Best-of-N per query: single-run times on this class of box vary
     // ±30% (JIT, GC, page cache), which would swamp round-over-round
     // plan-cost deltas.
@@ -115,14 +84,16 @@ object Bench {
     // parses stdout): lets a telemetry capture (vmstat/proc sampling
     // alongside the bench, tools/bench_capture.sh) attribute a
     // poisoned run's window to kernel/CPU-steal/GC mechanisms.
-    def timedRun(idx: Int): Map[String, Double] = {
+    def timedRun(idx: Int): Map[String, (Double, obs.Layers)] = {
       System.err.println(s"BENCH_RUN_START $idx ${java.time.Instant.now()}")
-      val r = suite.map { case (name, fn) => name -> runOnce(name, fn) }.toMap
+      val r = suite.map { case (name, fn) => name -> runOnce(name, s"run-$idx", fn) }
       System.err.println(s"BENCH_RUN_END $idx ${java.time.Instant.now()} " +
-        f"total=${r.values.filter(v => !v.isInfinity).sum}%.2f")
+        f"total=${runTotal(r)}%.2f")
       r
     }
-    val runsBuf = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
+    def runTotal(r: Map[String, (Double, obs.Layers)]): Double =
+      r.values.map(_._1).filter(v => !v.isInfinity).sum
+    val runsBuf = scala.collection.mutable.ArrayBuffer.empty[Map[String, (Double, obs.Layers)]]
     (1 to nRuns).foreach { i => runsBuf += timedRun(i) }
     // Run-level sanity (r15 VERDICT item 3): BENCH_r15_sf1_full shipped
     // a POISONED run — run 2 uniformly ~2x slower across ALL queries,
@@ -135,8 +106,6 @@ object Bench {
     // never wins a min). Flagging is loud: indices + totals go into
     // bench_full.json's poisoned_runs, and the count rides the median
     // line, so a capture can't embed a poisoned median silently again.
-    def runTotal(r: Map[String, Double]): Double =
-      r.values.filter(v => !v.isInfinity).sum
     val PoisonRatio = 1.5
     def poisonedIdx: Seq[Int] = {
       val ts = runsBuf.map(runTotal)
@@ -173,26 +142,25 @@ object Bench {
       // replacement restores the draw count, never widens it. The
       // fastest run is never poison-flagged (flagging is relative to
       // it), so the clean set is never empty.
-      val best = cleanRuns.take(nRuns).map(_(name)).min
+      val (best, bestLayers) = cleanRuns.take(nRuns).map(_(name)).minBy(_._1)
       // median over CLEAN runs only (poisoned runs stay in per_run)
-      val med = median(cleanRuns.map(_(name)))
+      val med = median(cleanRuns.map(_(name)._1))
       name -> (if (best.isInfinity) -1.0 else best,
-               if (med.isInfinity) -1.0 else med)
+               if (med.isInfinity) -1.0 else med, bestLayers)
     }.toMap
     // Certification-cost ledger (r12 VERDICT item 7): for every
     // certified query in this suite, time its RAW (uncertified)
     // production path with the same warm + best-of-N protocol and
     // report certified/raw/overhead — the per-query price of the
     // in-query certification, kept auditable in bench_full.json.
-    // Skipped in subset/isolation modes (their totals feed the
-    // guardrail; the ledger is a full-suite artifact).
+    // Skipped in subset runs (the ledger is a full-suite artifact).
     val certLedger: Map[String, (Double, Double)] =
-      if (onlyNames.isDefined || onlyMatched) Map.empty
+      if (onlyNames.isDefined) Map.empty
       else {
         val twins = SparkEntry.certRawTwins.filter { case (k, _) => results.contains(k) }
-        twins.foreach { case (name, fn) => runOnce(name, fn) } // warm
+        twins.foreach { case (name, fn) => runOnce(name, "raw-warm", fn) }
         twins.map { case (name, fn) =>
-          val raw = (1 to nRuns).map(_ => runOnce(name, fn)).min
+          val raw = (1 to nRuns).map(i => runOnce(name, s"raw-$i", fn)._1).min
           name -> (if (raw.isInfinity) -1.0 else raw,
             results.get(name).map(_._1).getOrElse(-1.0))
         }
@@ -210,37 +178,15 @@ object Bench {
       if (x < 0) "-1"
       else String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(x))
     def qMap(dec: Int): String =
-      results.map { case (k, (b, _)) => "\"" + k + "\":" + fmt(dec)(b) }
+      results.map { case (k, (b, _, _)) => "\"" + k + "\":" + fmt(dec)(b) }
         .mkString("{", ",", "}")
-    val meds = results.map { case (k, (_, m)) => "\"" + k + "\":" + fmt(3)(m) }
+    val meds = results.map { case (k, (_, m, _)) => "\"" + k + "\":" + fmt(3)(m) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
     val totalMed = if (results.nonEmpty) results.values.map(_._2).sum else 0.0
-    // Matched-query guardrail (r10): compare this run's best-of-N to
-    // the baseline parsed above over the queries present in BOTH.
-    // Uniform box drift (the r7-r9 ±13% pattern that kept costing
-    // analysis time) moves matched_cur_total/matched_prev_total
-    // together across the whole matched set; a real plan regression
-    // is localized to its query. An unreadable baseline degrades to
-    // omitting the fields, never to failing the bench.
-    val matchedExtra: String = baseline match {
-      case Some((rnd, prev)) =>
-        // results.toSeq first: collect on the MAP would key the pairs
-        // by previous-round time and silently collapse queries whose
-        // 2-decimal baselines coincide (observed 64 -> 45)
-        val matched = results.toSeq.collect {
-          case (k, (b, _)) if b >= 0 && prev.get(k).exists(_ >= 0) =>
-            (prev(k), b)
-        }
-        s""","baseline_round":$rnd,"matched_n":${matched.size},""" +
-          s""""matched_prev_total":${fmt(2)(matched.map(_._1).sum)},""" +
-          s""""matched_cur_total":${fmt(2)(matched.map(_._2).sum)}""" +
-          (if (onlyMatched) s""","isolated_matched_subset":true""" else "")
-      case None => ""
-    }
     val medianLine = s"""{"metric":"total_median","value":${fmt(3)(totalMed)},"unit":"sec","queries_median":$meds,"runs":${runs.length},"poisoned_runs":${poisoned.size}}"""
     def assemble(dec: Int): String =
-      s"""{"metric":"total","value":${fmt(2)(total)},"unit":"sec"$matchedExtra,"queries":${qMap(dec)},"sf":"$sfDir","runs":$nRuns}"""
+      s"""{"metric":"total","value":${fmt(2)(total)},"unit":"sec","queries":${qMap(dec)},"sf":"$sfDir","runs":$nRuns}"""
     // At 130+ queries the full per-query map no longer fits the
     // driver's ~2000-char stdout capture at ANY precision (133 names ×
     // ~24 chars ≈ 3.3 KB → the metric line would truncate and parse as
@@ -250,9 +196,9 @@ object Bench {
     // fast ones were dropped; the complete map is always in
     // target/bench_full.json and on the earlier median line.
     def assembleTop(dec: Int, budget: Int): String = {
-      val entries = results.toSeq.sortBy { case (_, (b, _)) => -b }
-        .map { case (k, (b, _)) => "\"" + k + "\":" + fmt(dec)(b) }
-      val fixed = s"""{"metric":"total","value":${fmt(2)(total)},"unit":"sec"$matchedExtra,"sf":"$sfDir","runs":$nRuns,"queries_omitted":NNN,"queries":{}}"""
+      val entries = results.toSeq.sortBy { case (_, (b, _, _)) => -b }
+        .map { case (k, (b, _, _)) => "\"" + k + "\":" + fmt(dec)(b) }
+      val fixed = s"""{"metric":"total","value":${fmt(2)(total)},"unit":"sec","sf":"$sfDir","runs":$nRuns,"queries_omitted":NNN,"queries":{}}"""
       var room = budget - fixed.length
       val kept = entries.takeWhile { e =>
         val fits = room - (e.length + 1) >= 0
@@ -260,7 +206,7 @@ object Bench {
         fits
       }
       val omitted = entries.length - kept.length
-      s"""{"metric":"total","value":${fmt(2)(total)},"unit":"sec"$matchedExtra,"sf":"$sfDir","runs":$nRuns,"queries_omitted":$omitted,"queries":${kept.mkString("{", ",", "}")}}"""
+      s"""{"metric":"total","value":${fmt(2)(total)},"unit":"sec","sf":"$sfDir","runs":$nRuns,"queries_omitted":$omitted,"queries":${kept.mkString("{", ",", "}")}}"""
     }
     val finalLine = {
       val l2 = assemble(2)
@@ -271,7 +217,7 @@ object Bench {
     // Per-run times (including any run the trimmed median dropped) so a
     // noisy round can be diagnosed from the artifact itself.
     val perRun = runs.map { r =>
-      r.map { case (k, v) =>
+      r.map { case (k, (v, _)) =>
         "\"" + k + "\":" + fmt(3)(if (v.isInfinity) -1.0 else v)
       }.mkString("{", ",", "}")
     }.mkString("[", ",", "]")
@@ -280,16 +226,20 @@ object Bench {
       "\"" + k + "\":{\"certified\":" + fmt(3)(cert) + ",\"raw\":" + fmt(3)(raw) +
         ",\"overhead\":" + fmt(3)(over) + "}"
     }.mkString("{", ",", "}")
-    val skipJson = skipNames.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val coldJson = cold.toSeq.sortBy(_._1).map { case (k, v) =>
+      "\"" + k + "\":" + fmt(3)(if (v.isInfinity) -1.0 else v)
+    }.mkString("{", ",", "}")
+    val layersJson = results.toSeq.sortBy(_._1).map { case (k, (_, _, l)) =>
+      "\"" + k + "\":" + l.json
+    }.mkString("{", ",", "}")
     val poisonJson = {
       val totals = runs.map(r => fmt(2)(runTotal(r))).mkString("[", ",", "]")
       val idx = poisoned.toSeq.sorted.mkString("[", ",", "]")
       s""""poisoned_runs":$idx,"run_totals":$totals"""
     }
-    val full = s"""{"best":$qs,"median":$meds,"per_run":$perRun,"total":$total,"total_median":$totalMed$matchedExtra,"cert_overhead":$certJson,"skipped":$skipJson,$poisonJson,"sf":"$sfDir","runs":${runs.length}}"""
+    val full = s"""{"best":$qs,"median":$meds,"per_run":$perRun,"total":$total,"total_median":$totalMed,"cold_s":$coldJson,"layers":$layersJson,"cert_overhead":$certJson,$poisonJson,"sf":"$sfDir","runs":${runs.length}}"""
     try {
-      val p = java.nio.file.Paths.get(
-        if (onlyMatched) "target/bench_full_matched.json" else "target/bench_full.json")
+      val p = java.nio.file.Paths.get("target/bench_full.json")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, full.getBytes("UTF-8"))
     } catch { case _: Throwable => () }

@@ -25,19 +25,10 @@ object Verify {
     // the full suite remains the default.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Skip-list for scale captures (mirrors Bench's SPARK_GRAFT_BENCH_SKIP):
-    // a gate-pinned query can exhaust local disk at a big derived sf
-    // (s03/s10's pinned-bits LSH at sf5) and poison every later query's
-    // run. A skip makes the capture a SUBSET — the marker below stays
-    // loud about it — and the driver's gate never sets either env.
-    val skip = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val selected0 = only match {
+    val selected = only match {
       case Some(names) => SparkEntry.queries.filter(q => names(q._1))
       case None => SparkEntry.queries
     }
-    val selected = selected0.filter(q => !skip(q._1))
     // A subset run into a dir holding stale per-query dirs from a prior
     // full run would let local_verify.py report stale greens for the
     // unselected queries (the round-8 silent-staleness class). Make a
@@ -45,7 +36,7 @@ object Verify {
     // SUBSET marker file that local_verify.py prints per run, and warn
     // on stdout when the target dir already has non-selected results.
     val markerPath = Paths.get(s"$outDir/SUBSET_MARKER")
-    if (only.isDefined || skip.nonEmpty) {
+    if (only.isDefined) {
       val names = selected.keySet
       val stale = Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && !names(f.getName)).map(_.getName).sorted
@@ -55,7 +46,6 @@ object Verify {
           stale.take(10).mkString(", ") + (if (stale.length > 10) ", …" else ""))
       Files.writeString(markerPath,
         s"SUBSET RUN (${names.size} of ${SparkEntry.queries.size} queries): " +
-          (if (skip.nonEmpty) s"skipped=${skip.toSeq.sorted.mkString(",")} " else "") +
           names.toSeq.sorted.mkString(",") + "\n")
     } else Files.deleteIfExists(markerPath)
     selected.foreach { case (name, fn) =>

@@ -60,7 +60,7 @@ object Dedup {
   // codegen'd min(xxhash64(h, i)) aggs — no per-doc array allocation)
   // whose generated class is large enough that janino recompilation
   // dominated d04's per-query cost when rebuilt per run.
-  private def minhashSignatures(s: SparkSession, dir: String,
+  private[operators] def minhashSignatures(s: SparkSession, dir: String,
       family: String = "xxhash64"): DataFrame =
     ArtifactStore.get(s, dir, s"minhash/$family")(
       _.keep(minhashSignaturesOf(shingleHashes(s, dir, family), family)))
@@ -756,21 +756,18 @@ object Dedup {
   private val SigBroadcastMaxBytes = 256L << 20
 
   private[operators] def minhashPairsFromSig(sig: DataFrame,
-      threshold: Double = 0.5, nOpt: Option[Long] = None): DataFrame = {
+      threshold: Double = 0.5, nOpt: Option[Long] = None,
+      sigBroadcastMaxBytes: Long = SigBroadcastMaxBytes): DataFrame = {
     val bandCols: Seq[Column] = (0 until Bands).map { b =>
       struct(lit(b).as("band"),
         concat_ws(",", (b * RowsPerBand until (b + 1) * RowsPerBand)
           .map(i => expr(s"sig[$i]")): _*).as("bucket"))
     }
     // caller-declared doc count or one eager sizing pass (cheap for
-    // the registered path: the signature artifact is persisted);
-    // bound overridable per session (testing/ops knob)
+    // the registered path: the signature artifact is persisted)
     val n = nOpt.getOrElse(sig.count())
-    val bcMax = sig.sparkSession.conf
-      .get("graft.dedup.sigBroadcastMaxBytes",
-        SigBroadcastMaxBytes.toString).toLong
     def sigHint(df: DataFrame): DataFrame =
-      if (n * (48L + 8L * NumPerms) <= bcMax) broadcast(df)
+      if (n * (48L + 8L * NumPerms) <= sigBroadcastMaxBytes) broadcast(df)
       else df
     val bands = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
@@ -787,7 +784,7 @@ object Dedup {
     // dropDuplicates'. Above the bound the fetch joins are sort-merge
     // and carrying duplicates through them would out-cost the
     // distinct, so the dedup-first shuffle plan stands.
-    val bcast = n * (48L + 8L * NumPerms) <= bcMax
+    val bcast = n * (48L + 8L * NumPerms) <= sigBroadcastMaxBytes
     graft.functions.GraftExtensions.register(sig.sparkSession)
     val candPairs = bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&

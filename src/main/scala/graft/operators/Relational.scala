@@ -180,7 +180,8 @@ object Relational {
     * + persist below are ingest-time work.
     */
   private def prepareGraphLoop(edges: DataFrame, aCol: String,
-      bCol: String, deg: DataFrame, nv: Long, ne: Long): GraphLoop = {
+      bCol: String, deg: DataFrame, nv: Long, ne: Long,
+      vertexBroadcastMaxBytes: Long = LoopVertexBroadcastMaxBytes): GraphLoop = {
     // cap read from the OWNER session's runtime conf (not the child's,
     // which only sees builder-time SparkContext conf — r10 ADVICE), so
     // a parent-session spark.conf.set is honored
@@ -191,20 +192,15 @@ object Relational {
       math.min(origParts.toLong, 2L * ne / LoopRowsPerTask + 1L)).toInt
     s.conf.set("spark.sql.shuffle.partitions", parts.toString)
     // vMode decided up front (it gates the layout AND the AQE choice
-    // below); bound overridable per owner session — internal/testing
-    // knob: fixture |V| can never reach the flip point, and the
-    // u-layout branch must not ship untested
-    val maxBytes = edges.sparkSession.conf
-      .get("graft.loop.vertexBroadcastMaxBytes",
-        LoopVertexBroadcastMaxBytes.toString).toLong
-    val vMode = 48L * nv <= maxBytes
+    // below)
+    val vMode = 48L * nv <= vertexBroadcastMaxBytes
     // r17: in vMode the loop session runs with AQE OFF. The v-layout
     // plan is exactly the one AQE cannot improve — the per-round
     // aggregate is exchange-free by cached layout and every |V|-row
     // join is already hinted broadcast, so there is NO exchange
     // boundary to coalesce or re-strategize — while AQE wraps each of
     // the k chained broadcast builds in its own re-planning stage
-    // (measured: JobCountProbe/OPTIMIZATION_r17.md). The u-layout
+    // (measured: JobCountProbe@fdfe750, OPTIMIZATION_r17.md). The u-layout
     // (giant graphs) KEEPS AQE: its unhinted joins rely on runtime
     // size-based strategy choice.
     s.conf.set("spark.sql.adaptive.enabled", (!vMode).toString)
@@ -256,7 +252,15 @@ object Relational {
     * tables; `releaseGraphLoop` frees them.
     */
   def buildGraphLoop(edges: DataFrame, aCol: String = "a",
-      bCol: String = "b"): GraphLoop = {
+      bCol: String = "b"): GraphLoop =
+    buildGraphLoop(edges, aCol, bCol, LoopVertexBroadcastMaxBytes)
+
+  /** [[buildGraphLoop]] under a given vertex-broadcast bound: fixture
+    * |V| can never reach the flip point, so a bound of 0 is how the
+    * u-layout branch gets tested.
+    */
+  private[operators] def buildGraphLoop(edges: DataFrame, aCol: String,
+      bCol: String, vertexBroadcastMaxBytes: Long): GraphLoop = {
     val canon = canonicalEdges(edges, aCol, bCol).persist()
     try {
       val ne = canon.count() // materialize: read once for deg, once for bi
@@ -267,7 +271,7 @@ object Relational {
         .groupBy("v").agg(count(lit(1)).as("d")).persist()
       try {
         val nv = deg.count()
-        prepareGraphLoop(canon, "a", "b", deg, nv, ne)
+        prepareGraphLoop(canon, "a", "b", deg, nv, ne, vertexBroadcastMaxBytes)
       } finally deg.unpersist() // loop tables are materialized
     } finally canon.unpersist()
   }

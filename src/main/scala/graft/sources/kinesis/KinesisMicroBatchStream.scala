@@ -79,7 +79,8 @@ case class KinesisInputPartition(
   *    parent-before-child order — stronger than the reference, which
   *    pauses the whole stream until all parents close, kinesis.go:84-93)
   *  - one drained-shard rule → `Round`: each planning round decides,
-  *    at its start positions and with at most one probe per shard,
+  *    at its start positions and its shard listing, with at most one
+  *    probe per shard and none for a shard listed open,
   *    which shards are drained (closed, nothing after the start) and
   *    which children are gated; gating, admission, metrics and the
   *    saver sync (O5/O8/O9) all read that one view
@@ -169,7 +170,7 @@ class KinesisMicroBatchStream(
       sh.shardId -> start.getOrElse("") // "" = TRIM_HORIZON (sequence.go:83-86)
     }.toMap
     // gate against the same (pre-batch) positions: nothing consumed yet
-    KinesisOffset(positions -- new Round(positions).gated(shards))
+    KinesisOffset(positions -- new Round(positions, shards).gated(shards))
   }
 
   override def latestOffset(): Offset =
@@ -181,25 +182,28 @@ class KinesisMicroBatchStream(
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startPos = start.asInstanceOf[KinesisOffset].positions
-    val round = new Round(startPos)
-    // `start` is the last WAL-committed offset: mirror it into the
-    // user-visible saver now, the saver's one write site. So the saver
-    // never leads the WAL, and in tail mode trails it by at most one
-    // trigger (the reference writes after every batch,
+    // `start` is the last WAL-committed offset: each round mirrors it
+    // into the user-visible saver (syncSaver), the saver's one write
+    // site. So the saver never leads the WAL, and in tail mode trails it
+    // by at most one trigger (the reference writes after every batch,
     // kinesis.go:198-201).
-    syncSaver(round)
     // O9 (status half): while the stream is not ACTIVE (UPDATING /
     // DELETING / CREATING), hold the offsets — an empty batch, no new
     // admission — and resume from the same positions once ACTIVE again.
     // The reference's monitor stops all readers while the stream is not
     // active and restarts them when it is (kinesis.go:84-93, README.md:6).
+    // A held round lists no shards (on AWS, ListShards can fail while a
+    // stream is CREATING or DELETING), so its saver sync probes.
     val status = client.streamStatus(streamName)
     if (status != "ACTIVE") {
+      syncSaver(new Round(startPos, Nil))
       logInfo(s"stream $streamName status=$status: holding offsets (no admission)")
       metricsSnapshot = Map("streamStatus" -> status, "holdingOffsets" -> "true")
       return KinesisOffset(startPos)
     }
     val shards = client.listShards(streamName)
+    val round = new Round(startPos, shards)
+    syncSaver(round)
     // Children are gated against the START positions: a child may only
     // enter the offset map once its parent was fully consumed by a
     // PREVIOUS (committed) batch — never in the same batch that reads
@@ -210,8 +214,7 @@ class KinesisMicroBatchStream(
     // THIS batch: closed drained parents linger in listShards forever,
     // and gated children wait for their parents — neither may dilute
     // live shards' share. An open shard counts without a probe.
-    val producing = shards.count(sh =>
-      !gated(sh.shardId) && (!sh.closed || !round.drained(sh.shardId)))
+    val producing = shards.count(sh => !gated(sh.shardId) && !round.drained(sh.shardId))
     val perShard = limit match {
       case r: ReadMaxRows =>
         math.max(1, (r.maxRows() / math.max(1, producing)).toInt)
@@ -261,19 +264,23 @@ class KinesisMicroBatchStream(
   private def seqLeq(a: String, b: String): Boolean = SequenceOrder.leq(a, b)
 
   /** One planning round's view of the shards at its start positions
-    * `basis` (shardId → last consumed sequence, "" = TRIM_HORIZON).
+    * `basis` (shardId → last consumed sequence, "" = TRIM_HORIZON) and
+    * its shard `listing` (empty in a held round, which lists none).
     * Every drained-shard decision of the round reads it, so a shard is
     * probed at most once per round (`sequenceAfter(start, 1)`, a
     * GetRecords call on AWS), and only when a decision needs it.
     */
-  private final class Round(val basis: Map[String, String]) {
+  private final class Round(val basis: Map[String, String], listing: Seq[ShardInfo]) {
     private val probes = mutable.HashMap.empty[String, (Option[String], Boolean)]
+    private val listedOpen = listing.filterNot(_.closed).map(_.shardId).toSet
 
     /** Closed, with nothing after its start position: the shard has been
       * read to its end (kinesis.go:203-210). A shard absent from `basis`
-      * starts at TRIM_HORIZON, so it is drained only if it is empty.
+      * starts at TRIM_HORIZON, so it is drained only if it is empty. A
+      * shard the listing reports open is not drained, without a probe;
+      * one the listing does not hold is probed.
       */
-    def drained(shardId: String): Boolean = {
+    def drained(shardId: String): Boolean = !listedOpen(shardId) && {
       val after = basis.get(shardId).filter(_.nonEmpty)
       val (lastOpt, closed) = probes.getOrElseUpdate(shardId,
         client.sequenceAfter(streamName, shardId, after, 1))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -140,12 +140,8 @@ object StreamOps {
       .flatMapGroupsWithState[(Double, Long), (Long, Long, Double)](
         OutputMode.Append, GroupStateTimeout.NoTimeout()) {
         (key, rows, state) =>
-          val sorted = rows.toArray.sortWith { (a, b) =>
-            val c = a._3.compareTo(b._3)
-            c < 0 || (c == 0 && a._2 < b._2)
-          }
           var (acc, n) = state.getOption.getOrElse((0.0, 0L))
-          sorted.foreach { r =>
+          chronological(rows).foreach { r =>
             acc = if (n == 0L) r._4 else (1.0 - alpha) * acc + alpha * r._4
             n += 1
           }
@@ -273,6 +269,31 @@ object StreamOps {
       .toDF("day", "n_seen", "row", "bucket", "cnt")
   }
 
+  /** Each user's events as (user_id, event_id, ts, event_type), grouped
+    * by user: the input of the per-user event-time folds below.
+    */
+  private def eventsByUser(events: DataFrame)
+      : KeyValueGroupedDataset[Long, (Long, Long, java.sql.Timestamp, String)] = {
+    val s = events.sparkSession
+    import s.implicits._
+    events.select(
+        col("user_id").cast("long"), col("event_id").cast("long"),
+        col("ts"), col("event_type"))
+      .as[(Long, Long, java.sql.Timestamp, String)]
+      .groupByKey(_._1)
+  }
+
+  /** A group's rows of one micro-batch in (ts, event_id) order: the
+    * iterator's order is not the event-time order that the per-key
+    * folds replay.
+    */
+  private def chronological[A](rows: Iterator[(Long, Long, java.sql.Timestamp, A)])
+      : Array[(Long, Long, java.sql.Timestamp, A)] =
+    rows.toArray.sortWith { (a, b) =>
+      val c = a._3.compareTo(b._3)
+      c < 0 || (c == 0 && a._2 < b._2)
+    }
+
   /** Streaming last-touch attribution — the streaming twin of the
     * batch q62 window: each `targetType` event (purchase) is credited
     * to the user's most recent PRECEDING `touchTypes` event
@@ -302,11 +323,7 @@ object StreamOps {
     val s = events.sparkSession
     import s.implicits._
     val touches = touchTypes.toSet
-    val ds = events.select(
-        col("user_id").cast("long"), col("event_id").cast("long"),
-        col("ts"), col("event_type"))
-      .as[(Long, Long, java.sql.Timestamp, String)]
-    ds.groupByKey(_._1)
+    eventsByUser(events)
       .flatMapGroupsWithState[
           (java.sql.Timestamp, Long, String),
           (Long, Long, java.sql.Timestamp, Option[Long], Option[String],
@@ -314,13 +331,9 @@ object StreamOps {
         OutputMode.Append, GroupStateTimeout.NoTimeout()) {
         (user, rows, state) =>
           var last = state.getOption
-          val sorted = rows.toArray.sortWith { (a, b) =>
-            val c = a._3.compareTo(b._3)
-            c < 0 || (c == 0 && a._2 < b._2)
-          }
           val out = Seq.newBuilder[(Long, Long, java.sql.Timestamp,
             Option[Long], Option[String], Option[java.sql.Timestamp], Boolean)]
-          sorted.foreach { r =>
+          chronological(rows).foreach { r =>
             if (r._4 == targetType)
               out += ((user, r._2, r._3, last.map(_._2), last.map(_._3),
                 last.map(_._1), last.isDefined))
@@ -352,23 +365,15 @@ object StreamOps {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val s = events.sparkSession
     import s.implicits._
-    val ds = events.select(
-        col("user_id").cast("long"), col("event_id").cast("long"),
-        col("ts"), col("event_type"))
-      .as[(Long, Long, java.sql.Timestamp, String)]
-    ds.groupByKey(_._1)
+    eventsByUser(events)
       .flatMapGroupsWithState[
           (java.sql.Timestamp, Long, String),
           (Long, Long, java.sql.Timestamp, String, String)](
         OutputMode.Append, GroupStateTimeout.NoTimeout()) {
         (user, rows, state) =>
           var last = state.getOption
-          val sorted = rows.toArray.sortWith { (a, b) =>
-            val c = a._3.compareTo(b._3)
-            c < 0 || (c == 0 && a._2 < b._2)
-          }
           val out = Seq.newBuilder[(Long, Long, java.sql.Timestamp, String, String)]
-          sorted.foreach { r =>
+          chronological(rows).foreach { r =>
             last.foreach { l => out += ((user, r._2, r._3, l._3, r._4)) }
             last = Some((r._3, r._2, r._4))
           }

@@ -1,7 +1,7 @@
 package org.apache.spark
 
 /** Access to the listener bus's flush, which Spark keeps package-private:
-  * a test reads its listeners only after every event posted so far has
+  * a caller reads its listeners only after every event posted so far has
   * been delivered.
   */
 object ListenerBusFlush {

@@ -579,14 +579,13 @@ class DedupSimilaritySpec extends SparkSuite {
     // d04 path parity: the first-collision (broadcast) plan and the
     // dropDuplicates (above-bound shuffle) plan yield the identical
     // pair relation — est_jaccard included
-    def d04Rows(maxBytes: String): Set[(Long, Long, Double)] = {
-      spark.conf.set("graft.dedup.sigBroadcastMaxBytes", maxBytes)
-      try SparkEntry.queries("d04_dedup_minhash")(spark, dir)
+    // (the registered d04 body, under the given signature broadcast bound)
+    def d04Rows(maxBytes: Long): Set[(Long, Long, Double)] =
+      Dedup.minhashPairsFromSig(Dedup.minhashSignatures(spark, dir, "md5"),
+          sigBroadcastMaxBytes = maxBytes)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      finally spark.conf.unset("graft.dedup.sigBroadcastMaxBytes")
-    }
-    val viaFirstCollision = d04Rows((256L << 20).toString)
-    val viaDistinct = d04Rows("0")
+    val viaFirstCollision = d04Rows(256L << 20)
+    val viaDistinct = d04Rows(0L)
     assert(viaFirstCollision == viaDistinct,
       s"d04 dedup paths diverge: only-bcast=${viaFirstCollision -- viaDistinct} " +
         s"only-shuffle=${viaDistinct -- viaFirstCollision}")

@@ -126,12 +126,9 @@ class GraphPropertySpec extends SparkSuite {
         // random sweep covers BOTH loop layouts, not just the one the
         // fixture vertex counts can reach
         val forceU = i % 2 == 1
-        if (forceU)
-          spark.conf.set("graft.loop.vertexBroadcastMaxBytes", "0")
         val loop =
-          try Relational.buildGraphLoop(df)
-          finally if (forceU)
-            spark.conf.unset("graft.loop.vertexBroadcastMaxBytes")
+          if (forceU) Relational.buildGraphLoop(df, "a", "b", vertexBroadcastMaxBytes = 0L)
+          else Relational.buildGraphLoop(df)
         assert(loop.vMode == !forceU, s"case $i layout flag")
         try {
           val canon = Relational.canonicalEdges(df)
@@ -171,12 +168,8 @@ class GraphPropertySpec extends SparkSuite {
       val mlGen = Relational.minLabelPropagate(canon, 3)
         .select(expr("bit_xor(xxhash64(v, label))"), count(lit(1))).head()
       Seq(Some("0"), None).foreach { forceU =>
-        forceU.foreach(b =>
-          spark.conf.set("graft.loop.vertexBroadcastMaxBytes", b))
-        val loop =
-          try Relational.buildGraphLoop(canon)
-          finally if (forceU.isDefined)
-            spark.conf.unset("graft.loop.vertexBroadcastMaxBytes")
+        val loop = forceU.fold(Relational.buildGraphLoop(canon))(b =>
+          Relational.buildGraphLoop(canon, "a", "b", vertexBroadcastMaxBytes = b.toLong))
         assert(loop.vMode == forceU.isEmpty, s"layout flag (forceU=$forceU)")
         try {
           val prLoop = Relational.pagerankIterateLoop(loop, 3)

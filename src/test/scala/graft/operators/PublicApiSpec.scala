@@ -1153,10 +1153,7 @@ class PublicApiSpec extends SparkSuite {
     val edges = (Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L)) ++
       (20L to 28L).map(v => (10L, v))).toDF("a", "b")
     val vLoop = Relational.buildGraphLoop(edges)
-    spark.conf.set("graft.loop.vertexBroadcastMaxBytes", "0")
-    val uLoop =
-      try Relational.buildGraphLoop(edges)
-      finally spark.conf.unset("graft.loop.vertexBroadcastMaxBytes")
+    val uLoop = Relational.buildGraphLoop(edges, "a", "b", vertexBroadcastMaxBytes = 0L)
     try {
       assert(vLoop.vMode && !uLoop.vMode, "override must flip the layout")
       assert(uLoop.bi.count() == vLoop.bi.count() &&

@@ -696,5 +696,23 @@ class KinesisSourceSpec extends SparkSuite {
     assert(byShard(shard(0)).map(_._2) == List(perShard),
       "an open shard at TRIM_HORIZON that is nobody's parent gets no limit-1 probe")
     for (c <- 4 to 6) assert(!byShard.contains(shard(c)), s"gated ${shard(c)} was probed")
+
+    // next round: shard 0 is open with a non-empty start, shards 1-3 are
+    // drained, so the children 4-6 are no longer gated
+    probes.clear()
+    val end2 = stream.latestOffset(end, ReadLimit.maxRows(90)).asInstanceOf[KinesisOffset]
+    val m2 = stream.metrics(java.util.Optional.empty())
+    assert(m2.get("numGatedChildren") == "0" && m2.get("numProducingShards") == "4", s"metrics: $m2")
+    val perShard2 = m2.get("admittedPerShard").toInt
+    assert(perShard2 == 22)
+    assert(end2.positions(shard(0)) == seqs(0).last)
+    assert(saver.snapshot == Map((name, shard(0)) -> seqs(0).last), "shards 1-3 are drained")
+    val byShard2 = probes.toList.groupBy(_._1)
+    for ((sh, ps) <- byShard2) {
+      assert(ps.count(_._2 == 1) <= 1, s"$sh: more than one limit-1 probe: $ps")
+      assert(ps.count(_._2 == perShard2) <= 1, s"$sh: more than one admission probe: $ps")
+    }
+    for (o <- 0 +: (4 to 6)) assert(byShard2(shard(o)).map(_._2) == List(perShard2),
+      s"open ${shard(o)} gets only its admission probe: ${byShard2(shard(o))}")
   }
 }
