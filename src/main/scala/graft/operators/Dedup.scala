@@ -422,16 +422,6 @@ object Dedup {
     * so the 4M default peaks around ~230 MB and settles near ~80 MB —
     * sized for a driver with a few GB of heap.
     */
-  /** Upper bound for hint-broadcasting the loop's |nodes|-row label
-    * table each round (~48 bytes/row estimate, the
-    * [[graft.operators.Relational]] adjJoin sizing style): 256 MB →
-    * ~5.6M nodes. The r15 CcProbe@059cb1a A/B on the s07b-shaped sf5 survivor
-    * graph (100k nodes / 24M directed edges, clique components)
-    * measured the hinted loop against the stats-blind shuffle plan —
-    * see SCALE.md.
-    */
-  private val CcLabelBroadcastMaxBytes = 256L << 20
-
   def connectedComponents(pairsDf: DataFrame,
       checkpointDir: Option[String] = None,
       driverMaxEdges: Long = 4000000L): DataFrame = {
@@ -505,17 +495,17 @@ object Dedup {
       // directed edges over ≤100k nodes) that is ~2 edge-width shuffles
       // per round for a labels side of a few MB. The label table's row
       // count is FIXED across rounds (labels only change value, never
-      // cardinality), so one count sizes the whole loop: under the bound
-      // (~48 bytes/row, the GraphArtifact.adjJoin estimate) every
+      // cardinality), so one count sizes the whole loop: under
+      // [[SideTableBroadcastMaxBytes]] (~48 bytes/row: ~5.6M nodes;
+      // the r15 CcProbe@059cb1a A/B on the s07b-shaped sf5 survivor
+      // graph, 100k nodes / 24M directed edges, SCALE.md) every
       // propagate and pointer-jump joins broadcast-hash against the
       // label side and the only per-round edge-width work is an
       // in-memory scan + map-side partial min. Above the bound (the
       // 100 TB regime: billions of NODES, not just edges) the hint is
       // skipped and the loop shuffles as before.
       val nNodes = labels.count()
-      val hintLabels = 48L * nNodes <= CcLabelBroadcastMaxBytes
-      def hinted(df: DataFrame): DataFrame =
-        if (hintLabels) broadcast(df) else df
+      val hinted = hintIf(48L * nNodes <= SideTableBroadcastMaxBytes)
       // Min-label propagation only ever DECREASES labels, so the label
       // sum is strictly monotone until fixpoint — one cheap aggregate
       // per round detects convergence without a join. (Zero for the
@@ -743,21 +733,20 @@ object Dedup {
     * re-verification pass — the estimate IS the point of MinHash at
     * 100 TB.
     */
-  /** Upper bound for hint-broadcasting the |docs|-row SIGNATURE table
-    * into the candidate→signature fetch joins (~560 bytes/row at 64
-    * perms): 256 MB → ~480k docs. Same measured rationale as the
-    * similarity family's vecHint (SizedBitsProbe2 at 5974cb1, r15): the
-    * persisted signature artifact is stats-blind, so both fetch joins plan
-    * sort-merge and the second one sorts the candidate stream with
-    * sig_a (64 longs) already attached — millions of wide rows through
-    * an external sort at sf5. Under the bound both joins broadcast-
-    * hash; above it (100 TB corpora) the shuffle plan stands.
+  /** The |docs|-row SIGNATURE table (~560 bytes/row at 64 perms) is
+    * broadcast-hinted into the candidate→signature fetch joins while it
+    * fits `sigBroadcastMaxBytes` ([[SideTableBroadcastMaxBytes]]:
+    * ~480k docs). Same measured rationale as the similarity family's
+    * vecHint (SizedBitsProbe2 at 5974cb1, r15): the persisted signature
+    * artifact is stats-blind, so both fetch joins plan sort-merge and
+    * the second one sorts the candidate stream with sig_a (64 longs)
+    * already attached — millions of wide rows through an external sort
+    * at sf5. Under the bound both joins broadcast-hash; above it
+    * (100 TB corpora) the shuffle plan stands.
     */
-  private val SigBroadcastMaxBytes = 256L << 20
-
   private[operators] def minhashPairsFromSig(sig: DataFrame,
       threshold: Double = 0.5, nOpt: Option[Long] = None,
-      sigBroadcastMaxBytes: Long = SigBroadcastMaxBytes): DataFrame = {
+      sigBroadcastMaxBytes: Long = SideTableBroadcastMaxBytes): DataFrame = {
     val bandCols: Seq[Column] = (0 until Bands).map { b =>
       struct(lit(b).as("band"),
         concat_ws(",", (b * RowsPerBand until (b + 1) * RowsPerBand)
@@ -766,9 +755,8 @@ object Dedup {
     // caller-declared doc count or one eager sizing pass (cheap for
     // the registered path: the signature artifact is persisted)
     val n = nOpt.getOrElse(sig.count())
-    def sigHint(df: DataFrame): DataFrame =
-      if (n * (48L + 8L * NumPerms) <= sigBroadcastMaxBytes) broadcast(df)
-      else df
+    val bcast = n * (48L + 8L * NumPerms) <= sigBroadcastMaxBytes
+    val sigHint = hintIf(bcast)
     val bands = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
     // Under the broadcast bound the pair dedup is FIRST-COLLISION
@@ -784,7 +772,6 @@ object Dedup {
     // dropDuplicates'. Above the bound the fetch joins are sort-merge
     // and carrying duplicates through them would out-cost the
     // distinct, so the dedup-first shuffle plan stands.
-    val bcast = n * (48L + 8L * NumPerms) <= sigBroadcastMaxBytes
     graft.functions.GraftExtensions.register(sig.sparkSession)
     val candPairs = bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&

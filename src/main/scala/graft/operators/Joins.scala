@@ -353,10 +353,7 @@ object Joins {
     * No false negatives ever; false-positive rate is the standard
     * (1 − e^(−hashes·n/bits))^hashes.
     */
-  case class BloomFilter(words: Array[Long], bits: Int, hashes: Int) {
-    /** Number of distinct keys inserted (for FPP accounting). */
-    def loadFactor(n: Long): Double = hashes.toDouble * n / bits
-  }
+  case class BloomFilter(words: Array[Long], bits: Int, hashes: Int)
 
   /** The `hashes` bit positions of `key` in a `bits`-bit filter —
     * shared by build and probe so the layouts can never diverge.

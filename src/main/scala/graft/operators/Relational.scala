@@ -100,9 +100,10 @@ object Relational {
     *  - `deg`: the degree table as (u, d), persisted in the child
     *    session — the rank divisor every round joins.
     *  - `vMode`: the ingest-time LAYOUT + BROADCAST decision, sized
-    *    from the exact |V| the build just counted (the
-    *    [[GraphArtifact.adjJoin]] pattern). When the |V|-row
-    *    rank/label table fits [[LoopVertexBroadcastMaxBytes]],
+    *    from the exact |V| the build just counted (as the adjacency
+    *    hint in [[orientedCooccurGraph]] is). When the |V|-row
+    *    rank/label table (~48 bytes/row) fits
+    *    [[SideTableBroadcastMaxBytes]],
     *    `biPlus` is hash-partitioned on the AGGREGATION key `v` and
     *    consumers broadcast-hint the per-round |V|-row side
     *    ([[GraphLoop.hintV]]): the broadcast join preserves the
@@ -140,7 +141,7 @@ object Relational {
     // job (scan the cached table, collect to the driver). A local deg
     // makes those builds driver-local — the identical |V|-row driver
     // movement each round's broadcast performs anyway, bounded by the
-    // same LoopVertexBroadcastMaxBytes. Above the bound deg == the
+    // same SideTableBroadcastMaxBytes. Above the bound deg == the
     // distributed degStore and nothing is ever collected.
     /** The pure bidirectional edge list — a partitioning-preserving
       * filter VIEW over the persisted `biPlus` (2·|E| rows).
@@ -148,14 +149,13 @@ object Relational {
     def bi: DataFrame = biPlus.where(col("u") =!= col("v"))
     /** The |V| self-loop rows — the complementary view. */
     def selfLoops: DataFrame = biPlus.where(col("u") === col("v"))
-    /** Broadcast-hint a per-round |V|-row table iff the build sized
-      * it under [[LoopVertexBroadcastMaxBytes]] (`vMode`) — see the
-      * layout discussion above: the hint is what keeps the
-      * exchange-free v-layout on a broadcast join, and omitting it
-      * above the bound is what keeps a billion-vertex table off the
-      * driver.
+    /** Broadcast-hint a |V|-row table iff the build sized it under
+      * [[SideTableBroadcastMaxBytes]] (`vMode`) — see the layout
+      * discussion above: the hint is what keeps the exchange-free
+      * v-layout on a broadcast join, and omitting it above the bound
+      * is what keeps a billion-vertex table off the driver.
       */
-    def hintV(df: DataFrame): DataFrame = if (vMode) broadcast(df) else df
+    def hintV(df: DataFrame): DataFrame = hintIf(vMode)(df)
   }
 
   /** Rows-per-task constant for [[GraphLoop]]'s parallelism clamp —
@@ -163,15 +163,6 @@ object Relational {
     * partition size within a small factor.
     */
   private val LoopRowsPerTask = 1000000L
-
-  /** Upper bound for hint-broadcasting the per-round |V|-row
-    * rank/label table (~48 bytes/row estimate, the
-    * [[GraphArtifact.adjJoin]] sizing style): 256 MB — small against
-    * executor and driver memory, far above the 10 MB planner default
-    * the exchange-free plan can never runtime-correct. Crossing it
-    * flips the whole loop layout to u-partitioning (see [[GraphLoop]]).
-    */
-  private val LoopVertexBroadcastMaxBytes = 256L << 20
 
   /** Build a [[GraphLoop]] from a parent-session edge list and degree
     * table (both ideally persisted — this reads each once). Crossing
@@ -181,7 +172,7 @@ object Relational {
     */
   private def prepareGraphLoop(edges: DataFrame, aCol: String,
       bCol: String, deg: DataFrame, nv: Long, ne: Long,
-      vertexBroadcastMaxBytes: Long = LoopVertexBroadcastMaxBytes): GraphLoop = {
+      vertexBroadcastMaxBytes: Long = SideTableBroadcastMaxBytes): GraphLoop = {
     // cap read from the OWNER session's runtime conf (not the child's,
     // which only sees builder-time SparkContext conf — r10 ADVICE), so
     // a parent-session spark.conf.set is honored
@@ -253,7 +244,7 @@ object Relational {
     */
   def buildGraphLoop(edges: DataFrame, aCol: String = "a",
       bCol: String = "b"): GraphLoop =
-    buildGraphLoop(edges, aCol, bCol, LoopVertexBroadcastMaxBytes)
+    buildGraphLoop(edges, aCol, bCol, SideTableBroadcastMaxBytes)
 
   /** [[buildGraphLoop]] under a given vertex-broadcast bound: fixture
     * |V| can never reach the flip point, so a bound of 0 is how the
@@ -282,17 +273,10 @@ object Relational {
     ()
   }
 
-  /** The cached co-occurrence graph — five ingest-time tables plus the
+  /** The cached co-occurrence graph — the ingest-time tables plus the
     * prepared loop context (at
     * 100 TB: written, bucketed tables maintained at ingest):
     *  - `oriented`: the degree-oriented edge list (src, dst, dd);
-    *  - `adj`: out-adjacency arrays, |V| rows, array length bounded
-    *    O(√m) by orientation — the triangle query intersects these
-    *    in-row instead of materializing the O(m^1.5) wedge set
-    *    through a shuffle (r9 profiling: 41M shuffled wedges → ~1 s
-    *    in-row; a Bloom pre-filter on the closing edge was measured
-    *    and REJECTED — evaluating the filter over 41M wedge rows
-    *    cost more than the shuffle it saved);
     *  - `deg`: total (undirected) degree per vertex, |V| rows — the
     *    PageRank family reads it at every iteration depth; deriving
     *    it in-plan re-shuffled the 2·|E|-row bidirectional list once
@@ -306,8 +290,11 @@ object Relational {
     *    (q75); deriving it in-plan re-aggregated the bidirectional
     *    weighted list per run and paid a 1-row broadcast cross-join
     *    for |V| (3.2 s → 1.1 s, GraphLoopProbe@059cb1a);
+    *  - `common`: per-edge common-neighbor counts (q70, q76), built
+    *    from the persisted out-adjacency arrays (see the build);
+    *  - `wbi`: the weighted bidirectional edge list (q75);
     *  - `loop`: the prepared [[GraphLoop]] the k-round iterative
-    *    operators (q74, q77) run on.
+    *    operators (q72, q74, q77) run on.
     */
   /** `nv` = |V|, captured from the ingest-time `deg.count()` — the
     * PageRank family folds it in as a literal instead of paying a
@@ -317,36 +304,10 @@ object Relational {
     * asserted at build, so `nv` serves both rank families. `ne` = |E|
     * of the canonical/oriented list, sizing the loop clamp.
     */
-  case class GraphArtifact(oriented: DataFrame, adj: DataFrame,
+  case class GraphArtifact(oriented: DataFrame,
       deg: DataFrame, pairs: DataFrame, wdeg: DataFrame,
       common: DataFrame, wbi: DataFrame, nv: Long, ne: Long,
-      loop: GraphLoop) {
-    /** Broadcast-hint a |V|-row table iff the artifact's measured
-      * vertex count bounds it under [[LoopVertexBroadcastMaxBytes]] —
-      * the [[GraphLoop.hintV]] rule applied artifact-side (q75's
-      * weighted-degree divisor rides this through the exchange-free
-      * wbi aggregate; above the bound the join is left to the
-      * planner and the aggregate re-shuffles — unbounded-safe).
-      */
-    def hintV(df: DataFrame): DataFrame =
-      if (48L * nv <= LoopVertexBroadcastMaxBytes) broadcast(df) else df
-    /** The JOIN-SIDE view of `adj`: broadcast-hinted iff the
-      * artifact's own measured (nv, ne) bound the table under
-      * [[AdjBroadcastMaxBytes]]. The r13 sf1 stage audit
-      * (GraphStageProbe@059cb1a) found the static planner sort-merge-joining
-      * the 12M-edge oriented list against this |V|-row table TWICE —
-      * the ~105 MB adjacency estimate clears any real executor's
-      * memory but not the 10 MB `autoBroadcastJoinThreshold` default,
-      * and that strategy flip, not the O(m^1.5) intersection, was
-      * q70/q76's sf1 scaling step (join2 3.9 → 1.3 s, closures
-      * 4.9 → 2.6 s hinted). The artifact sizes the decision from the
-      * exact counts it already materialized — 8·|E| array bytes +
-      * ~48·|V| row overhead — so a billion-vertex graph still takes
-      * the shuffled-join path (the estimate exceeds the bound) with
-      * zero driver risk. */
-    def adjJoin: DataFrame =
-      if (8L * ne + 48L * nv <= AdjBroadcastMaxBytes) broadcast(adj) else adj
-  }
+      loop: GraphLoop)
 
   /** Upper bound for hint-broadcasting a prepared adjacency table:
     * 1 GiB — raised from 256 MB in r14 after TriangleProbe3@059cb1a measured
@@ -358,7 +319,7 @@ object Relational {
     * constants). One static table reused by both attach joins, so —
     * unlike the per-round loop broadcast, which re-ships a CHANGING
     * |V|-row table every iteration and measurably flips at 256 MB
-    * ([[LoopVertexBroadcastMaxBytes]], GraphLoopProbe5@059cb1a) — the
+    * ([[SideTableBroadcastMaxBytes]], GraphLoopProbe5@059cb1a) — the
     * adjacency broadcast amortizes: past ~1 GiB (≳120M edges) the
     * per-executor residency cost stops being trivial and the shuffled
     * SMJ (moving |E| + |V| rows) takes over. Far above the 10 MB
@@ -382,6 +343,9 @@ object Relational {
         .groupBy("p1", "p2").agg(count(lit(1)).as("n_orders")))
       val canon = canonicalEdges(pairs, "p1", "p2")
       val (o, ne) = b.keepCounted(orientEdges(canon))
+      // out-adjacency arrays, |V| rows, each O(√m) long by orientation:
+      // the triangle intersection reads them in-row instead of
+      // shuffling the O(m^1.5) wedge set ([[trianglesFromOriented]])
       val adj = b.keep(o.groupBy(col("src"))
         .agg(array_sort(collect_list(col("dst"))).as("ns")))
       val (deg, nv) = b.keepCounted(o.select(col("src").as("v"))
@@ -401,11 +365,21 @@ object Relational {
       // re-ran inside EACH query on the identical cached inputs; at
       // 100 TB this is the common-neighbor index a link-prediction
       // pipeline maintains at ingest next to its adjacency table.
-      // |common| ≤ |E| rows (triangle edges only). Broadcast sizing
-      // for the intersection join mirrors adjJoin's — the artifact's
-      // own measured counts, not the planner's estimate.
-      val adjB = if (8L * ne + 48L * nv <= AdjBroadcastMaxBytes)
-        broadcast(adj) else adj
+      // |common| ≤ |E| rows (triangle edges only).
+      //
+      // The intersection join's adjacency side is broadcast-hinted iff
+      // the artifact's own measured counts — 8·|E| array bytes +
+      // ~48·|V| row overhead — fit [[AdjBroadcastMaxBytes]]. The r13
+      // sf1 stage audit (GraphStageProbe@059cb1a) found the static
+      // planner sort-merge-joining the 12M-edge oriented list against
+      // this |V|-row table TWICE — the ~105 MB estimate clears any
+      // real executor's memory but not the 10 MB
+      // `autoBroadcastJoinThreshold` default — and that strategy flip,
+      // not the O(m^1.5) intersection, was q70/q76's sf1 scaling step
+      // (join2 3.9 → 1.3 s, closures 4.9 → 2.6 s hinted). A
+      // billion-vertex graph exceeds the bound and takes the shuffled
+      // join with zero driver risk.
+      val adjB = hintIf(8L * ne + 48L * nv <= AdjBroadcastMaxBytes)(adj)
       val common = b.keep(triangleCommonCounts(o, Some(adjB)))
       val loop = prepareGraphLoop(o, "src", "dst", deg, nv, ne)
       b.onRelease(releaseGraphLoop(loop))
@@ -423,7 +397,7 @@ object Relational {
         .unionAll(pairs
           .select(col("p2").as("u"), col("p1").as("v"), col("n_orders").as("w")))
         .repartition(loop.parts, col("v")))
-      GraphArtifact(o, adj, deg, pairs, wdeg, common, wbi, nv, ne, loop)
+      GraphArtifact(o, deg, pairs, wdeg, common, wbi, nv, ne, loop)
     }
 
   /** The SECOND prepared loop context — the bipartite supplier–part
@@ -2340,7 +2314,7 @@ object Relational {
     * which is as meaningless a percentile input as it was in the
     * rank-window form — filter NaNs upstream.
     *
-    * KEY-CARDINALITY SIZING (the adjJoin/vMode sized-hint pattern):
+    * KEY-CARDINALITY SIZING (the graph artifact's sized-hint pattern):
     * the stats/ranks/targets tables are |keys|-row side inputs, and
     * the broadcast hints that make the few-group case cheap would
     * blow the driver at billions of keys. So the hints are applied
@@ -2384,9 +2358,7 @@ object Relational {
     // sized hint: each side table is ≤ |keys|·m·(2·|ps|+2) tiny rows
     val psTotal = vCols.map(_._2.size).sum
     val nKeys = keyCount.getOrElse(stats.count() / nCols)
-    val sized: DataFrame => DataFrame =
-      if (nKeys * nCols * (2L * psTotal + 2L) <= PercentileBroadcastMaxKeys)
-        broadcast else identity
+    val sized = hintIf(nKeys * nCols * (2L * psTotal + 2L) <= PercentileBroadcastMaxKeys)
     val statsB = sized(stats)
 
     def posOf(p: Double): Column = lit(p) * (col("n") - 1).cast("double")
@@ -2552,23 +2524,19 @@ object Relational {
     * and runs in ~1 s. (A Bloom pre-filter on the closing edge was
     * measured and rejected: evaluating a 2 MiB filter literal over
     * 41M wedge rows cost more than the pruned shuffle saved.) At
-    * scale both joins are vertex-keyed equi-joins: the cached-artifact
-    * caller passes [[GraphArtifact.adjJoin]], which broadcast-hints
-    * the adjacency side while its measured size bound fits (the
-    * planner's own estimate mis-sizes the post-aggregate subtree —
-    * the r13 sf1 audit caught it sort-merge-joining a 105 MB table),
-    * and beyond the bound the join falls back to a shuffle that moves
-    * |E| + |V| rows — never O(m^1.5).
-    *
-    * `adjOpt`: the precomputed out-adjacency table (`src`, sorted
-    * `ns` array) — pass the cached artifact (q70 does); derived from
-    * `oriented` on the fly if absent.
+    * scale both joins are vertex-keyed equi-joins: the graph artifact
+    * ([[orientedCooccurGraph]]) broadcast-hints the adjacency side
+    * while its measured size bound fits (the planner's own estimate
+    * mis-sizes the post-aggregate subtree — the r13 sf1 audit caught
+    * it sort-merge-joining a 105 MB table), and beyond the bound the
+    * join falls back to a shuffle that moves |E| + |V| rows — never
+    * O(m^1.5). This generic form derives the adjacency in-plan; the
+    * registered q70 aggregates the artifact's `common` table instead.
     *
     * Output: (`part`, `n_tri`) for every vertex in ≥1 triangle.
     */
-  def trianglesFromOriented(oriented: DataFrame,
-      adjOpt: Option[DataFrame] = None): DataFrame =
-    triangleInstances(oriented, adjOpt)
+  def trianglesFromOriented(oriented: DataFrame): DataFrame =
+    triangleInstances(oriented, None)
       .select(explode(array(col("src"), col("dst"), col("w"))).as("part"))
       .groupBy("part").agg(count(lit(1)).as("n_tri"))
 
@@ -2639,25 +2607,23 @@ object Relational {
     * integer grid (round(10¹²/deg) as a long — the t07 micro-grid
     * trick), so the aggregate sums LONGS (order-independent, exact)
     * and the final rank is a fixed IEEE op sequence over exact inputs.
+    *
+    * This is the GENERIC, lazy form: the degree table and |V| (a 1-row
+    * broadcast scalar) derive in-plan. The registered q72 runs on the
+    * prepared [[GraphLoop]] ([[pagerankStepLoop]]).
+    *
     * Output: (`v`, `s` = grid-summed inbound mass, `rank`).
     */
   def pagerankStep(canon: DataFrame, aCol: String = "a",
-      bCol: String = "b", degOpt: Option[DataFrame] = None,
-      nvOpt: Option[Long] = None): DataFrame = {
+      bCol: String = "b"): DataFrame = {
     val bi = canon.select(col(aCol).as("u"), col(bCol).as("v"))
       .unionAll(canon.select(col(bCol).as("u"), col(aCol).as("v")))
-    val deg = degOpt.map(_.select(col("v").as("u"), col("d")))
-      .getOrElse(bi.groupBy("u").agg(count(lit(1)).as("d")))
-    val agg = bi.join(deg, "u")
+    val deg = bi.groupBy("u").agg(count(lit(1)).as("d"))
+    bi.join(deg, "u")
       .select(col("v"), round(lit(1e12) / col("d")).cast("long").as("c"))
       .groupBy("v").agg(sum("c").as("s"))
-    // |V| as an ingest-time literal when known (same double either
-    // way — the division below is the identical IEEE op); otherwise a
-    // 1-row broadcast scalar
-    val withNv = nvOpt.fold(
-      agg.crossJoin(broadcast(deg.agg(count(lit(1)).as("nv")))))(
-      n => agg.withColumn("nv", lit(n)))
-    withNv.select(col("v"), col("s"),
+      .crossJoin(broadcast(deg.agg(count(lit(1)).as("nv"))))
+      .select(col("v"), col("s"),
       (lit(0.15) / col("nv") +
         lit(0.85) * ((col("s").cast("double") / lit(1e12)) / col("nv")))
         .as("rank"))
@@ -2676,31 +2642,23 @@ object Relational {
     * (round(10¹²·w/W) summed as longs) makes the rank hash-exact
     * across engines.
     *
-    * `wdegOpt`/`nvOpt` mirror [[pagerankStep]]'s cached-divisor
-    * overloads: pass the ingest-time weighted-degree table (`(v, wd)`
-    * schema) and |V| literal (q75 passes `GraphArtifact.wdeg`/`nv`) or
-    * the plan re-aggregates the 2·|E|-row bidirectional weighted list
-    * per run and pays a 1-row broadcast cross-join for |V| (measured
-    * 3.2 s → 1.1 s at sf0.1, GraphLoopProbe@059cb1a). The rank arithmetic is
-    * IEEE-identical either way (long wd, long |V|).
+    * This is the GENERIC, lazy form: the weighted-degree table and |V|
+    * derive in-plan. The registered q75 runs on the graph artifact's
+    * ingest-time tables ([[weightedPagerankStepLoop]]; measured
+    * 3.2 s → 1.1 s at sf0.1 for cached divisors, GraphLoopProbe@059cb1a).
     * Output: (`v`, `s` = grid-summed inbound mass, `rank`).
     */
   def weightedPagerankStep(edges: DataFrame, aCol: String = "a",
-      bCol: String = "b", wCol: String = "w",
-      wdegOpt: Option[DataFrame] = None,
-      nvOpt: Option[Long] = None): DataFrame = {
+      bCol: String = "b", wCol: String = "w"): DataFrame = {
     val bi = edges.select(col(aCol).as("u"), col(bCol).as("v"), col(wCol).as("w"))
       .unionAll(edges.select(col(bCol).as("u"), col(aCol).as("v"), col(wCol).as("w")))
-    val wdeg = wdegOpt.map(_.select(col("v").as("u"), col("wd")))
-      .getOrElse(bi.groupBy("u").agg(sum("w").as("wd")))
-    val agg = bi.join(wdeg, "u")
+    val wdeg = bi.groupBy("u").agg(sum("w").as("wd"))
+    bi.join(wdeg, "u")
       .select(col("v"),
         round(lit(1e12) * col("w") / col("wd")).cast("long").as("c"))
       .groupBy("v").agg(sum("c").as("s"))
-    val withNv = nvOpt.fold(
-      agg.crossJoin(broadcast(wdeg.agg(count(lit(1)).as("nv")))))(
-      n => agg.withColumn("nv", lit(n)))
-    withNv.select(col("v"), col("s"),
+      .crossJoin(broadcast(wdeg.agg(count(lit(1)).as("nv"))))
+      .select(col("v"), col("s"),
       (lit(0.15) / col("nv") +
         lit(0.85) * ((col("s").cast("double") / lit(1e12)) / col("nv")))
         .as("rank"))
@@ -2710,7 +2668,7 @@ object Relational {
     * registered q75 path (r17): the 2·|E|-row weighted bidirectional
     * list is the artifact's ingest-time `wbi` table, hash-partitioned
     * on the AGGREGATION key `v`, and the |V|-row weighted-degree
-    * divisor rides a sized broadcast hint ([[GraphArtifact.hintV]]) —
+    * divisor rides the loop's sized broadcast hint ([[GraphLoop.hintV]]) —
     * so the contribution aggregate is EXCHANGE-FREE, the biPlus
     * layout trick applied to the weighted family. Identical per-row
     * grid arithmetic (round(10¹²·w/W(u)) summed as longs, |V| as the
@@ -2720,7 +2678,7 @@ object Relational {
     */
   def weightedPagerankStepLoop(g: GraphArtifact): DataFrame =
     g.wbi
-      .join(g.hintV(g.wdeg.select(col("v").as("u"), col("wd"))), Seq("u"))
+      .join(g.loop.hintV(g.wdeg.select(col("v").as("u"), col("wd"))), Seq("u"))
       .select(col("v"),
         round(lit(1e12) * col("w") / col("wd")).cast("long").as("c"))
       .groupBy("v").agg(sum("c").as("s"))
@@ -2760,22 +2718,17 @@ object Relational {
     * Output: (`v`, `rank`) after k iterations, one row per vertex.
     */
   def pagerankIterate(canon: DataFrame, k: Int, aCol: String = "a",
-      bCol: String = "b", degOpt: Option[DataFrame] = None,
-      nvOpt: Option[Long] = None): DataFrame = {
+      bCol: String = "b"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val bi = canon.select(col(aCol).as("u"), col(bCol).as("v"))
       .unionAll(canon.select(col(bCol).as("u"), col(aCol).as("v")))
-    // `deg` appears at every iteration depth; pass the cached degree
-    // artifact (`(v, d)` schema) or it re-aggregates the 2·|E|-row
-    // bidirectional list once per plan occurrence. Same for `nv`: the
-    // ingest-time |V| literal replaces one 1-row broadcast cross-join
-    // PER DEPTH (k+1 broadcast jobs at k=3, measured in BENCH_r9's
-    // q74 tail). The rank arithmetic is IEEE-identical either way.
-    val deg = degOpt.map(_.select(col("v").as("u"), col("d")))
-      .getOrElse(bi.groupBy("u").agg(count(lit(1)).as("d")))
-    def withNv(df: DataFrame): DataFrame = nvOpt.fold(
-      df.crossJoin(broadcast(deg.agg(count(lit(1)).as("nv")))))(
-      n => df.withColumn("nv", lit(n)))
+    // `deg` re-aggregates the 2·|E|-row bidirectional list once per
+    // plan occurrence, and |V| is a 1-row broadcast cross-join per
+    // depth (k+1 broadcast jobs at k=3, measured in BENCH_r9's q74
+    // tail) — the costs the prepared [[GraphLoop]] removes
+    val deg = bi.groupBy("u").agg(count(lit(1)).as("d"))
+    def withNv(df: DataFrame): DataFrame =
+      df.crossJoin(broadcast(deg.agg(count(lit(1)).as("nv"))))
     var r = withNv(deg)
       .select(col("u").as("v"), (lit(1.0) / col("nv")).as("rank"))
     for (_ <- 1 to k) {
@@ -2797,7 +2750,7 @@ object Relational {
 
   /** [[pagerankStep]] on a prepared [[GraphLoop]] — the registered
     * q72 path. Identical output (`v`, `s`, `rank`) and identical
-    * grid arithmetic to the generic single step with cached divisors
+    * grid arithmetic to the generic single step
     * (s-sums cross-checked exact in GraphLoopProbe3@059cb1a); the prepared
     * context supplies the pre-materialized bidirectional list and
     * degree table so the one vertex-keyed join + aggregate plan at
@@ -2861,8 +2814,10 @@ object Relational {
     * the common neighbors the other two edges can't see from their
     * own out-lists) — so per-edge counts are one explode + one
     * aggregate over triangle instances, never a second wedge pass.
-    * Degrees attach from the cached |V|-row degree table, and the
-    * final score is ONE IEEE division of exact longs (hash-exact).
+    * Degrees attach from the |V|-row degree table, and the final
+    * score is ONE IEEE division of exact longs (hash-exact). This is
+    * the GENERIC, lazy form; the registered q76 joins the graph
+    * artifact's `common` and `deg` tables ([[linkJaccardFromCommon]]).
     *
     * Edges in zero triangles have jaccard 0 and are omitted — at
     * 100 TB that's the difference between |triangle edges| and |E|
@@ -2870,13 +2825,11 @@ object Relational {
     *
     * Output: (`a`, `b`, `common`, `jaccard`), a < b canonical.
     */
-  def linkJaccard(oriented: DataFrame, adjOpt: Option[DataFrame] = None,
-      degOpt: Option[DataFrame] = None): DataFrame = {
-    val deg = degOpt.getOrElse(
-      oriented.select(col("src").as("v"))
-        .unionAll(oriented.select(col("dst").as("v")))
-        .groupBy("v").agg(count(lit(1)).as("d")))
-    linkJaccardFromCommon(triangleCommonCounts(oriented, adjOpt), deg)
+  def linkJaccard(oriented: DataFrame): DataFrame = {
+    val deg = oriented.select(col("src").as("v"))
+      .unionAll(oriented.select(col("dst").as("v")))
+      .groupBy("v").agg(count(lit(1)).as("d"))
+    linkJaccardFromCommon(triangleCommonCounts(oriented), deg)
   }
 
   /** Per-edge common-neighbor counts — (`a`, `b`, `common`), a < b
@@ -2933,12 +2886,11 @@ object Relational {
     * Output: (`v`, `label`) after k rounds, one row per vertex.
     */
   def minLabelPropagate(canon: DataFrame, k: Int, aCol: String = "a",
-      bCol: String = "b", degOpt: Option[DataFrame] = None): DataFrame = {
+      bCol: String = "b"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val bi = canon.select(col(aCol).as("u"), col(bCol).as("v"))
       .unionAll(canon.select(col(bCol).as("u"), col(aCol).as("v")))
-    val verts = degOpt.map(_.select(col("v")))
-      .getOrElse(bi.select(col("u").as("v")).distinct())
+    val verts = bi.select(col("u").as("v")).distinct()
     // Self-loops fold "min with own label" INTO the propagation join,
     // so each round references the previous label table exactly ONCE.
     // The naive `propagated ∪ previous` form references it twice,

@@ -658,9 +658,10 @@ object Similarity {
     */
   private[graft] def pinnedNearDupPairs(s: SparkSession, dir: String): DataFrame =
     lshNearDupPairs(nearDupBuckets(s, dir), vecs(s, dir), corpusCount(s, dir))
-  /** Upper bound for hint-broadcasting the CORPUS VECTOR side of the
-    * candidate-pair → vector-fetch joins (~560 bytes/row at Dim = 64:
-    * id + array header + 64 doubles): 256 MB → n ≤ ~480k vectors.
+  /** Broadcast hint for the CORPUS VECTOR side of the candidate-pair →
+    * vector-fetch joins (~560 bytes/row at Dim = 64: id + array header
+    * + 64 doubles), under [[SideTableBroadcastMaxBytes]]: n ≤ ~480k
+    * vectors.
     * Why a hint at all: the vector table sits behind a persisted
     * artifact (stats-blind to the 10 MB planner default), so both
     * fetch joins plan sort-merge — and the SECOND one sorts the
@@ -672,9 +673,8 @@ object Similarity {
     * candidates stream through unsorted; above it (the 100 TB corpus)
     * the shape falls back to the shuffle plan.
     */
-  private val VecSideBroadcastMaxBytes = 256L << 20
-  private def vecHint(n: Long)(df: DataFrame): DataFrame =
-    if (n * (48L + 8L * Dim) <= VecSideBroadcastMaxBytes) broadcast(df) else df
+  private def vecHint(n: Long): DataFrame => DataFrame =
+    hintIf(n * (48L + 8L * Dim) <= SideTableBroadcastMaxBytes)
 
   /** The shared s03/s03c pair pipeline over a prebuilt LSH bucket
     * table: narrow bucket self-join → in-row first-collision dedup →

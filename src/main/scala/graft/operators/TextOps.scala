@@ -16,16 +16,12 @@ object TextOps {
 
   // Regex patterns shared with the DuckDB oracles (RE2) — restricted
   // to the common-behavior subset: literal classes, \s, \b,
-  // alternation. Since r13 the Spark side of ALPHA/BPE/STOP/PUNCT runs
-  // the native single-pass counters in NativeTextCounts instead of the
-  // regex engine (the oracles keep these regex spellings, so the hash
-  // gate re-proves the equivalence at every scale); these constants
-  // remain as the CONTRACT those counters implement.
+  // alternation. Since r13 the alpha, BPE-ish, stopword and
+  // punctuation counts run the native single-pass counters in
+  // NativeTextCounts instead of the regex engine; their regex
+  // spellings live in the oracles (and NativeTextCounts documents the
+  // equivalence), so the hash gate re-proves it at every scale.
   private val WS = "\\s+"
-  private val ALPHA = "[A-Za-z]+"
-  private val BPE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
-  private val STOP = "\\b(the|a|of|and|to|in|is|it)\\b"
-  private val PUNCT = "[^A-Za-z0-9\\s]"
 
   private val langMarkers = Seq(
     "en" -> "\\b(the|a|of|and|is)\\b",

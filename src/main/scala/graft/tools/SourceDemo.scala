@@ -36,39 +36,3 @@ object SourceDemo {
     spark.stop()
   }
 }
-
-/** Probes: option validation + full source→consumer composition. */
-object SourceProbe {
-  def main(args: Array[String]): Unit = {
-    val spark = ProbeSession.fixedCores(4, logLevel = "ERROR")
-    // probe 1: missing streamName
-    try {
-      spark.readStream.format("kinesis-graft").load()
-        .writeStream.format("memory").queryName("p1").start()
-    } catch { case e: Throwable =>
-      println("NO_STREAMNAME_ERR=" + Option(e.getMessage).map(_.linesIterator.next()).getOrElse(e.toString)) }
-    // probe 2: unknown clientName
-    FakeKinesisService.createStream("probe", 1)
-    try {
-      val q = spark.readStream.format("kinesis-graft")
-        .option("streamName", "probe").option("clientName", "nope").load()
-        .writeStream.format("memory").queryName("p2").start()
-      q.processAllAvailable()
-    } catch { case e: Throwable =>
-      println("BAD_CLIENT_ERR=" + Option(e.getCause).map(_.getMessage).getOrElse(e.getMessage).linesIterator.next()) }
-    // probe 3: source feeding the GraftConsumer facade (full pipeline)
-    KinesisRegistry.clients.put("fake2", new FakeKinesisClient())
-    (1 to 5).foreach(i => FakeKinesisService.push("probe", "shardId-000000000000", "pk", s"m$i".getBytes))
-    val src = spark.readStream.format("kinesis-graft")
-      .option("streamName", "probe").option("clientName", "fake2").load()
-    val consumer = graft.streaming.GraftConsumer(
-        graft.streaming.GraftOption().withStreamName("probe"))
-      .sleepLimit(scala.concurrent.duration.Duration(100, "ms"))
-      .handle(_ => ConsumerDemo.processed.incrementAndGet())
-    val q3 = consumer.run(src)
-    q3.processAllAvailable()
-    println("PIPELINE_PROCESSED=" + ConsumerDemo.processed.get())
-    consumer.shutdown(scala.concurrent.duration.Duration(30, "s"))
-    spark.stop()
-  }
-}

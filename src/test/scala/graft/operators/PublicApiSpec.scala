@@ -1084,16 +1084,14 @@ class PublicApiSpec extends SparkSuite {
 
     // q74: prepared loop vs generic lazy plan — rank is a fixed IEEE fn
     // of exact grid ints, so equality is exact, not approximate
-    val prGen = Relational.pagerankIterate(
-      g.oriented, 3, "src", "dst", Some(g.deg), Some(g.nv))
+    val prGen = Relational.pagerankIterate(g.oriented, 3, "src", "dst")
     val prLoop = Relational.pagerankIterateLoop(g.loop, 3)
     assert(prLoop.count() == g.nv)
     assert(prGen.join(prLoop.withColumnRenamed("rank", "r2"), Seq("v"))
       .filter(col("rank") =!= col("r2")).count() == 0)
 
-    // q72: single prepared step vs generic with cached divisors
-    val stGen = Relational.pagerankStep(
-      g.oriented, "src", "dst", Some(g.deg), Some(g.nv))
+    // q72: single prepared step vs generic
+    val stGen = Relational.pagerankStep(g.oriented, "src", "dst")
     val stLoop = Relational.pagerankStepLoop(g.loop)
     assert(stLoop.count() == g.nv)
     assert(stGen.join(stLoop.select(col("v"), col("s").as("s2"),
@@ -1102,19 +1100,17 @@ class PublicApiSpec extends SparkSuite {
       .count() == 0)
 
     // q77: integer labels, exact
-    val mlGen = Relational.minLabelPropagate(
-      g.oriented, 3, "src", "dst", Some(g.deg))
+    val mlGen = Relational.minLabelPropagate(g.oriented, 3, "src", "dst")
     val mlLoop = Relational.minLabelPropagateLoop(g.loop, 3)
     assert(mlLoop.count() == g.nv)
     assert(mlGen.join(mlLoop.withColumnRenamed("label", "l2"), Seq("v"))
       .filter(col("label") =!= col("l2")).count() == 0)
 
-    // q75: cached weighted-degree/|V| divisors vs in-plan derivation
+    // q75: the artifact's weighted tables vs in-plan derivation
     val wGen = Relational.weightedPagerankStep(g.pairs, "p1", "p2", "n_orders")
-    val wCached = Relational.weightedPagerankStep(g.pairs, "p1", "p2",
-      "n_orders", Some(g.wdeg), Some(g.nv))
-    assert(wCached.count() == g.nv)
-    assert(wGen.join(wCached.select(col("v"), col("s").as("s2"),
+    val wLoop = Relational.weightedPagerankStepLoop(g)
+    assert(wLoop.count() == g.nv)
+    assert(wGen.join(wLoop.select(col("v"), col("s").as("s2"),
         col("rank").as("r2")), Seq("v"))
       .filter(col("s") =!= col("s2") || col("rank") =!= col("r2"))
       .count() == 0)

@@ -715,4 +715,29 @@ class KinesisSourceSpec extends SparkSuite {
     for (o <- 0 +: (4 to 6)) assert(byShard2(shard(o)).map(_._2) == List(perShard2),
       s"open ${shard(o)} gets only its admission probe: ${byShard2(shard(o))}")
   }
+
+  test("option errors: a missing streamName, an unknown clientName, an unknown saverName") {
+    freshStream("sOpts", 1)
+    FakeKinesisService.push("sOpts", "shardId-000000000000", "pk", "r1".getBytes)
+    // the whole cause chain's messages: a scan-time error reaches the
+    // caller wrapped in a StreamingQueryException
+    def failure(queryName: String, opts: (String, String)*): String = {
+      val e = intercept[Throwable] {
+        val df = opts.foldLeft(spark.readStream.format("kinesis-graft")) {
+          case (r, (k, v)) => r.option(k, v)
+        }.load()
+        val q = df.writeStream.format("memory").queryName(queryName).start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    val noStream = failure("t_opt_stream", "clientName" -> "fake")
+    assert(noStream.contains("option 'streamName' is required"), noStream)
+    val badClient = failure("t_opt_client", "streamName" -> "sOpts", "clientName" -> "nope")
+    assert(badClient.contains("no client registered as 'nope'"), badClient)
+    val badSaver = failure("t_opt_saver", "streamName" -> "sOpts", "clientName" -> "fake",
+      "saverName" -> "nope")
+    assert(badSaver.contains("no saver registered as 'nope'"), badSaver)
+  }
 }

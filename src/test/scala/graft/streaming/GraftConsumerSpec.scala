@@ -467,6 +467,32 @@ class GraftConsumerSpec extends SparkSuite {
     } finally assert(consumer.shutdown(30.seconds))
   }
 
+  test("run(df) over a kinesis-graft DataFrame handles each pushed record once, in order per shard") {
+    import graft.sources.kinesis._
+    HandlerSink.clear()
+    FakeKinesisService.createStream("gc-rundf", 2)
+    KinesisRegistry.clients.put("gc-rundf-fake", new FakeKinesisClient())
+    val shards = Seq("shardId-000000000000", "shardId-000000000001")
+    val pushed = for (i <- 1 to 7; sh <- shards)
+      yield sh -> FakeKinesisService.push("gc-rundf", sh, s"pk$i", s"$sh-$i".getBytes)
+    // an admission cap of 3 spreads each shard over several batches
+    val src = spark.readStream.format("kinesis-graft")
+      .option("streamName", "gc-rundf").option("clientName", "gc-rundf-fake")
+      .option("maxRecordsPerFetch", "3").load()
+    val consumer = GraftConsumer(GraftOption().withStreamName("gc-rundf"))
+      .sleepLimit(50.millis)
+      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
+    val q = consumer.run(src)
+    try {
+      q.processAllAvailable()
+      val seen = HandlerSink.seen.asScala.toList
+      assert(seen.size == pushed.size, s"a record was handled twice or not at all: $seen")
+      for (sh <- shards)
+        assert(seen.filter(_._1 == sh).map(_._2) == pushed.filter(_._1 == sh).map(_._2),
+          s"order on $sh")
+    } finally assert(consumer.shutdown(10.seconds))
+  }
+
   test("start() runs the handler in the source's per-shard tasks: no shuffle, no sort, one job per batch") {
     import graft.sources.kinesis._
     HandlerSink.clear()
