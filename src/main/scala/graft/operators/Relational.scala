@@ -460,22 +460,40 @@ object Relational {
   def rawTwins: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q27_sketches" -> ((s, dir) =>
       sketchAggs(lineitem(s, dir)).orderBy("l_returnflag")),
-    "q37_hll_union" -> ((s, dir) => {
-      val c = customer(s, dir)
-      val n = nation(s, dir)
-      val cn = c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      cn.groupBy("n_regionkey", "n_nationkey")
-        .agg(hll_sketch_agg(col("c_custkey")).as("sk"))
-        .groupBy("n_regionkey")
-        .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("approx_merged"))
-        .orderBy("n_regionkey")
-    }),
+    "q37_hll_union" -> ((s, dir) =>
+      regionMergedSketches(customerNations(s, dir)).orderBy("n_regionkey")),
     "q65_sliding_distinct_hll" -> ((s, dir) =>
-      slidingDistinctApprox(
-        events(s, dir)
-          .groupBy(to_date(col("ts")).as("day"))
-          .agg(hll_sketch_agg(col("user_id"), 12).as("sk")),
-        windowDays = 7).orderBy("day")))
+      weeklyDistinctHll(dayUserPairs(s, dir))))
+
+  /** Customers joined to their nation: q37's input. */
+  private def customerNations(s: SparkSession, dir: String): DataFrame = {
+    val c = customer(s, dir)
+    val n = nation(s, dir)
+    c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
+  }
+
+  /** q37's merged-sketch chain: per-nation customer HLL sketches,
+    * re-merged per region into `approx_merged`.
+    */
+  private def regionMergedSketches(cn: DataFrame): DataFrame =
+    cn.groupBy("n_regionkey", "n_nationkey")
+      .agg(hll_sketch_agg(col("c_custkey")).as("sk"))
+      .groupBy("n_regionkey")
+      .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("approx_merged"))
+
+  /** The distinct (day `d`, user `u`) pairs of `events`: q65's input. */
+  private def dayUserPairs(s: SparkSession, dir: String): DataFrame =
+    events(s, dir)
+      .select(to_date(col("ts")).as("d"), col("user_id").as("u")).distinct()
+
+  /** q65's sketch branch: per-day HLL sketches (lgK 12) of `pairs`,
+    * merged per trailing week into `u_approx`, ordered by day.
+    */
+  private def weeklyDistinctHll(pairs: DataFrame): DataFrame =
+    slidingDistinctApprox(
+      pairs.groupBy(col("d").as("day"))
+        .agg(hll_sketch_agg(col("u"), 12).as("sk")),
+      windowDays = 7)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // O-scan/filter/agg: TPC-H Q1-style pricing summary. Filter pushes to
@@ -1467,14 +1485,8 @@ object Relational {
     // SketchAndFormatSpec). Raw estimates asserted there too;
     // hash-exact twin: q37b.
     "q37_hll_union" -> ((s, dir) => {
-      val c = customer(s, dir)
-      val n = nation(s, dir)
-      val cn = c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      val merged = cn
-        .groupBy("n_regionkey", "n_nationkey")
-        .agg(hll_sketch_agg(col("c_custkey")).as("sk"))
-        .groupBy("n_regionkey")
-        .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("approx_merged"))
+      val cn = customerNations(s, dir)
+      val merged = regionMergedSketches(cn)
       val direct = cn.groupBy("n_regionkey")
         .agg(hll_sketch_estimate(hll_sketch_agg(col("c_custkey"))).as("approx_direct"),
           countDistinct(col("c_custkey")).as("exact_customers"))
@@ -1779,12 +1791,8 @@ object Relational {
       // hll_sketch_agg over the DEDUPED pairs holds exactly the state
       // it held over raw events; the exact path from pairs on is
       // slidingDistinctUsers' own body.
-      val pairs = events(s, dir)
-        .select(to_date(col("ts")).as("d"), col("user_id").as("u")).distinct()
-      val approx = slidingDistinctApprox(
-        pairs.groupBy(col("d").as("day"))
-          .agg(hll_sketch_agg(col("u"), 12).as("sk")),
-        windowDays = 7)
+      val pairs = dayUserPairs(s, dir)
+      val approx = weeklyDistinctHll(pairs)
       // the exact path is the SHARED pairs-based body (r16 ADVICE:
       // the former inline copy could drift against the helper)
       val exact = slidingDistinctUsersFromPairs(pairs, windowDays = 7)

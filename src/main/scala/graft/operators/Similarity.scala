@@ -427,9 +427,7 @@ object Similarity {
       // artifact (semCcLabels) — the per-call CC loop was the bulk of
       // the certified/raw gap (VERDICT r16 item 6); the anti-join
       // wrapper shape itself stays the measured-best r15 form.
-      val surv = Dedup.keepRepresentativesByLabels(
-          embeddings(s, dir).select("vec_id", "label"),
-          semCcLabels(s, dir), idCol = "vec_id")
+      val surv = survivors(s, dir, semCcLabels(s, dir))
         .select(col("vec_id")).withColumn("__s", lit(1))
       val all = embeddings(s, dir).select("vec_id")
       val paired = pairs.select(col("id_a").as("vec_id"))
@@ -544,10 +542,7 @@ object Similarity {
     // same pair derivation then a recursive-CTE transitive closure
     // (the d08 pattern) for the connected-components keep rule.
     "s07b_semantic_survivors" -> ((s, dir) =>
-      Dedup.keepRepresentativesByLabels(
-          embeddings(s, dir).select("vec_id", "label"),
-          detCcLabels(s, dir), idCol = "vec_id")
-        .orderBy("vec_id")),
+      survivors(s, dir, detCcLabels(s, dir)).orderBy("vec_id")),
 
     // s07b's SCALE-SIZED twin (the s03c/s10c pattern for the
     // cluster-blocked family): the same deterministic seed-cell
@@ -562,10 +557,7 @@ object Similarity {
     // ~√n so the join volume grows ~n^1.5. Hash-exact at every
     // fixture scale even as the parameter changes with n.
     "s07c_semantic_survivors_sized" -> ((s, dir) =>
-      Dedup.keepRepresentativesByLabels(
-          embeddings(s, dir).select("vec_id", "label"),
-          sizedDetCcLabels(s, dir), idCol = "vec_id")
-        .orderBy("vec_id")),
+      survivors(s, dir, sizedDetCcLabels(s, dir)).orderBy("vec_id")),
 
     // The hash-checked PQ ENCODE stage ([[pqEncode]]) against
     // deterministic codebooks (sub-slices of the 16 lowest vec_ids):
@@ -841,6 +833,13 @@ object Similarity {
   private[operators] def sizedDetCcLabels(s: SparkSession, dir: String): DataFrame =
     Dedup.ccLabelsFor(s, dir, "sizedDet",
       sizedDetPairs(s, dir).select(col("id_a"), col("id_b")))
+
+  /** The s07 family's survivor chain: the embedding corpus kept by one
+    * of the component-label artifacts above.
+    */
+  private def survivors(s: SparkSession, dir: String, labels: DataFrame): DataFrame =
+    Dedup.keepRepresentativesByLabels(
+      embeddings(s, dir).select("vec_id", "label"), labels, idCol = "vec_id")
 
   // The SIZED deterministic SemDeDup pair list (s07c's ingest
   // artifact): seed-vector coarse cells — the [[detIndexes]] rule, so
@@ -1625,10 +1624,7 @@ object Similarity {
     "s06_semantic_neardup" -> ((s, dir) =>
       semPairs(s, dir).orderBy("id_a", "id_b")),
     "s07_semantic_survivors" -> ((s, dir) =>
-      Dedup.keepRepresentativesByLabels(
-          embeddings(s, dir).select("vec_id", "label"),
-          semCcLabels(s, dir), idCol = "vec_id")
-        .orderBy("vec_id")),
+      survivors(s, dir, semCcLabels(s, dir)).orderBy("vec_id")),
     "s08_pq_ann" -> ((s, dir) => {
       val e = embeddings(s, dir)
       pqRerankTopK(pqIndex(s, dir), e, e.filter(col("vec_id") < 10),

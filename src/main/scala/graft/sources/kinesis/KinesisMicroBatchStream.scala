@@ -251,8 +251,8 @@ class KinesisMicroBatchStream(
         positions.flatMap { case (shardId, seq) =>
           target.get(shardId) match {
             case Some(cap) =>
-              Some(shardId -> (if (cap.isEmpty || (seq.nonEmpty && !seqLeq(seq, cap))) cap
-                               else seq))
+              Some(shardId ->
+                (if (cap.isEmpty || (seq.nonEmpty && !SequenceOrder.leq(seq, cap))) cap else seq))
             case None =>
               startPos.get(shardId).map(shardId -> _)
           }
@@ -260,8 +260,6 @@ class KinesisMicroBatchStream(
     }
     KinesisOffset(clamped)
   }
-
-  private def seqLeq(a: String, b: String): Boolean = SequenceOrder.leq(a, b)
 
   /** One planning round's view of the shards at its start positions
     * `basis` (shardId → last consumed sequence, "" = TRIM_HORIZON) and
@@ -284,7 +282,7 @@ class KinesisMicroBatchStream(
       val after = basis.get(shardId).filter(_.nonEmpty)
       val (lastOpt, closed) = probes.getOrElseUpdate(shardId,
         client.sequenceAfter(streamName, shardId, after, 1))
-      closed && lastOpt.forall(l => after.exists(seqLeq(l, _)))
+      closed && lastOpt.forall(l => after.exists(SequenceOrder.leq(l, _)))
     }
 
     /** The listed children with a listed parent that is not drained:

@@ -40,7 +40,9 @@ object PlanDump {
     * differ between two builds of the same query: expression ids
     * (`#123`), `plan_id=` and `id=#` tags, RDD ids (`RDD[123]`),
     * codegen stage ids (`*(n)`, `codegen id : n`) and AQE query-stage
-    * ids (the `Arguments: n` line of a `*QueryStage` operator).
+    * ids (the `Arguments: n` line of a `*QueryStage` operator). Also
+    * mask the source line in RDD names (`at Relational.scala:207`),
+    * which moves with any edit above the call that built the RDD.
     */
   def normalize(plan: String): String = {
     var inStage = false
@@ -56,6 +58,7 @@ object PlanDump {
         .replaceAll("""RDD\[\d+\]""", "RDD[_]")
         .replaceAll("""\*\(\d+\)""", "*(_)")
         .replaceAll("""codegen id : \d+""", "codegen id : _")
+        .replaceAll("""\.scala:\d+""", ".scala:_")
       if (inStage) masked.replaceAll("""^Arguments: \d+$""", "Arguments: _")
       else masked
     }.mkString("\n")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -314,5 +315,42 @@ class PipelineSpec extends SparkSuite {
     // HLL++ is exact at these cardinalities → identical rows
     assert(run(approx = true).toSeq == exact.toSeq,
       "approx-NDV path diverged on small data")
+  }
+
+  test("the six stages compose from raw corpus to packed sequences, and no stage adds rows") {
+    val docs = graft.Tables.documents(spark, sf("sf0.001"))
+    // each stage is persisted before its count, so a later count does
+    // not re-run the earlier stages' joins and components
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame) = { pinned += df.persist(); df }
+    try {
+      // 1. quality screen (p05)
+      val kept = pin(docs.join(
+        Pipeline.qualityFilter(docs).filter(col("keep")).select("doc_id"), "doc_id"))
+      // 2. near-dup dedup (d03 pairs, d08 survivors)
+      val deduped = pin(Dedup.keepRepresentatives(kept,
+        Dedup.nearDupPairs(kept, "doc_id", "text").select("doc_a", "doc_b")))
+      // 3. decontamination (d07) against every 10th doc as the eval suite
+      val corpus = deduped.filter(col("doc_id") % 10 =!= 0)
+      val contam = Dedup.decontaminate(corpus, docs.filter(col("doc_id") % 10 === 0))
+        .filter(col("contamination") > 0.5).select("doc_id")
+      val clean = pin(corpus.join(contam, Seq("doc_id"), "left_anti"))
+      // 4. mixture sampling (p02), downweighting the dominant language
+      val sampled = pin(clean.join(
+        Pipeline.sampleStratified(clean, rates = Map("en" -> 49152),
+          defaultRate = 65536, strataCol = "lang").select("doc_id"), "doc_id"))
+      // 5. train/val/test split (p04)
+      val train = pin(sampled.join(
+        Pipeline.splitAssign(sampled, testRate = 3277, valRate = 3277)
+          .filter(col("split") === "train").select("doc_id"), "doc_id"))
+      val counts = Seq(docs, kept, deduped, clean, sampled, train).map(_.count())
+      assert(counts.zip(counts.tail).forall { case (a, b) => a >= b },
+        s"a stage added rows: ${counts.mkString(" -> ")}")
+      assert(counts.last > 0, s"no training rows: ${counts.mkString(" -> ")}")
+      // 6. per-language sequence packing (p01)
+      val packs = Pipeline.packSequences(train, budget = 512, strataCol = "lang")
+        .select("lang", "bin").distinct().count()
+      assert(packs > 0)
+    } finally pinned.foreach(_.unpersist())
   }
 }

@@ -512,6 +512,19 @@ class KinesisSourceSpec extends SparkSuite {
     }
   }
 
+  test("a put after a split lands in an open child, never in the closed parent") {
+    val name = "fake-put-split"
+    FakeKinesisService.createStream(name, 1)
+    val parent = "shardId-000000000000"
+    val (c1, c2) = FakeKinesisService.splitShard(name, parent)
+    val client = new FakeKinesisClient()
+    val seqs = (1 to 8).map(i => client.putRecord(name, s"k$i", s"r$i".getBytes))
+    def held(shard: String): Seq[String] =
+      client.getRecords(client.getShardIterator(name, shard, None), 100).records.map(_.sequenceNumber)
+    assert(held(parent).isEmpty)
+    assert((held(c1) ++ held(c2)).sorted == seqs.sorted)
+  }
+
   test("region/sts options reach the client factory (option.go:36-43 → kinesis.go:45-52)") {
     class ConfigurableFake extends FakeKinesisClient with ConfigurableKinesisClient {
       @volatile var received: Map[String, String] = Map.empty

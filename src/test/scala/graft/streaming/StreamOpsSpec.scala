@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -75,24 +76,46 @@ class StreamOpsSpec extends SparkSuite {
 
   test("stream-stream interval join matches within the window, drops outside") {
     import spark.implicits._
+    // (key, left seq, right seq) of every joined pair
+    def joined(left: DataFrame, right: DataFrame, queryName: String)(feed: => Unit) = {
+      val q = StreamOps.intervalJoin(left, right,
+          "partitionKey", "approximateArrivalTimestamp",
+          within = "30 seconds", watermark = "1 minute")
+        .writeStream.format("memory").queryName(queryName)
+        .trigger(Trigger.ProcessingTime(50)).start()
+      try {
+        feed
+        q.processAllAvailable()
+        spark.sql(s"SELECT l_partitionKey, l_sequenceNumber, r_sequenceNumber FROM $queryName")
+          .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+      } finally q.stop()
+    }
     val lmem = MemoryStream[KinesisRecord](spark)
     val rmem = MemoryStream[KinesisRecord](spark)
-    val joined = StreamOps.intervalJoin(lmem.toDF(), rmem.toDF(),
-      "partitionKey", "approximateArrivalTimestamp",
-      within = "30 seconds", watermark = "1 minute")
-    val q = joined.writeStream.format("memory").queryName("so_ij")
-      .trigger(Trigger.ProcessingTime(50)).start()
-    try {
+    val rows = joined(lmem.toDF(), rmem.toDF(), "so_ij") {
       lmem.addData(rec("s0", 1, 100, "a"), rec("s0", 2, 100, "b"))
       rmem.addData(
         rec("s1", 10, 110, "a"), // within 30s of a@100 -> match
         rec("s1", 11, 200, "a"), // outside -> no match
         rec("s1", 12, 90, "b"))  // before left ts -> no match
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT l_partitionKey, l_sequenceNumber, r_sequenceNumber FROM so_ij").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      assert(rows == Set(("a", f"${1}%09d", f"${10}%09d")), s"got $rows")
-    } finally q.stop()
+    }
+    assert(rows == Set(("a", f"${1}%09d", f"${10}%09d")), s"got $rows")
+
+    // the same records on two kinesis-graft sources, arrival time as event time
+    import graft.sources.kinesis._
+    Seq("ij-left", "ij-right").foreach(FakeKinesisService.createStream(_, 1))
+    KinesisRegistry.clients.put("ij-fake", new FakeKinesisClient())
+    def push(stream: String, key: String, tsSec: Long): String =
+      FakeKinesisService.push(stream, "shardId-000000000000", key, key.getBytes, tsSec * 1000)
+    def source(stream: String) = spark.readStream.format("kinesis-graft")
+      .option("streamName", stream).option("clientName", "ij-fake").load()
+    val leftA = push("ij-left", "a", 100)
+    push("ij-left", "b", 100)
+    val rightA = push("ij-right", "a", 110)
+    push("ij-right", "a", 200)
+    push("ij-right", "b", 90)
+    val kinesisRows = joined(source("ij-left"), source("ij-right"), "so_ij_kinesis")(())
+    assert(kinesisRows == Set(("a", leftA, rightA)), s"got $kinesisRows")
   }
 
   test("left-outer interval join emits unmatched left rows with nulls after the watermark") {
@@ -771,19 +794,31 @@ class StreamOpsSpec extends SparkSuite {
       .writeStream.foreach(new KinesisBatchSink("sink-rt", "sink-fake"))
       .trigger(Trigger.ProcessingTime(50)).start()
     try {
-      mem.addData(("one".getBytes, "k1"), ("two".getBytes, "k2"), ("three".getBytes, "k3"))
+      mem.addData(("one".getBytes, "k1"), ("two".getBytes, "k2"), ("three".getBytes, "k3"),
+        ("four".getBytes, "k1"))
       wq.processAllAvailable()
     } finally wq.stop()
-    val rq = spark.readStream.format("kinesis-graft")
+    def consumed = spark.readStream.format("kinesis-graft")
       .option("streamName", "sink-rt").option("clientName", "sink-fake").load()
-      .writeStream.format("memory").queryName("so_sink_rt")
+    val rq = consumed.writeStream.format("memory").queryName("so_sink_rt")
       .trigger(Trigger.ProcessingTime(50)).start()
     try {
       rq.processAllAvailable()
       val got = spark.sql("SELECT data FROM so_sink_rt").collect()
         .map(r => new String(r.getAs[Array[Byte]](0))).toSet
-      assert(got == Set("one", "two", "three"))
+      assert(got == Set("one", "two", "three", "four"))
     } finally rq.stop()
+    // the consumed records' running totals: k1 holds "one" and "four"
+    val tq = StreamOps.runningTotals(consumed.as[KinesisRecord])
+      .writeStream.format("memory").queryName("so_sink_totals")
+      .outputMode("append").trigger(Trigger.ProcessingTime(50)).start()
+    try {
+      tq.processAllAvailable()
+      val totals = spark.sql(
+          "SELECT partitionKey, max(n_records), max(n_bytes) FROM so_sink_totals GROUP BY 1")
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(totals == Map("k1" -> (2L, 7L), "k2" -> (1L, 3L), "k3" -> (1L, 5L)), s"got $totals")
+    } finally tq.stop()
   }
 
   test("query listener tracks progress like the reference's registry (O13)") {

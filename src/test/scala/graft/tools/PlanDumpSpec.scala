@@ -30,4 +30,12 @@ class PlanDumpSpec extends SparkSuite {
       assert(na == nb, firstDiff(na, nb))
     }
   }
+
+  test("normalized plans do not depend on the source line that built an RDD") {
+    // an edit above the createDataFrame call moves only this number
+    def scan(line: Int) = "Arguments: [p1#12L, p2#13L], MapPartitionsRDD[45] at " +
+      s"createDataFrame at Relational.scala:$line, ExistingRDD, UnknownPartitioning(0)"
+    assert(PlanDump.normalize(scan(207)) == PlanDump.normalize(scan(198)))
+    assert(PlanDump.normalize(scan(207)).contains("at Relational.scala:_,"))
+  }
 }
