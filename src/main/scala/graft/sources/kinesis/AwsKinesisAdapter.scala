@@ -7,8 +7,8 @@ package graft.sources.kinesis
   * against the SDK for Java v2 (`software.amazon.awssdk.services
   * .kinesis`) — the same API surface the Go reference drives through
   * `aws-sdk-go-v2` (kinesis.go:45-52) — and AwsKinesisClientSpec proves
-  * the binding end-to-end against an API-shaped stub. This object stays
-  * as the human-readable method-by-method contract.
+  * the binding end-to-end against an API-shaped stub. This object holds
+  * the construction and error contract and the reflective surface.
   *
   * == Construction (configure) ==
   *
@@ -29,9 +29,12 @@ package graft.sources.kinesis
   *
   * == Method mapping ==
   *
-  * See [[methodMapping]]. `sequenceAfter` is the only method without a
-  * 1:1 RPC: it is a bounded metadata scan — `getShardIterator` at the
-  * position followed by `getRecords(limit = maxRecords)` reading only
+  * [[KinesisLikeClient]]'s scaladoc maps each method to the RPC it
+  * wraps and its reference line; [[clientRpcs]] is the RPC table
+  * `AwsKinesisClient.validate()` checks. `sequenceAfter` is the only
+  * method without a 1:1 RPC: it is a bounded metadata scan —
+  * `getShardIterator` at the position followed by
+  * `getRecords(limit = maxRecords)` reading only
   * `sequenceNumber`s (and `millisBehindLatest`) to cut a deterministic
   * admission-controlled end offset for the micro-batch planner.
   * Adapters for services with a native "tail sequence" API can answer
@@ -48,23 +51,6 @@ package graft.sources.kinesis
   */
 object AwsKinesisAdapter {
 
-  /** `KinesisLikeClient` method → AWS SDK v2 call it wraps. */
-  val methodMapping: Map[String, String] = Map(
-    "listShards" ->
-      "KinesisClient.listShards(ListShardsRequest.builder().streamName(s).build()) [kinesis.go:121-128]",
-    "streamStatus" ->
-      "KinesisClient.describeStreamSummary(...).streamDescriptionSummary().streamStatusAsString() [kinesis.go:71-77]",
-    "getShardIterator" ->
-      "KinesisClient.getShardIterator(... shardIteratorType(TRIM_HORIZON | AFTER_SEQUENCE_NUMBER)) [sequence.go:74-89]",
-    "getRecords" ->
-      "KinesisClient.getRecords(GetRecordsRequest.builder().shardIterator(it).limit(n).build()) [kinesis.go:180-183]",
-    "putRecord" ->
-      "KinesisClient.putRecord(PutRecordRequest.builder().streamName(s).partitionKey(k).data(SdkBytes)...)",
-    "putRecords" ->
-      "KinesisClient.putRecords(PutRecordsRequest: <=500 PutRecordsRequestEntry) — per-record sequenceNumber XOR errorCode; partial failure is data, callers retry the failed subset",
-    "sequenceAfter" ->
-      "getShardIterator + getRecords(limit) metadata-only scan (see scaladoc)")
-
   // ---- machine-readable reflective surface (version-skew armor) ----
   //
   // [[AwsKinesisClient]] binds the SDK by method NAME at runtime, so an
@@ -75,12 +61,12 @@ object AwsKinesisAdapter {
   // resolves; `AwsKinesisClient.validate()` checks ALL of them against
   // the loaded classes at configure-time and reports every
   // missing/mismatched signature at once. AwsKinesisClientSpec asserts
-  // the test stub satisfies the surface 1:1 and that [[clientRpcs]]
-  // agrees with [[methodMapping]].
+  // the test stub satisfies the surface 1:1.
 
   /** Client RPCs the adapter invokes (each takes exactly the matching
-    * `<Name>Request`) — [[methodMapping]] minus the composite
-    * `sequenceAfter`.
+    * `<Name>Request`): every [[KinesisLikeClient]] method but the
+    * composite `sequenceAfter`, with `streamStatus` reading
+    * `describeStreamSummary`.
     */
   val clientRpcs: Seq[String] = Seq("listShards", "describeStreamSummary",
     "getShardIterator", "getRecords", "putRecord", "putRecords")

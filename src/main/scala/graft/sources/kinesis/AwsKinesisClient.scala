@@ -26,9 +26,10 @@ import java.util.concurrent.ConcurrentHashMap
   *    reflective plumbing — request building, pagination, response
   *    mapping, error translation, backoff — end-to-end.
   *
-  * The method-by-method RPC mapping is documented (and kept in sync
-  * with) [[AwsKinesisAdapter.methodMapping]]; semantics mirror what the
-  * Go reference drives through `aws-sdk-go-v2` (kinesis.go:45-52).
+  * The method-by-method RPC mapping is [[KinesisLikeClient]]'s
+  * scaladoc, and [[AwsKinesisAdapter.clientRpcs]] the RPCs it invokes;
+  * semantics mirror what the Go reference drives through
+  * `aws-sdk-go-v2` (kinesis.go:45-52).
   *
   * == Lifecycle ==
   *

@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, Dataset, HomeSession, SparkSession}
+import org.apache.spark.sql.{DataFrame, HomeSession, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.util.LongAccumulator
@@ -37,35 +37,22 @@ object ErrorPolicy {
   * 242-250, 221-236; usage in README.md:33-59).
   *
   * Built on Structured Streaming: the poll ticker (kinesis.go:172-179)
-  * is `Trigger.ProcessingTime(sleepLimit)`; batch-granularity
-  * checkpointing (kinesis.go:198-201) writes each shard's last delivered
-  * sequence to the saver. Each micro-batch is one Spark action.
+  * is `Trigger.ProcessingTime(sleepLimit)`. [[start]] reads the
+  * consumer's own kinesis-graft source, whose per-shard task IS the
+  * reference's goroutine-per-shard loop (kinesis.go:131-139, in-order
+  * delivery 173-212): the handler runs inside the scan's tasks, with no
+  * shuffle and no sort (see [[start]] for what this relies on). Each
+  * micro-batch is one Spark action.
   *
-  * The saver ([[setSaver]]) has exactly one writer, chosen by how the
-  * consumer was started:
-  *  - [[start]] hands it to its kinesis-graft source, which resumes each
-  *    shard from it, writes it only after the offset WAL has committed
-  *    a batch, and deletes the entries of drained closed shards
-  *    (sequence.go:51-53). The consumer itself never writes it, so the
-  *    saver never runs ahead of the WAL. It trails the WAL by at most
-  *    one trigger: a restart from the saver alone (a new checkpoint
-  *    location) delivers that last batch again, which keeps delivery
-  *    at-least-once, like the reference's;
-  *  - [[run]]'s input is not a saver-aware source, so the handler pass
-  *    also returns the last sequence per shard, and the consumer writes
-  *    the saver once that action has finished.
-  *
-  * The goroutine-per-shard loop (kinesis.go:131-139, in-order delivery
-  * 173-212) depends on how the consumer was started:
-  *  - [[start]] reads its own kinesis-graft source, and the source's
-  *    per-shard task IS that loop: the handler runs inside the scan's
-  *    tasks, with no shuffle and no sort (see [[start]] for what this
-  *    relies on);
-  *  - [[run]] takes any streaming DataFrame with the
-  *    [[KinesisRecord.schema]] envelope (a file-replay stream, a
-  *    MemoryStream in tests, a source the caller built), which carries
-  *    no per-shard grouping, so it regroups each batch:
-  *    repartition-by-shard + sort-within-partition by sequence.
+  * The saver ([[setSaver]]) has exactly one writer, the source. It
+  * resumes each shard from the saver, writes each shard's last sequence
+  * only after the offset WAL has committed a batch (batch-granularity
+  * checkpointing, kinesis.go:198-201), and deletes the entries of
+  * drained closed shards (sequence.go:51-53). The consumer itself never
+  * writes it, so the saver never runs ahead of the WAL. It trails the
+  * WAL by at most one trigger: a restart from the saver alone (a new
+  * checkpoint location) delivers that last batch again, which keeps
+  * delivery at-least-once, like the reference's.
   *
   * Checkpoint files: when the session leaves
   * `spark.sql.streaming.checkpointFileManagerClass` unset, starting a
@@ -78,19 +65,17 @@ object ErrorPolicy {
   * `org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager`;
   * a value already set is never changed.
   *
-  * Session: the handler's Dataset is planned and run in the session the
-  * consumer was started from (the stream DataFrame's), not in the clone
-  * Spark makes for each streaming query. Executors key their class
-  * loader, and with it `CodeGenerator`'s cache of compiled classes, on
-  * the session that runs a job. In the clone, which is new for every
+  * Session: the handler's Dataset is planned and run in the session
+  * passed to [[start]], not in the clone Spark makes for each streaming
+  * query. Executors key their class loader, and with it
+  * `CodeGenerator`'s cache of compiled classes, on the session that runs
+  * a job. In the clone, which is new for every
   * query (one per `availableNow()` drain), each drain would compile the
   * same generated code again and run it cold in the JIT. Only the
   * handler's plan moves: the batch's scan, offsets and WAL stay the
   * query's. That plan follows the consumer's session's SQL conf, not the
-  * clone's snapshot of it; e.g. under [[run]] adaptive execution may
-  * coalesce the shard repartition (each shard still stays in one
-  * partition, in order), and `QueryExecutionListener`s registered on the
-  * consumer's session see the handler's action.
+  * clone's snapshot of it, and `QueryExecutionListener`s registered on
+  * the consumer's session see the handler's action.
   */
 class GraftConsumer(val option: GraftOption) {
 
@@ -132,40 +117,24 @@ class GraftConsumer(val option: GraftOption) {
 
   def query: Option[StreamingQuery] = queryOpt
 
-  /** Build the kinesis-graft streaming source for this consumer's
-    * options: streamName AND region/sts all reach the DSv2 client
-    * factory (option.go:36-43 feeding NewClient, kinesis.go:45-52 — a
-    * [[graft.sources.kinesis.ConfigurableKinesisClient]] receives them
-    * via `configure` before first use). A `saverName` in `extra` makes
-    * the source read and write that registered saver; do not also
-    * [[setSaver]] when passing this DataFrame to [[run]], or the saver
-    * gets two writers ([[start]] wires the saver itself).
-    */
-  def source(spark: org.apache.spark.sql.SparkSession,
-      extra: Map[String, String] = Map.empty): DataFrame = {
-    var r = spark.readStream.format("kinesis-graft")
-      .option("streamName", option.streamName)
-      .option("region", option.region)
-      .option("sts", option.sts.toString)
-    extra.foreach { case (k, v) => r = r.option(k, v) }
-    r.load()
-  }
-
-  /** ≈ Run() with no arguments (kinesis.go:147-154): builds the
+  /** ≈ Run() (kinesis.go:147-154): validates the handler (the reference
+    * errors with HandlerIsNil, kinesis.go:148-150), builds the
     * kinesis-graft source from this consumer's own options and starts
-    * consuming — the closest shape to the reference's
+    * consuming — the reference's
     * `NewIteratorWithOpt(opt).Handle(h).Run()` usage (README.md:33-59).
-    * `extra` passes source options (clientName/clientClass, saverName,
-    * maxRecordsPerFetch).
+    * streamName AND region/sts all reach the DSv2 client factory
+    * (option.go:36-43 feeding NewClient, kinesis.go:45-52 — a
+    * [[graft.sources.kinesis.ConfigurableKinesisClient]] receives them
+    * via `configure` before first use). `extra` passes source options
+    * (clientName/clientClass, saverName, maxRecordsPerFetch).
     *
     * A saver given to [[setSaver]] goes to the source, registered in
     * [[graft.sources.kinesis.KinesisRegistry.savers]] under the query
     * name, `graft-consumer-<streamName>` (each start replaces that
-    * entry, and the entry is removed when the query terminates). The
-    * source is then its only writer. A `saverName` in
-    * `extra` must name that same saver, or start throws
+    * entry, and the entry is removed when the query terminates). A
+    * `saverName` in `extra` must name that same saver, or start throws
     * IllegalArgumentException; without [[setSaver]] it names the
-    * source's saver as in [[source]].
+    * source's saver.
     *
     * The handler runs directly over the batch's source partitions, with
     * no regroup, because each one is already one shard's slice in
@@ -179,8 +148,9 @@ class GraftConsumer(val option: GraftOption) {
     * records across batches. (Catalyst cannot drop the exchange itself:
     * a streaming DSv2 scan carries no reported partitioning.)
     */
-  def start(spark: org.apache.spark.sql.SparkSession,
-      extra: Map[String, String] = Map.empty): StreamingQuery = {
+  def start(spark: SparkSession, extra: Map[String, String] = Map.empty): StreamingQuery = {
+    val h = handlerOpt.getOrElse(
+      throw new IllegalStateException("handler is nil")) // kinesis.go:148-150
     val options = saverOpt.fold(extra) { sv =>
       val (named, rest) = extra.partition { case (k, _) => k.equalsIgnoreCase("saverName") }
       for ((_, n) <- named) {
@@ -193,88 +163,52 @@ class GraftConsumer(val option: GraftOption) {
       rest + ("saverName" -> queryName)
     }
     val registration = saverOpt.map(new GraftConsumer.SaverRegistration(spark, queryName, _))
-    try consume(source(spark, options), shardPartitioned = true)
-    catch { case e: Throwable => registration.foreach(_.release()); throw e }
-  }
-
-  /** ≈ Run (kinesis.go:147-154): validates the handler (the reference
-    * errors with HandlerIsNil, kinesis.go:148-150) and starts the
-    * streaming query. Each batch is regrouped by shard and sorted by
-    * sequence before the handler sees it.
-    */
-  def run(stream: DataFrame): StreamingQuery = consume(stream, shardPartitioned = false)
-
-  private def queryName: String = s"graft-consumer-${option.streamName}"
-
-  /** `shardPartitioned`: every partition of each batch already holds one
-    * shard's records in sequence order (true only for [[start]]'s own
-    * source), so the regroup is skipped, and the source writes the saver.
-    */
-  private def consume(stream: DataFrame, shardPartitioned: Boolean): StreamingQuery = {
-    val h = handlerOpt.getOrElse(
-      throw new IllegalStateException("handler is nil")) // kinesis.go:148-150
-    val spark = stream.sparkSession
-    val acc = spark.sparkContext.longAccumulator("graft.handler.errors")
-    errorsAcc = acc
-    val pol = policy
-    val saver = if (shardPartitioned) None else saverOpt
-    val onErr = onErrorOpt
-
-    import spark.implicits._
-    val runBatch: DataFrame => Unit = { batch =>
-      val ds: Dataset[KinesisRecord] = HomeSession.ofRows(spark, batch)
-        .select(KinesisRecord.schema.fieldNames.map(col).toSeq: _*)
-        .as[KinesisRecord]
-      // Per-shard order (kinesis.go:173-212): unless the source already
-      // gives each shard its own ordered partition, hash all of a shard's
-      // records into one partition and sort by sequence inside it.
-      // Sorting the zero-stripped sequence by (length, value) is numeric
-      // order for digit strings padded any way (SequenceOrder), so the
-      // last record a partition sees of a shard is its max.
-      val ordered =
-        if (shardPartitioned) ds
-        else {
-          val seq = ltrim(col("sequenceNumber"), "0")
-          ds.repartition(col("shardId")).sortWithinPartitions(col("shardId"), length(seq), seq)
-        }
-      // Only run(df) writes the saver, so only it needs each shard's last
-      // sequence back; under start() the pass returns no rows.
-      val writes = saver.isDefined
-      val last = ordered
-        .mapPartitions { (it: Iterator[KinesisRecord]) =>
-          val lastSeq = scala.collection.mutable.HashMap.empty[(String, String), String]
-          it.foreach { rec =>
-            try h(rec)
-            catch {
-              case e: Throwable => pol match {
-                case ErrorPolicy.SkipAndLog => // kinesis.go:194-197
-                  acc.add(1)
-                  onErr.foreach(f => try f(rec, e) catch { case _: Throwable => () })
-                case ErrorPolicy.Fail => throw e
+    try {
+      val acc = spark.sparkContext.longAccumulator("graft.handler.errors")
+      errorsAcc = acc
+      val pol = policy
+      val onErr = onErrorOpt
+      import spark.implicits._
+      val writer = spark.readStream.format("kinesis-graft")
+        .option("streamName", option.streamName)
+        .option("region", option.region)
+        .option("sts", option.sts.toString)
+        .options(options)
+        .load().writeStream
+        .queryName(queryName)
+        .trigger(if (availNow) Trigger.AvailableNow() else Trigger.ProcessingTime(sleep.toMillis))
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          // One SQL action per batch, planned in the consumer's own
+          // session; it returns no rows.
+          HomeSession.ofRows(spark, batch)
+            .select(KinesisRecord.schema.fieldNames.map(col).toSeq: _*)
+            .as[KinesisRecord]
+            .foreachPartition { (it: Iterator[KinesisRecord]) =>
+              it.foreach { rec =>
+                try h(rec)
+                catch {
+                  case e: Throwable => pol match {
+                    case ErrorPolicy.SkipAndLog => // kinesis.go:194-197
+                      acc.add(1)
+                      onErr.foreach(f => try f(rec, e) catch { case _: Throwable => () })
+                    case ErrorPolicy.Fail => throw e
+                  }
+                }
               }
             }
-            if (writes) lastSeq((rec.streamName, rec.shardId)) = rec.sequenceNumber
-          }
-          lastSeq.iterator.map { case ((s, sh), seq) => (s, sh, seq) }
         }
-        .collect()
-      // Batch-granularity checkpoint (kinesis.go:198-201) for run(df),
-      // written only once every partition's handler calls have finished.
-      saver.foreach(sv => last.foreach { case (s, sh, seq) => sv.set(s, sh, seq) })
-    }
-    val writer = stream.writeStream
-      .queryName(queryName)
-      .trigger(if (availNow) Trigger.AvailableNow() else Trigger.ProcessingTime(sleep.toMillis))
-      .foreachBatch { (batch: DataFrame, _: Long) => runBatch(batch) }
-    checkpointLoc.foreach(writer.option("checkpointLocation", _))
-    // Session-wide, not scoped to start(): Spark builds the query's
-    // offset and commit logs lazily, after start() returns.
-    if (spark.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
-      spark.conf.set(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
-    val q = writer.start()
-    queryOpt = Some(q)
-    q
+      checkpointLoc.foreach(writer.option("checkpointLocation", _))
+      // Session-wide, not scoped to start(): Spark builds the query's
+      // offset and commit logs lazily, after start() returns.
+      if (spark.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
+        spark.conf.set(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
+      val q = writer.start()
+      queryOpt = Some(q)
+      q
+    } catch { case e: Throwable => registration.foreach(_.release()); throw e }
   }
+
+  private def queryName: String = s"graft-consumer-${option.streamName}"
 
   /** ≈ Shutdown(timeout) (kinesis.go:221-236): stop, then wait up to
     * `timeout`. Returns true on clean termination, false if the wait

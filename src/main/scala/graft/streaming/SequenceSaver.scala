@@ -16,9 +16,7 @@ import scala.collection.concurrent.TrieMap
   * — sequence.go:26-36, 46-53). Each saver has one writer. The DSv2
   * source (graft.sources.kinesis) consults it for initial offsets,
   * writes each shard's last WAL-committed sequence (so the saver never
-  * leads the WAL) and deletes drained closed shards from it. Under
-  * `GraftConsumer.run`, whose input is not a saver-aware source, the
-  * consumer writes it after each batch's handler pass.
+  * leads the WAL) and deletes drained closed shards from it.
   */
 trait SequenceSaver {
   def get(streamName: String, shardId: String): Option[String]

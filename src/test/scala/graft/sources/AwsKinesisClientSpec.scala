@@ -40,19 +40,12 @@ class AwsKinesisClientSpec extends SparkSuite {
     r.load()
   }
 
-  test("validate(): the stub satisfies the declared reflective surface 1:1, and the surface agrees with methodMapping") {
+  test("validate(): the stub satisfies the declared reflective surface 1:1") {
     fresh()
     val c = new AwsKinesisClient
     c.configure(Map("region" -> "us-east-1", "sts" -> "true")) // throws if validate() finds problems
     assert(c.validate().isEmpty,
       s"stub must satisfy the full surface: ${c.validate().mkString("; ")}")
-    // the machine-readable surface and the human-readable contract name
-    // the same RPC set: methodMapping keys are KinesisLikeClient
-    // methods (streamStatus wraps describeStreamSummary; sequenceAfter
-    // is the one composite with no 1:1 RPC)
-    assert(AwsKinesisAdapter.clientRpcs.toSet ==
-      (AwsKinesisAdapter.methodMapping.keySet - "sequenceAfter" -
-        "streamStatus") + "describeStreamSummary")
     // every request class the RPC table implies is in the setter table
     assert(AwsKinesisAdapter.requestSetters.keySet ==
       Set("ListShardsRequest", "DescribeStreamSummaryRequest",

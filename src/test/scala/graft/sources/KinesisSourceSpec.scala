@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSuite
 import graft.sources.kinesis._
-import graft.streaming.InMemorySequenceSaver
+import graft.streaming.{GraftConsumer, GraftOption, HandlerSink, InMemorySequenceSaver}
 
 /** Static collector for the WAL-restart test: foreachBatch closures are
   * serialized into tasks, so observations must land in a static.
@@ -534,20 +534,22 @@ class KinesisSourceSpec extends SparkSuite {
     val cfgClient = new ConfigurableFake
     KinesisRegistry.clients.put("cfg", cfgClient)
     FakeKinesisService.push("s9", "shardId-000000000000", "pk", "r1".getBytes)
-    // GraftOption → GraftConsumer.source → DSv2 options → configure()
-    val consumer = graft.streaming.GraftConsumer(
-      graft.streaming.GraftOption().withStreamName("s9")
+    // GraftOption → GraftConsumer.start → DSv2 options → configure()
+    HandlerSink.clear()
+    val consumer = GraftConsumer(GraftOption().withStreamName("s9")
         .withRegion("eu-west-1").withSts(true))
-    val df = consumer.source(spark, Map("clientName" -> "cfg"))
-    val q = runToMemory(df, "t_cfg")
+      .availableNow()
+      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
+    val q = consumer.start(spark, Map("clientName" -> "cfg"))
     try {
-      assert(spark.sql("SELECT count(*) FROM t_cfg").head.getLong(0) == 1)
+      assert(q.awaitTermination(60000))
+      assert(HandlerSink.seen.size == 1)
       assert(cfgClient.received.get("region").contains("eu-west-1"),
         s"region did not reach the client: ${cfgClient.received}")
       assert(cfgClient.received.get("sts").contains("true"),
         s"sts did not reach the client: ${cfgClient.received}")
       assert(cfgClient.received.get("streamname").contains("s9"))
-    } finally q.stop()
+    } finally assert(consumer.shutdown(10.seconds))
   }
 
   test("volume: 1e5 records across staged reshards under admission control " +

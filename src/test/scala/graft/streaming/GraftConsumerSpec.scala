@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.sql.Timestamp
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
@@ -18,7 +17,6 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSuite
 import graft.sources.kinesis.{GetRecordsResult, KinesisInputPartition, KinesisLikeClient, ShardInfo}
@@ -136,13 +134,9 @@ class GraftConsumerSpec extends SparkSuite {
     */
   private def drainFrom(name: String, ckpt: String): Option[String] = {
     val consumer = GraftConsumer(GraftOption().withStreamName(name))
-      .availableNow()
       .checkpointLocation(ckpt)
       .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
-    val q = consumer.start(spark, Map("clientName" -> s"$name-fake", "maxRecordsPerFetch" -> "4"))
-    try assert(q.awaitTermination(60000))
-    finally assert(consumer.shutdown(10.seconds))
-    q.exception.foreach(e => throw e)
+    drained(consumer, name, Map("maxRecordsPerFetch" -> "4"))
     spark.conf.getOption(LocalCheckpointFileManager.ConfKey)
   }
 
@@ -176,127 +170,110 @@ class GraftConsumerSpec extends SparkSuite {
     assert(new java.io.File(ckpt, ".metadata.crc").isFile)
   }
 
-  private def rec(shard: String, n: Int): KinesisRecord =
-    KinesisRecord(
-      data = s"payload-$n".getBytes("UTF-8"),
-      partitionKey = s"pk-$n",
-      sequenceNumber = f"$n%09d",
-      approximateArrivalTimestamp = new Timestamp(1700000000000L + n * 1000L),
-      streamName = "test-stream",
-      shardId = shard)
+  /** A new FakeKinesisService stream `name` with `shards` shards, read
+    * through the client registered as `<name>-fake`.
+    */
+  private def fakeStream(name: String, shards: Int): Unit = {
+    import graft.sources.kinesis._
+    FakeKinesisService.createStream(name, shards)
+    KinesisRegistry.clients.put(s"$name-fake", new FakeKinesisClient())
+  }
+
+  /** Pushes record `n` (`payload-n` under key `pk-n`) to `shard` of
+    * stream `name`; returns its sequence.
+    */
+  private def push(name: String, shard: String, n: Int): String =
+    graft.sources.kinesis.FakeKinesisService.push(name, shard, s"pk-$n", s"payload-$n".getBytes("UTF-8"))
+
+  /** Starts `consumer` on stream `name` (with source options `extra`)
+    * and waits until its AvailableNow drain ends; fails if the query
+    * failed.
+    */
+  private def drained(consumer: GraftConsumer, name: String,
+      extra: Map[String, String] = Map.empty): Unit = {
+    val q = consumer.availableNow().start(spark, extra + ("clientName" -> s"$name-fake"))
+    try assert(q.awaitTermination(60000))
+    finally assert(consumer.shutdown(10.seconds))
+    q.exception.foreach(e => throw e)
+  }
+
+  private val (shard0, shard1) = ("shardId-000000000000", "shardId-000000000001")
 
   test("per-shard ordered delivery + batch-granularity checkpoint (kinesis.go:173-212, 198-201)") {
-    import spark.implicits._
     HandlerSink.clear()
-    val mem = MemoryStream[KinesisRecord](spark)
+    val name = "gc-order"
+    fakeStream(name, 2)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-order").toString
     val saver = new InMemorySequenceSaver
-    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
-      .sleepLimit(100.millis)
+    def consumer() = GraftConsumer(GraftOption().withStreamName(name))
       .setSaver(saver)
+      .checkpointLocation(ckpt)
       .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
 
-    val q = consumer.run(mem.toDF())
-    try {
-      mem.addData(rec("shard-1", 3), rec("shard-0", 1), rec("shard-1", 1),
-        rec("shard-0", 2), rec("shard-1", 2))
-      q.processAllAvailable()
-      // saver holds each shard's max sequence after the batch
-      assert(saver.get("test-stream", "shard-0").contains(f"${2}%09d"))
-      assert(saver.get("test-stream", "shard-1").contains(f"${3}%09d"))
-      // per-shard order preserved
-      val byShard = HandlerSink.seen.asScala.toList.groupBy(_._1)
-      assert(byShard("shard-0").map(_._2) == List(f"${1}%09d", f"${2}%09d"))
-      assert(byShard("shard-1").map(_._2) == List(f"${1}%09d", f"${2}%09d", f"${3}%09d"))
+    val pushed = Seq(shard1 -> 1, shard0 -> 2, shard1 -> 3, shard0 -> 4, shard1 -> 5)
+      .map { case (sh, n) => sh -> push(name, sh, n) }
+    def sent(sh: String): List[String] = pushed.filter(_._1 == sh).map(_._2).toList
+    drained(consumer(), name)
+    // saver holds each shard's max sequence after the batch
+    assert(saver.get(name, shard0).contains(sent(shard0).last))
+    assert(saver.get(name, shard1).contains(sent(shard1).last))
+    // per-shard order preserved
+    val byShard = HandlerSink.seen.asScala.toList.groupBy(_._1)
+    assert(byShard(shard0).map(_._2) == sent(shard0))
+    assert(byShard(shard1).map(_._2) == sent(shard1))
 
-      // second batch advances the checkpoint (one write per non-empty batch)
-      mem.addData(rec("shard-0", 7))
-      q.processAllAvailable()
-      assert(saver.get("test-stream", "shard-0").contains(f"${7}%09d"))
-      assert(saver.get("test-stream", "shard-1").contains(f"${3}%09d"))
-    } finally assert(consumer.shutdown(30.seconds))
+    // a later batch advances the checkpoint of the shard it delivers
+    val next = push(name, shard0, 6)
+    drained(consumer(), name)
+    assert(saver.get(name, shard0).contains(next))
+    assert(saver.get(name, shard1).contains(sent(shard1).last))
   }
 
   test("skip-and-log error policy: failing record is skipped, checkpoint still advances (kinesis.go:194-201)") {
-    import spark.implicits._
     HandlerSink.clear()
-    val mem = MemoryStream[KinesisRecord](spark)
+    val name = "gc-skip"
+    fakeStream(name, 1)
+    val seqs = (1 to 3).map(push(name, shard0, _))
     val saver = new InMemorySequenceSaver
-    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
-      .sleepLimit(100.millis)
+    val consumer = GraftConsumer(GraftOption().withStreamName(name))
       .setSaver(saver)
       .errorPolicy(ErrorPolicy.SkipAndLog)
       .handle { r =>
         if (new String(r.data, "UTF-8") == "payload-2") sys.error("boom")
         HandlerSink.seen.add((r.shardId, r.sequenceNumber))
       }
-    val q = consumer.run(mem.toDF())
-    try {
-      mem.addData(rec("shard-0", 1), rec("shard-0", 2), rec("shard-0", 3))
-      q.processAllAvailable()
-      assert(consumer.errorCount == 1)
-      val seqs = HandlerSink.seen.asScala.toList.map(_._2)
-      assert(seqs == List(f"${1}%09d", f"${3}%09d")) // 2 skipped, order kept
-      // checkpoint advanced past the failing record — reference semantics
-      assert(saver.get("test-stream", "shard-0").contains(f"${3}%09d"))
-    } finally assert(consumer.shutdown(30.seconds))
+    drained(consumer, name)
+    assert(consumer.errorCount == 1)
+    assert(HandlerSink.seen.asScala.toList.map(_._2) == List(seqs(0), seqs(2))) // 2 skipped, order kept
+    // checkpoint advanced past the failing record — reference semantics
+    assert(saver.get(name, shard0).contains(seqs(2)))
   }
 
   test("skip-and-log: a failing LAST record still advances the checkpoint to its sequence") {
-    import spark.implicits._
     HandlerSink.clear()
-    val mem = MemoryStream[KinesisRecord](spark)
+    val name = "gc-skip-last"
+    fakeStream(name, 1)
+    val seqs = (1 to 3).map(push(name, shard0, _))
     val saver = new InMemorySequenceSaver
-    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
-      .sleepLimit(100.millis)
+    val consumer = GraftConsumer(GraftOption().withStreamName(name))
       .setSaver(saver)
       .errorPolicy(ErrorPolicy.SkipAndLog)
       .handle { r =>
         if (new String(r.data, "UTF-8") == "payload-3") sys.error("boom")
         HandlerSink.seen.add((r.shardId, r.sequenceNumber))
       }
-    val q = consumer.run(mem.toDF())
-    try {
-      mem.addData(rec("shard-0", 2), rec("shard-0", 3), rec("shard-0", 1))
-      q.processAllAvailable()
-      assert(consumer.errorCount == 1)
-      assert(HandlerSink.seen.asScala.toList.map(_._2) == List(f"${1}%09d", f"${2}%09d"))
-      assert(saver.get("test-stream", "shard-0").contains(f"${3}%09d"))
-    } finally assert(consumer.shutdown(30.seconds))
-  }
-
-  test("several shards sharing a shuffle partition: each keeps its own order and max") {
-    import spark.implicits._
-    HandlerSink.clear()
-    val mem = MemoryStream[KinesisRecord](spark)
-    val saver = new InMemorySequenceSaver
-    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
-      .sleepLimit(100.millis)
-      .setSaver(saver)
-      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
-    // 6 shards on the suite's 4 shuffle partitions: at least two share one.
-    val shards = (0 until 6).map(i => s"shard-$i")
-    val recs = new scala.util.Random(6).shuffle(
-      for (i <- shards.indices; n <- 1 to 3 + i) yield rec(shards(i), n * 10 + i))
-    val q = consumer.run(mem.toDF())
-    try {
-      mem.addData(recs: _*)
-      q.processAllAvailable()
-      val byShard = HandlerSink.seen.asScala.toList.groupBy(_._1)
-      assert(HandlerSink.seen.size == recs.size)
-      for (s <- shards) {
-        val want = recs.filter(_.shardId == s).map(_.sequenceNumber).sorted
-        assert(byShard(s).map(_._2) == want, s"order on $s")
-        assert(saver.get("test-stream", s).contains(want.last), s"checkpoint on $s")
-      }
-    } finally assert(consumer.shutdown(30.seconds))
+    drained(consumer, name)
+    assert(consumer.errorCount == 1)
+    assert(HandlerSink.seen.asScala.toList.map(_._2) == List(seqs(0), seqs(1)))
+    assert(saver.get(name, shard0).contains(seqs(2)))
   }
 
   test("onError dead-letter hook sees skipped records; its own failures don't block") {
-    import spark.implicits._
     HandlerSink.clear()
-    val mem = MemoryStream[KinesisRecord](spark)
-    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
-      .sleepLimit(100.millis)
+    val name = "gc-dlq"
+    fakeStream(name, 1)
+    (1 to 3).foreach(push(name, shard0, _))
+    val consumer = GraftConsumer(GraftOption().withStreamName(name))
       .errorPolicy(ErrorPolicy.SkipAndLog)
       .onError { (r, e) =>
         HandlerSink.dlq.add((new String(r.data, "UTF-8"), e.getMessage))
@@ -306,32 +283,28 @@ class GraftConsumerSpec extends SparkSuite {
         if (new String(r.data, "UTF-8") == "payload-2") sys.error("boom")
         HandlerSink.seen.add((r.shardId, r.sequenceNumber))
       }
-    val q = consumer.run(mem.toDF())
-    try {
-      mem.addData(rec("shard-0", 1), rec("shard-0", 2), rec("shard-0", 3))
-      q.processAllAvailable()
-      assert(consumer.errorCount == 1)
-      assert(HandlerSink.dlq.asScala.toList == List(("payload-2", "boom")))
-      assert(HandlerSink.seen.size() == 2) // others still processed
-    } finally assert(consumer.shutdown(30.seconds))
+    drained(consumer, name)
+    assert(consumer.errorCount == 1)
+    assert(HandlerSink.dlq.asScala.toList == List(("payload-2", "boom")))
+    assert(HandlerSink.seen.size() == 2) // others still processed
   }
 
   test("fail error policy stops the query (Spark-native default)") {
-    import spark.implicits._
-    val mem = MemoryStream[KinesisRecord](spark)
+    val name = "gc-fail"
+    fakeStream(name, 1)
+    push(name, shard0, 1)
     val saver = new InMemorySequenceSaver
-    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
+    val consumer = GraftConsumer(GraftOption().withStreamName(name))
       .sleepLimit(100.millis)
       .setSaver(saver)
       .errorPolicy(ErrorPolicy.Fail)
       .handle(_ => sys.error("always boom"))
-    val q = consumer.run(mem.toDF())
-    mem.addData(rec("shard-0", 1))
+    val q = consumer.start(spark, Map("clientName" -> s"$name-fake"))
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q.processAllAvailable()
     }
     assert(e.getMessage.contains("boom") || e.cause != null)
-    assert(saver.get("test-stream", "shard-0").isEmpty) // failed batch is not checkpointed
+    assert(saver.get(name, shard0).isEmpty) // failed batch is not checkpointed
     consumer.shutdown(30.seconds)
   }
 
@@ -420,77 +393,6 @@ class GraftConsumerSpec extends SparkSuite {
     assert(used.contains(user))
     assert(HandlerSink.seen.size == 3)
     assert(CountingCheckpointFileManager.creates.get > before, "the user's manager wrote no checkpoint file")
-  }
-
-  test("run(df) sorts inconsistently zero-padded sequences numerically") {
-    import spark.implicits._
-    HandlerSink.clear()
-    val mem = MemoryStream[KinesisRecord](spark)
-    val saver = new InMemorySequenceSaver
-    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
-      .sleepLimit(100.millis)
-      .setSaver(saver)
-      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
-    val q = consumer.run(mem.toDF())
-    try {
-      mem.addData(Seq("0101", "100", "0099").map(s => rec("shard-0", 0).copy(sequenceNumber = s)): _*)
-      q.processAllAvailable()
-      assert(HandlerSink.seen.asScala.toList.map(_._2) == List("0099", "100", "0101"))
-      assert(saver.get("test-stream", "shard-0").contains("0101"))
-    } finally assert(consumer.shutdown(30.seconds))
-  }
-
-  test("run(df) regroups shards split out of order across input partitions") {
-    import spark.implicits._
-    HandlerSink.clear()
-    // Three input partitions, filled round-robin: each shard's records
-    // are spread over all of them, none in sequence order.
-    val mem = MemoryStream[KinesisRecord](spark, 3)
-    val saver = new InMemorySequenceSaver
-    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
-      .sleepLimit(100.millis)
-      .setSaver(saver)
-      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
-    val recs = new scala.util.Random(3).shuffle(
-      for (s <- Seq("shard-0", "shard-1"); n <- 1 to 12) yield rec(s, n))
-    val q = consumer.run(mem.toDF())
-    try {
-      mem.addData(recs: _*)
-      q.processAllAvailable()
-      assert(HandlerSink.seen.size == recs.size)
-      val byShard = HandlerSink.seen.asScala.toList.groupBy(_._1)
-      for (s <- Seq("shard-0", "shard-1")) {
-        val want = (1 to 12).map(n => f"$n%09d").toList
-        assert(byShard(s).map(_._2) == want, s"order on $s")
-        assert(saver.get("test-stream", s).contains(want.last), s"checkpoint on $s")
-      }
-    } finally assert(consumer.shutdown(30.seconds))
-  }
-
-  test("run(df) over a kinesis-graft DataFrame handles each pushed record once, in order per shard") {
-    import graft.sources.kinesis._
-    HandlerSink.clear()
-    FakeKinesisService.createStream("gc-rundf", 2)
-    KinesisRegistry.clients.put("gc-rundf-fake", new FakeKinesisClient())
-    val shards = Seq("shardId-000000000000", "shardId-000000000001")
-    val pushed = for (i <- 1 to 7; sh <- shards)
-      yield sh -> FakeKinesisService.push("gc-rundf", sh, s"pk$i", s"$sh-$i".getBytes)
-    // an admission cap of 3 spreads each shard over several batches
-    val src = spark.readStream.format("kinesis-graft")
-      .option("streamName", "gc-rundf").option("clientName", "gc-rundf-fake")
-      .option("maxRecordsPerFetch", "3").load()
-    val consumer = GraftConsumer(GraftOption().withStreamName("gc-rundf"))
-      .sleepLimit(50.millis)
-      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
-    val q = consumer.run(src)
-    try {
-      q.processAllAvailable()
-      val seen = HandlerSink.seen.asScala.toList
-      assert(seen.size == pushed.size, s"a record was handled twice or not at all: $seen")
-      for (sh <- shards)
-        assert(seen.filter(_._1 == sh).map(_._2) == pushed.filter(_._1 == sh).map(_._2),
-          s"order on $sh")
-    } finally assert(consumer.shutdown(10.seconds))
   }
 
   test("start() runs the handler in the source's per-shard tasks: no shuffle, no sort, one job per batch") {
@@ -737,38 +639,41 @@ class GraftConsumerSpec extends SparkSuite {
   }
 
   test("run without handler fails like HandlerIsNil (kinesis.go:148-150)") {
-    import spark.implicits._
-    val mem = MemoryStream[KinesisRecord](spark)
-    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
-    val e = intercept[IllegalStateException] { consumer.run(mem.toDF()) }
-    assert(e.getMessage.contains("handler is nil"))
+    import graft.sources.kinesis._
+    val name = "gc-nil"
+    fakeStream(name, 1)
+    val active = spark.streams.active.length
+    val consumer = GraftConsumer(GraftOption().withStreamName(name)).setSaver(new InMemorySequenceSaver)
+    val e = intercept[IllegalStateException] { consumer.start(spark, Map("clientName" -> s"$name-fake")) }
+    assert(e.getMessage == "handler is nil")
+    assert(spark.streams.active.length == active, "a start without handler left a query running")
+    assert(!KinesisRegistry.savers.contains(s"graft-consumer-$name"),
+      "a start without handler left its saver registered")
   }
 
   test("resume from checkpoint: restart does not re-deliver committed batches") {
-    import spark.implicits._
     HandlerSink.clear()
+    val name = "gc-resume"
+    fakeStream(name, 1)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val saver = new InMemorySequenceSaver
-
-    val mem1 = MemoryStream[KinesisRecord](spark)
-    val c1 = GraftConsumer(GraftOption().withStreamName("test-stream"))
+    def consumer(saver: SequenceSaver) = GraftConsumer(GraftOption().withStreamName(name))
       .sleepLimit(100.millis).setSaver(saver).checkpointLocation(ckpt)
       .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
-    val q1 = c1.run(mem1.toDF())
-    mem1.addData(rec("shard-0", 1), rec("shard-0", 2))
+
+    (1 to 2).foreach(push(name, shard0, _))
+    val c1 = consumer(new InMemorySequenceSaver)
+    val q1 = c1.start(spark, Map("clientName" -> s"$name-fake"))
     q1.processAllAvailable()
     assert(c1.shutdown(30.seconds))
+    assert(c1.shutdown(5.seconds)) // a second shutdown of a stopped consumer
     val afterFirst = HandlerSink.seen.size()
     assert(afterFirst == 2)
 
-    // Same checkpoint + a source that would replay everything: the WAL
-    // must prevent double-delivery of batch 0.
-    val mem2 = MemoryStream[KinesisRecord](spark)
-    val c2 = GraftConsumer(GraftOption().withStreamName("test-stream"))
-      .sleepLimit(100.millis).setSaver(saver).checkpointLocation(ckpt)
-      .handle(r => HandlerSink.seen.add((r.shardId, r.sequenceNumber)))
-    mem2.addData(rec("shard-0", 1), rec("shard-0", 2)) // offsets 0..1 again
-    val q2 = c2.run(mem2.toDF())
+    // Same checkpoint + an empty saver, from which the source would
+    // replay the shard from TRIM_HORIZON: the WAL must prevent
+    // double-delivery of the committed batches.
+    val c2 = consumer(new InMemorySequenceSaver)
+    val q2 = c2.start(spark, Map("clientName" -> s"$name-fake"))
     q2.processAllAvailable()
     assert(c2.shutdown(30.seconds))
     assert(HandlerSink.seen.size() == afterFirst) // nothing re-delivered
